@@ -1,5 +1,6 @@
 package graft.algos
 
+import graft.bsp.Pin
 import graft.graph.TemporalGraph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -17,6 +18,7 @@ import org.apache.spark.sql.functions._
  * level descending. Cost is O(k·V) state and O(diameter) supersteps —
  * exact betweenness is inherently quadratic; use `k` to sample sources at
  * scale (the reference offers the same escape hatch).
+ * The result is pinned: the caller owns it (free with `Pin.release`).
  */
 object Betweenness {
 
@@ -24,12 +26,9 @@ object Betweenness {
       spark: SparkSession,
       g: TemporalGraph,
       k: Option[Int] = None,
-      normalized: Boolean = false): DataFrame = {
-    def trunc(df: DataFrame): DataFrame =
-      org.apache.spark.sql.GraftSqlInternals.resetStats(df.localCheckpoint(true))
-
-    val edges = g.simpleEdges.persist()
-    val nodes = g.nodes.persist()
+      normalized: Boolean = false): DataFrame = Pin.scope { pins =>
+    val edges = pins.persist(g.simpleEdges)
+    val nodes = pins.persist(g.nodes)
     val n = nodes.count()
 
     val sources = k match {
@@ -39,7 +38,7 @@ object Betweenness {
 
     // ---- forward phase: per-(source, node) BFS distance + path counts ----
     // state: (s, v, dist, sigma)
-    var state = trunc(
+    var state = pins.pin(
       sources.select(col("s"), col("s").as("v"), lit(0).as("dist"), lit(1.0).as("sigma")))
     var level = 0
     var frontierCount = state.count()
@@ -53,7 +52,7 @@ object Betweenness {
       val newly = expanded
         .join(state.select(col("s"), col("v")), Seq("s", "v"), "left_anti")
         .select(col("s"), col("v"), lit(level + 1).as("dist"), col("sig").as("sigma"))
-      state = trunc(state.unionByName(newly))
+      state = pins.replace(state, Pin.pin(state.unionByName(newly)))
       frontierCount = state.filter(col("dist") === level + 1).count()
       if (frontierCount > 0) maxLevel = level + 1
       level += 1
@@ -61,7 +60,7 @@ object Betweenness {
 
     // ---- backward phase: dependency accumulation by descending level ----
     // delta: (s, v, delta); betweenness accumulates level by level.
-    var delta = trunc(state.select(col("s"), col("v"), lit(0.0).as("delta")))
+    var delta = pins.pin(state.select(col("s"), col("v"), lit(0.0).as("delta")))
     var acc = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType(Seq(
@@ -75,8 +74,8 @@ object Betweenness {
         .select(col("s"), col("v").as("w"), col("sigma").as("sigma_w"), col("delta").as("delta_w"))
       // betweenness contribution of the popped level (w != s always here,
       // since dist >= 1)
-      acc = trunc(acc.unionByName(
-        w.groupBy(col("w").as("id")).agg(sum("delta_w").as("bc"))))
+      acc = pins.replace(acc, Pin.pin(acc.unionByName(
+        w.groupBy(col("w").as("id")).agg(sum("delta_w").as("bc")))))
       // predecessors: v --edge--> w with dist(v) = l − 1
       val contrib = w
         .join(edges, w("w") === edges("dst"))
@@ -86,22 +85,20 @@ object Betweenness {
           Seq("s", "v"))
         .groupBy(col("s"), col("v"))
         .agg(sum(col("sigma") / col("sigma_w") * (lit(1.0) + col("delta_w"))).as("dinc"))
-      delta = trunc(
+      delta = pins.replace(delta, Pin.pin(
         delta
           .join(contrib, Seq("s", "v"), "left")
-          .select(col("s"), col("v"), (col("delta") + coalesce(col("dinc"), lit(0.0))).as("delta")))
+          .select(col("s"), col("v"), (col("delta") + coalesce(col("dinc"), lit(0.0))).as("delta"))))
     }
 
     val summed = acc.groupBy("id").agg(sum("bc").as("bc"))
-    val result = nodes
-      .join(summed, Seq("id"), "left")
-      .select(
-        col("id"),
-        (coalesce(col("bc"), lit(0.0)) *
-          lit(if (normalized && n > 2) 1.0 / ((n - 1.0) * (n - 2.0)) else 1.0))
-          .as("betweenness"))
-    edges.unpersist(false)
-    nodes.unpersist(false)
-    result
+    Pin.pin(
+      nodes
+        .join(summed, Seq("id"), "left")
+        .select(
+          col("id"),
+          (coalesce(col("bc"), lit(0.0)) *
+            lit(if (normalized && n > 2) 1.0 / ((n - 1.0) * (n - 2.0)) else 1.0))
+            .as("betweenness")))
   }
 }

@@ -1,6 +1,6 @@
 package graft.algos
 
-import graft.bsp.SuperstepRunner
+import graft.bsp.{Pin, SuperstepRunner}
 import graft.bsp.SuperstepRunner.{RunConfig, Step}
 import graft.graph.TemporalGraph
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -86,16 +86,11 @@ object Louvain {
       spark: SparkSession,
       g: TemporalGraph,
       rounds: Int,
-      cfg: Config = Config()): DataFrame = {
+      cfg: Config = Config()): DataFrame = Pin.scope { pins =>
     require(rounds >= 1 && rounds <= 64, s"rounds=$rounds out of [1, 64]")
-    def truncate(df: DataFrame): DataFrame =
-      org.apache.spark.sql.GraftSqlInternals.resetStats(df.localCheckpoint(true))
-    val (pairs0, _, k0, m2) = level1(g, cfg, truncate)
-    if (m2 <= 0.0)
-      return g.nodes.select(col("id"), col("id").as("com"))
-    val (assign, _, _) =
-      localMoving(spark, pairs0, k0, m2, cfg.copy(maxLocalRounds = rounds), level = 0)
-    assign
+    val (pairs0, _, k0, m2) = level1(pins, g, cfg)
+    if (m2 <= 0.0) g.nodes.select(col("id"), col("id").as("com"))
+    else localMoving(spark, pins, pairs0, k0, m2, cfg.copy(maxLocalRounds = rounds), level = 0)._1
   }
 
   /** As [[run]], also returning every local-moving round's metrics across
@@ -103,26 +98,21 @@ object Louvain {
   def runWithMetrics(
       spark: SparkSession,
       g: TemporalGraph,
-      cfg: Config = Config()): (DataFrame, List[Map[String, Double]]) = {
+      cfg: Config = Config()): (DataFrame, List[Map[String, Double]]) = Pin.scope { pins =>
     var allMetrics = List.empty[Map[String, Double]]
-    def truncate(df: DataFrame): DataFrame =
-      org.apache.spark.sql.GraftSqlInternals.resetStats(df.localCheckpoint(true))
-
-    val (pairs0, selfw0, k0, m2) = level1(g, cfg, truncate)
+    val (pairs0, selfw0, k0, m2) = level1(pins, g, cfg)
     var pairs = pairs0
     var selfw = selfw0
     var k = k0
     // mapping original node -> current-level node
-    var mapping = truncate(g.nodes.select(col("id").as("orig"), col("id").as("node")))
-
-    if (m2 <= 0.0)
-      return (mapping.select(col("orig").as("id"), col("node").as("community")), allMetrics)
+    var mapping = pins.pin(g.nodes.select(col("id").as("orig"), col("id").as("node")))
 
     var level = 0
-    var outerMoved = true
+    var outerMoved = m2 > 0.0
     while (outerMoved && level < cfg.maxLevels) {
       level += 1
-      val (assign, movedAtLevel, levelMetrics) = localMoving(spark, pairs, k, m2, cfg, level)
+      val (assign, movedAtLevel, levelMetrics) = localMoving(spark, pins, pairs, k, m2, cfg, level)
+      pins.own(assign)
       allMetrics = allMetrics ++ levelMetrics
       outerMoved = movedAtLevel
       if (movedAtLevel) {
@@ -130,45 +120,45 @@ object Louvain {
         val canon = assign
           .groupBy(col("com"))
           .agg(min(col("id")).as("label"))
-        val relabeled = truncate(
+        val relabeled = pins.pin(
           assign.join(canon, Seq("com")).select(col("id"), col("label")))
 
-        mapping = truncate(
+        mapping = pins.replace(mapping, Pin.pin(
           mapping
             .join(relabeled, mapping("node") === relabeled("id"))
-            .select(col("orig"), col("label").as("node")))
+            .select(col("orig"), col("label").as("node"))))
 
         // --- aggregate (modularity.rs:344-388) ---
         val pa = pairs
           .join(relabeled.select(col("id").as("a"), col("label").as("ca")), Seq("a"))
           .join(relabeled.select(col("id").as("b"), col("label").as("cb")), Seq("b"))
           .select(col("ca"), col("cb"), col("w"))
-        val newPairs = truncate(
-          pa.filter(col("ca") =!= col("cb"))
-            .groupBy(
-              least(col("ca"), col("cb")).as("a"),
-              greatest(col("ca"), col("cb")).as("b"))
-            .agg(sum(col("w")).as("w")))
-        // new self-loop = 2·intra-pair weight + member self-loops
+        // new self-loop = 2·intra-pair weight + member self-loops (pinned
+        // first: it reads the old pairs through `pa`)
         val intra = pa
           .filter(col("ca") === col("cb"))
           .select(col("ca").as("id"), (col("w") * 2.0).as("sw"))
         val memberSelf = selfw
           .join(relabeled, Seq("id"))
           .select(col("label").as("id"), col("sw"))
-        val newSelf = truncate(
-          intra.unionByName(memberSelf).groupBy("id").agg(sum(col("sw")).as("sw")))
+        selfw = pins.replace(selfw, Pin.pin(
+          intra.unionByName(memberSelf).groupBy("id").agg(sum(col("sw")).as("sw"))))
+        pairs = pins.replace(pairs, Pin.pin(
+          pa.filter(col("ca") =!= col("cb"))
+            .groupBy(
+              least(col("ca"), col("cb")).as("a"),
+              greatest(col("ca"), col("cb")).as("b"))
+            .agg(sum(col("w")).as("w"))))
         // k carries over as k_com (NOT recomputed from the new adjacency)
-        val newK = truncate(
+        k = pins.replace(k, Pin.pin(
           k.join(relabeled, Seq("id"))
             .groupBy(col("label").as("id"))
-            .agg(sum(col("k")).as("k")))
-        pairs = newPairs
-        selfw = newSelf
-        k = newK
+            .agg(sum(col("k")).as("k"))))
+        pins.release(relabeled)
       }
+      pins.release(assign)
     }
-    (mapping.select(col("orig").as("id"), col("node").as("community")), allMetrics)
+    (pins.keep(mapping).select(col("orig").as("id"), col("node").as("community")), allMetrics)
   }
 
   /** Level-1 weighted undirected structure (modularity.rs:175-219):
@@ -176,9 +166,9 @@ object Louvain {
     * property value per directed edge (reference properties().get =
     * latest). Returns (pairs (a,b,w), selfw (id,sw), k (id,k), m2). */
   private def level1(
+      pins: Pin.Scope,
       g: TemporalGraph,
-      cfg: Config,
-      truncate: DataFrame => DataFrame): (DataFrame, DataFrame, DataFrame, Double) = {
+      cfg: Config): (DataFrame, DataFrame, DataFrame, Double) = {
     val directed = cfg.weightCol match {
       case None =>
         g.simpleEdges.withColumn("w", lit(1.0))
@@ -190,17 +180,17 @@ object Louvain {
     }
     // drop sub-tolerance weights like the reference's `.filter(w >= tol)`
     val dW = directed.filter(col("w") >= cfg.tol)
-    val pairs = truncate(
+    val pairs = pins.pin(
       dW.filter(col("src") =!= col("dst"))
         .groupBy(
           least(col("src"), col("dst")).as("a"),
           greatest(col("src"), col("dst")).as("b"))
         .agg(sum(col("w")).as("w")))
-    val selfw = truncate(
+    val selfw = pins.pin(
       dW.filter(col("src") === col("dst"))
         .groupBy(col("src").as("id"))
         .agg(sum(col("w")).as("sw")))
-    val k = truncate(
+    val k = pins.pin(
       pairs
         .select(col("a").as("id"), col("w"))
         .unionByName(pairs.select(col("b").as("id"), col("w")))
@@ -219,6 +209,7 @@ object Louvain {
     * @return (assignment (id, com), whether any node moved, round metrics) */
   private def localMoving(
       spark: SparkSession,
+      pins: Pin.Scope,
       pairs: DataFrame,
       k: DataFrame,
       m2: Double,
@@ -234,15 +225,14 @@ object Louvain {
       .select(col("a").as("other"), col("b").as("nbr"), col("w"))
       .unionByName(pairs.select(col("b").as("other"), col("a").as("nbr"), col("w")))
     val deg = bi.groupBy("other").agg(count(lit(1)).as("deg"))
-    val adj = bi
+    val adj = pins.persist(bi
       .join(deg, Seq("other"))
       .withColumn(
         "salt",
         pmod(xxhash64(col("nbr")), greatest(ceil(col("deg") / maxShard.toDouble), lit(1L)))
           .cast("int"))
       .groupBy("other", "salt")
-      .agg(collect_list(struct(col("nbr"), col("w"))).as("entries"))
-      .persist()
+      .agg(collect_list(struct(col("nbr"), col("w"))).as("entries")))
     val init = k.select(col("id"), col("id").as("com"), col("k"))
 
     var zeroStreak = 0
@@ -264,13 +254,12 @@ object Louvain {
       // measured ~20 stages/round, the fattest subtree duplicated). The
       // pin's blocks are freed in the evaluate callback below, after the
       // round's state is materialized.
-      val wcom = org.apache.spark.sql.GraftSqlInternals.resetStats(
+      val wcom = pins.pin(
         adj
           .join(state.select(col("id").as("other"), col("com").as("ocom")), Seq("other"))
           .select(col("ocom"), explode(col("entries")).as("e"))
           .groupBy(col("e.nbr").as("id"), col("ocom").as("cand"))
-          .agg(sum(col("e.w")).as("w_cand"))
-          .localCheckpoint(true))
+          .agg(sum(col("e.w")).as("w_cand")))
       // candidate deltas (modularity.rs move_delta; self-loop term cancels).
       // w_i→own-community is a per-node scalar over the SAME wcom group —
       // a max-over-window on the node key, instead of the r5 self-join of
@@ -325,13 +314,13 @@ object Louvain {
         next,
         { materialized =>
           // next is materialized — the round's pinned wcom can be freed now
-          org.apache.spark.sql.GraftSqlInternals.cachedRdd(wcom).foreach(_.unpersist(false))
+          pins.release(wcom)
           val moves = materialized.filter(col("moves")).count()
           if (moves > 0) { anyMove = true; zeroStreak = 0 } else zeroStreak += 1
           (zeroStreak >= 2, Map("moves" -> moves.toDouble, "level" -> level.toDouble))
         })
     }
-    adj.unpersist(false)
+    pins.release(adj)
     (result.state.select(col("id"), col("com")), anyMove, result.metrics)
   }
 

@@ -1,5 +1,6 @@
 package graft.algos
 
+import graft.bsp.Pin
 import graft.graph.TemporalGraph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -70,17 +71,18 @@ object Matching {
    * Locally-dominant (½-approximation) matching for general graphs.
    * @return (src, dst, weight) matched pairs, src < dst.
    */
-  def locallyDominant(spark: SparkSession, g: TemporalGraph, cfg: Config = Config()): DataFrame = {
+  def locallyDominant(
+      spark: SparkSession,
+      g: TemporalGraph,
+      cfg: Config = Config()): DataFrame = Pin.scope { pins =>
     // greedy pick order is invariant under a uniform weight shift, so the
     // cardinality lift cannot change this algorithm's output — reject the
     // flag rather than silently ignore it (the result IS always maximal)
     require(!cfg.maxCardinality, "maxCardinality requires the exact auctionBipartite path")
     val basePairs = weightedPairs(g, cfg)
-    val pairs = basePairs
     // state: one row per REMAINING edge (a, b, w); matched edges are
     // emitted into `matched` and their endpoints' edges dropped
-    var remaining =
-      org.apache.spark.sql.GraftSqlInternals.resetStats(pairs.localCheckpoint(true))
+    var remaining = pins.pin(basePairs)
     var matched = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       remaining.schema)
@@ -102,24 +104,24 @@ object Matching {
         .join(pick.select(col("id").as("b"), col("pick").as("bpick")), Seq("b"))
         .filter(col("apick") === col("b") && col("bpick") === col("a"))
         .select(col("a"), col("b"), col("w"))
-      val nm = org.apache.spark.sql.GraftSqlInternals.resetStats(newMatches.localCheckpoint(true))
+      val nm = pins.pin(newMatches)
       if (nm.isEmpty) done = true
       else {
-        matched = org.apache.spark.sql.GraftSqlInternals.resetStats(
-          matched.unionByName(nm).localCheckpoint(true))
+        matched = pins.replace(matched, Pin.pin(matched.unionByName(nm)))
         val taken = nm.select(col("a").as("id")).unionByName(nm.select(col("b").as("id")))
-        remaining = org.apache.spark.sql.GraftSqlInternals.resetStats(
+        remaining = pins.replace(remaining, Pin.pin(
           remaining
             .join(taken.withColumnRenamed("id", "a"), Seq("a"), "left_anti")
-            .join(taken.withColumnRenamed("id", "b"), Seq("b"), "left_anti")
-            .localCheckpoint(true))
+            .join(taken.withColumnRenamed("id", "b"), Seq("b"), "left_anti")))
         done = remaining.isEmpty
       }
+      pins.release(nm)
     }
     // report the ORIGINAL weights (the cardinality lift is internal)
-    matched.select("a", "b")
-      .join(basePairs, Seq("a", "b"))
-      .select(col("a").as("src"), col("b").as("dst"), col("w").as("weight"))
+    Pin.pin(
+      matched.select("a", "b")
+        .join(basePairs, Seq("a", "b"))
+        .select(col("a").as("src"), col("b").as("dst"), col("w").as("weight")))
   }
 
   /**
@@ -144,26 +146,20 @@ object Matching {
   def auctionBipartite(
       spark: SparkSession,
       edges: DataFrame, // (src, dst, w) person → object
-      cfg: Config = Config()): DataFrame = {
-    def truncate(df: DataFrame): DataFrame =
-      org.apache.spark.sql.GraftSqlInternals.resetStats(df.localCheckpoint(true))
-
+      cfg: Config = Config()): DataFrame = Pin.scope { pins =>
     val base = edges
       .groupBy(col("src").as("person"), col("dst").as("obj"))
       .agg(max(col("w").cast("double")).as("w"))
-    val lifted = truncate(lift(base, cfg)).persist()
+    val lifted = pins.pin(lift(base, cfg))
     val nPersons = lifted.select("person").distinct().count()
-    if (nPersons == 0) {
-      return lifted.select(col("person").as("src"), col("obj").as("dst"), col("w").as("weight"))
-    }
     val eps = 1.0 / (nPersons + 1.0)
 
     // prices per object; assignment (obj → person); unassigned person set
-    var prices = truncate(lifted.select(col("obj")).distinct().withColumn("price", lit(0.0)))
-    var assigned = truncate(
+    var prices = pins.pin(lifted.select(col("obj")).distinct().withColumn("price", lit(0.0)))
+    var assigned = pins.pin(
       prices.select(col("obj"), lit(null).cast(lifted.schema("person").dataType).as("person"))
         .limit(0))
-    var active = truncate(lifted.select("person").distinct()) // unassigned, not finalized
+    var active = pins.pin(lifted.select("person").distinct()) // unassigned, not finalized
     var rounds = 0
     while (!active.isEmpty && rounds < cfg.maxRounds) {
       rounds += 1
@@ -198,39 +194,38 @@ object Matching {
         .join(prices, Seq("obj"))
         .select(col("obj"), col("person"), (col("price") + col("incr")).as("bid"))
       // each object takes the highest bid (tie → smaller person id)
-      val winners = truncate(
+      val winners = pins.pin(
         bids
           .groupBy("obj")
           .agg(max(struct(col("bid").as("bid"), (-col("person")).as("np"))).as("wb"))
           .select(col("obj"), (-col("wb.np")).as("person"), col("wb.bid").as("price")))
       // displaced holders become active again; winners leave the pool;
-      // finalized-unmatched persons (picked null) leave permanently
+      // finalized-unmatched persons (picked null) leave permanently. The
+      // new active set reads the old prices and assignment (via bidders
+      // and displaced), so it is pinned before either is replaced.
       val displaced = assigned
         .join(winners.select("obj"), Seq("obj"), "left_semi")
         .select("person")
-      val newAssigned = truncate(
-        assigned
-          .join(winners.select("obj"), Seq("obj"), "left_anti")
-          .unionByName(winners.select(col("obj"), col("person"))))
-      val newPrices = truncate(
-        prices
-          .join(winners.select("obj"), Seq("obj"), "left_anti")
-          .unionByName(winners.select(col("obj"), col("price"))))
-      val newActive = truncate(
+      active = pins.replace(active, Pin.pin(
         active
           .join(bidders.select("person"), Seq("person"), "left_semi") // drop null-pickers
           .join(winners.select("person"), Seq("person"), "left_anti") // drop new holders
           .unionByName(displaced)
-          .distinct())
-      prices = newPrices
-      assigned = newAssigned
-      active = newActive
+          .distinct()))
+      assigned = pins.replace(assigned, Pin.pin(
+        assigned
+          .join(winners.select("obj"), Seq("obj"), "left_anti")
+          .unionByName(winners.select(col("obj"), col("person")))))
+      prices = pins.replace(prices, Pin.pin(
+        prices
+          .join(winners.select("obj"), Seq("obj"), "left_anti")
+          .unionByName(winners.select(col("obj"), col("price")))))
+      pins.release(winners)
     }
     // report the ORIGINAL weights (the cardinality lift is internal)
-    val out = assigned
-      .join(base, Seq("person", "obj"))
-      .select(col("person").as("src"), col("obj").as("dst"), col("w").as("weight"))
-    lifted.unpersist(false)
-    out
+    Pin.pin(
+      assigned
+        .join(base, Seq("person", "obj"))
+        .select(col("person").as("src"), col("obj").as("dst"), col("w").as("weight")))
   }
 }

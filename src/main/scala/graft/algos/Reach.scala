@@ -1,6 +1,6 @@
 package graft.algos
 
-import graft.bsp.SuperstepRunner
+import graft.bsp.{Pin, SuperstepRunner}
 import graft.bsp.SuperstepRunner.{RunConfig, Step}
 import graft.graph.TemporalGraph
 import graft.ml.GraphLearn
@@ -67,13 +67,15 @@ object Reach {
     // [[runWide]]) — the public sparse (id, j, rho) contract is restored by
     // exploding the final state; absent registers are the r_j = 0 columns.
     val wide = runWide(spark, g, init, iters, s"hyperball-$seed", _ => ())
-    wide
-      .select(
-        col("id"),
-        explode(array((0 until M).map(j =>
-          struct(lit(j.toLong).as("j"), col(s"r$j").as("rho"))): _*)).as("e"))
-      .select(col("id"), col("e.j").as("j"), col("e.rho").as("rho"))
-      .filter(col("rho") > 0L)
+    try
+      Pin.pin(wide
+        .select(
+          col("id"),
+          explode(array((0 until M).map(j =>
+            struct(lit(j.toLong).as("j"), col(s"r$j").as("rho"))): _*)).as("e"))
+        .select(col("id"), col("e.j").as("j"), col("e.rho").as("rho"))
+        .filter(col("rho") > 0L))
+    finally Pin.release(wide)
   }
 
   /**
@@ -107,8 +109,8 @@ object Reach {
       col("id") +: (0 until M).map(j =>
         when(col("j") === j, col("rho")).otherwise(lit(0L)).as(s"r$j")): _*)
     val regCols = (0 until M).map(j => col(s"r$j"))
-    val e = g.simpleEdges.repartition(col("dst")).persist()
-    try {
+    Pin.scope { pins =>
+      val e = pins.persist(g.simpleEdges.repartition(col("dst")))
       SuperstepRunner.run(
         spark, initWide, RunConfig(maxSteps = iters, runId = runId)) {
         (state, _) =>
@@ -122,7 +124,7 @@ object Reach {
             .agg(maxes.head, maxes.tail: _*)
           Step(next, { m => onStep(m); (false, Map.empty) })
       }.state
-    } finally e.unpersist(false)
+    }
   }
 
   /**
@@ -150,23 +152,20 @@ object Reach {
       spark: SparkSession,
       g: TemporalGraph,
       iters: Int,
-      seed: Long = 42L): Vector[DataFrame] = {
+      seed: Long = 42L): Vector[DataFrame] = Pin.scope { pins =>
     require(iters >= 1 && iters <= 64, s"iters=$iters out of [1, 64]")
-    def pin(df: DataFrame): DataFrame =
-      org.apache.spark.sql.GraftSqlInternals.resetStats(df.localCheckpoint(true))
     val init = registers(spark, g, iters = 0, seed = seed)
     val ests = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    ests += pin(estimateRaw(init))
+    ests += pins.pin(estimateRaw(init))
     // wide loop ([[runWide]]): the per-step estimate is a pure row
     // expression over the already-materialized wide state — the r5 sparse
     // layout paid an extra (id, j) → id exchange per step for it
     val finalState = runWide(
       spark, g, init, iters, s"hyperball-series-$seed",
-      m => ests += pin(estimateRawWide(m)))
-    // only the pinned estimate frames escape — the run's final register
-    // state (localCheckpoint blocks) would otherwise stay cached until GC
-    org.apache.spark.sql.GraftSqlInternals.cachedRdd(finalState).foreach(_.unpersist(false))
-    ests.toVector
+      m => ests += pins.pin(estimateRawWide(m)))
+    // only the pinned estimate frames escape
+    Pin.release(finalState)
+    ests.map(pins.keep).toVector
   }
 
   /**
@@ -201,16 +200,13 @@ object Reach {
     val sumDist = deltas.zipWithIndex.map { case (d, i) => d * (i + 1).toDouble }.reduce(_ + _)
     val closeness =
       when(sumDist > 0.0, (col(s"b$iters") - 1.0) / sumDist).otherwise(lit(0.0))
-    val out = org.apache.spark.sql.GraftSqlInternals.resetStats(
-      wide.select(
+    try
+      Pin.pin(wide.select(
         col("id"),
         round(col(s"b$iters"), 6).as("ball_est"),
         round(harmonic, 6).as("harmonic_est"),
-        round(closeness, 6).as("closeness_est"))
-        .localCheckpoint(true))
-    series.foreach(f =>
-      org.apache.spark.sql.GraftSqlInternals.cachedRdd(f).foreach(_.unpersist(false)))
-    out
+        round(closeness, 6).as("closeness_est")))
+    finally Pin.release(series: _*)
   }
 
   /**
@@ -231,9 +227,9 @@ object Reach {
       seed: Long = 42L): DataFrame = {
     require(q > 0.0 && q <= 1.0, s"q=$q out of (0, 1]")
     val series = ballSeries(spark, g, iters, seed)
-    val ns = series.map(f => f.agg(sum("ball_est")).first().getDouble(0))
-    series.foreach(f =>
-      org.apache.spark.sql.GraftSqlInternals.cachedRdd(f).foreach(_.unpersist(false)))
+    val ns =
+      try series.map(f => f.agg(sum("ball_est")).first().getDouble(0))
+      finally Pin.release(series: _*)
     val target = q * ns.last
     val eff = ns.indexWhere(_ >= target)
     import spark.implicits._

@@ -1,6 +1,6 @@
 package graft.algos
 
-import graft.bsp.SuperstepRunner
+import graft.bsp.{Pin, SuperstepRunner}
 import graft.bsp.SuperstepRunner.{RunConfig, Step}
 import graft.graph.TemporalGraph
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -41,18 +41,17 @@ object Scc {
       checkpointDir: Option[String] = None)
 
   /** @return (id, label) with label = min node id of the SCC. */
-  def run(spark: SparkSession, g: TemporalGraph, cfg: Config = Config()): DataFrame = {
+  def run(spark: SparkSession, g: TemporalGraph, cfg: Config = Config()): DataFrame = Pin.scope { pins =>
     // hash-partitioned on src and persisted: the color fixpoint joins this
     // (static within the round) frame on src EVERY superstep — without the
     // explicit repartition each superstep would pay a full exchange of the
     // big edge table (the state side still shuffles, but it is the small,
     // narrow side)
-    var edges = g.simpleEdges
+    var edges = pins.persist(g.simpleEdges
       .filter(col("src") =!= col("dst"))
-      .repartition(col("src"))
-      .persist()
+      .repartition(col("src")))
     edges.count()
-    var nodes = g.nodes.persist()
+    var nodes = pins.persist(g.nodes)
     var remaining = nodes.count()
 
     var assigned: DataFrame =
@@ -65,7 +64,7 @@ object Scc {
       // -- 1. forward max-color fixpoint over the remaining subgraph --
       val colorInit = nodes.select(col("id"), col("id").as("c"))
       val e = edges
-      val colorRes = SuperstepRunner.run(
+      val colorState = pins.own(SuperstepRunner.run(
         spark,
         colorInit,
         RunConfig(cfg.maxIterPerPhase, cfg.checkpointDir, 25, runId = s"scc-color-$round")) {
@@ -86,12 +85,12 @@ object Scc {
               val changes = m.filter(col("changed")).count()
               (changes == 0, Map("changes" -> changes.toDouble))
             })
-      }
-      val colored = colorRes.state.select("id", "c").persist()
+      }.state)
+      val colored = pins.persist(colorState.select("id", "c"))
       colored.count()
       // the fixpoint's final superstep state is superseded by `colored` —
       // free its checkpoint blocks now rather than waiting on the cleaner
-      org.apache.spark.sql.GraftSqlInternals.cachedRdd(colorRes.state).foreach(_.unpersist(false))
+      pins.release(colorState)
 
       // -- 2. multi-source backward reach from every root, within color --
       // reach state: (id, c, hit) — hit = can reach the root of its color
@@ -99,15 +98,14 @@ object Scc {
       // edges annotated with both endpoint colors once per round;
       // hash-partitioned on dst — the backward-reach fixpoint joins this
       // static frame on dst every superstep (same rationale as `edges`)
-      val ec = e
+      val ec = pins.persist(e
         .join(colored.select(col("id").as("src"), col("c").as("sc")), Seq("src"))
         .join(colored.select(col("id").as("dst"), col("c").as("dc")), Seq("dst"))
         .filter(col("sc") === col("dc"))
         .select("src", "dst")
-        .repartition(col("dst"))
-        .persist()
+        .repartition(col("dst")))
       ec.count()
-      val reached = SuperstepRunner.run(
+      val reached = pins.own(SuperstepRunner.run(
         spark,
         reachInit,
         RunConfig(cfg.maxIterPerPhase, cfg.checkpointDir, 25, runId = s"scc-reach-$round")) {
@@ -132,51 +130,37 @@ object Scc {
               val changes = m.filter(col("changed")).count()
               (changes == 0, Map("changes" -> changes.toDouble))
             })
-      }.state
+      }.state)
 
-      val newly = reached.filter(col("hit")).select(col("id"), col("c").as("root")).persist()
+      val newly = pins.persist(reached.filter(col("hit")).select(col("id"), col("c").as("root")))
       val nNew = newly.count()
-      org.apache.spark.sql.GraftSqlInternals.cachedRdd(reached).foreach(_.unpersist(false))
+      pins.release(reached)
       // localCheckpoint: truncates the O(rounds) union lineage AND lets the
-      // previous round's accumulator blocks be freed now — the old
-      // persist-the-growing-union chain kept every round's overlapping copy
-      // cached for the whole run (localCheckpoint blocks aren't in the
-      // CacheManager, so the eager free goes through cachedRdd)
-      val prevAssigned = assigned
-      assigned = assigned.unionByName(newly).localCheckpoint(true)
-      org.apache.spark.sql.GraftSqlInternals.cachedRdd(prevAssigned).foreach(_.unpersist(false))
+      // previous round's accumulator blocks be freed now
+      assigned = pins.replace(assigned, assigned.unionByName(newly).localCheckpoint(true))
 
       // shrink the working graph
       val prevNodes = nodes
       val prevEdges = edges
-      nodes = nodes.join(newly.select("id"), Seq("id"), "left_anti").persist()
+      nodes = pins.persist(nodes.join(newly.select("id"), Seq("id"), "left_anti"))
       remaining = nodes.count()
-      edges = edges
+      edges = pins.persist(edges
         .join(nodes.select(col("id").as("src")), Seq("src"), "left_semi")
         .join(nodes.select(col("id").as("dst")), Seq("dst"), "left_semi")
         .select("src", "dst")
-        .repartition(col("src"))
-        .persist()
+        .repartition(col("src")))
       edges.count()
-      prevNodes.unpersist(false)
-      prevEdges.unpersist(false)
-      colored.unpersist(false)
-      ec.unpersist(false)
-      newly.unpersist(false)
+      pins.release(prevNodes, prevEdges, colored, ec, newly)
       require(nNew > 0 || remaining == 0, "SCC round made no progress")
     }
 
     // canonicalize: label = min node id per component (roots are the max).
     // The output is materialized so every internal cache (including the
-    // accumulated `assigned` checkpoint) can be freed here — after this
-    // call the only cached blocks left are the (|V|-row) result itself.
+    // accumulated `assigned` checkpoint) is freed when the scope ends —
+    // after this call the only cached blocks left are the (|V|-row) result.
     val canon = assigned
       .groupBy("root")
       .agg(min("id").as("label"))
-    val out = assigned.join(canon, Seq("root")).select("id", "label").localCheckpoint(true)
-    org.apache.spark.sql.GraftSqlInternals.cachedRdd(assigned).foreach(_.unpersist(false))
-    edges.unpersist(false)
-    nodes.unpersist(false)
-    out
+    assigned.join(canon, Seq("root")).select("id", "label").localCheckpoint(true)
   }
 }

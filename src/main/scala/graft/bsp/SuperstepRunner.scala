@@ -23,10 +23,9 @@ import scala.util.Try
  * (rows + order-independent checksum) and metrics; [[resume]] restores the
  * latest committed superstep so any algorithm restarts mid-iteration.
  *
- * Plan-growth control: each superstep's state is persisted and the previous
- * one unpersisted; every `truncateEvery` steps (or on checkpoint commits)
- * lineage is truncated so driver planning stays O(1) across hundreds of
- * iterations.
+ * Plan-growth control: each superstep's state is pinned ([[Pin]]) and the
+ * previous one released, so lineage and driver planning stay O(1) across
+ * hundreds of iterations; on a throw every state the run pinned is freed.
  */
 object SuperstepRunner {
 
@@ -52,30 +51,20 @@ object SuperstepRunner {
    * @param mkStep (state, superstep) => Step, superstep starting at 1
    */
   def run(spark: SparkSession, init: DataFrame, cfg: RunConfig)(
-      mkStep: (DataFrame, Int) => Step): RunResult = {
+      mkStep: (DataFrame, Int) => Step): RunResult = Pin.scope { pins =>
 
     val resumed = cfg.checkpointDir.flatMap(d => resume(spark, d, Some(cfg.runId)))
-    // Every superstep's state is eagerly local-checkpointed: this both
+    // Every superstep's state is pinned ([[Pin.pin]]): this both
     // materializes it for the evaluator AND truncates the logical plan to a
     // LogicalRDD. Iterative plans that reference the previous state more
     // than once (message join + diff join) would otherwise *double* in size
     // per superstep — exponential analysis cost and a driver OOM by ~30
-    // supersteps. The extra rewrap through GraftSqlInternals drops the
-    // checkpoint's inherited cost statistics, which otherwise also double in
-    // bit-length per superstep (see GraftSqlInternals docs). Dropped states
-    // are freed by the ContextCleaner once the reference goes out of scope.
-    // Eager local checkpoint: measured faster than lazy (lazy folds the
-    // whole superstep pipeline into the evaluator job and loses AQE's
-    // per-stage planning of the materialization; eager costs one extra tiny
-    // cache-read job but keeps both jobs optimally planned). resetStats
-    // keeps the checkpoint's output partitioning (state stays
-    // hash-partitioned on its key across supersteps — no re-exchange) while
-    // dropping the inherited statistics.
-    def truncate(df: DataFrame): DataFrame =
-      org.apache.spark.sql.GraftSqlInternals.resetStats(df.localCheckpoint(true))
+    // supersteps. The pin keeps the state hash-partitioned on its key across
+    // supersteps (no re-exchange) while dropping the inherited statistics.
+    // Only the returned state outlives the run, also when a step throws.
     var (state, startStep) = resumed match {
-      case Some((df, k)) => (truncate(df), k)
-      case None          => (truncate(init), 0)
+      case Some((df, k)) => (pins.pin(df), k)
+      case None          => (pins.pin(init), 0)
     }
 
     var step = startStep
@@ -85,26 +74,19 @@ object SuperstepRunner {
     while (!converged && step < cfg.maxSteps) {
       step += 1
       val t0 = System.nanoTime()
-      val prevRdd = org.apache.spark.sql.GraftSqlInternals.cachedRdd(state)
       val s = mkStep(state, step)
       // plan-audit hook (no-op unless GRAFT_EXPLAIN_DIR is set): dump ONE
       // representative superstep plan per run — step 2 shows the steady
       // state (step 1 plans can differ: init partitioning, warm-up paths)
       if (step == math.min(2, cfg.maxSteps)) explainHook(s"${cfg.runId}_superstep", s.next)
-      val next = truncate(s.next)
-      // `next` is fully materialized — the previous state's cached blocks
-      // can be freed NOW instead of waiting for GC + ContextCleaner (long
-      // runs otherwise accumulate every superstep's cache and stall on
-      // memory pressure).
-      prevRdd.foreach(_.unpersist(false))
+      // `next` is fully materialized — the previous state's blocks are
+      // freed NOW (long runs otherwise accumulate every superstep's cache
+      // and stall on memory pressure)
+      val next = pins.replace(state, Pin.pin(s.next))
       val (done, metrics) = s.evaluate(next) // runs the per-step actions
       val wallMs = (System.nanoTime() - t0) / 1e6
       converged = done
       allMetrics ::= (metrics + ("wallMs" -> wallMs))
-      if (sys.env.contains("GRAFT_VERBOSE"))
-        System.err.println(
-          f"[superstep] ${cfg.runId} step=$step wallMs=$wallMs%.0f parts=${next.rdd.getNumPartitions} " +
-            metrics.map { case (k, v) => s"$k=$v" }.mkString(" "))
 
       val shouldCommit = cfg.checkpointDir.isDefined &&
         (converged || cfg.checkpointEvery > 0 && step % cfg.checkpointEvery == 0)
@@ -114,11 +96,11 @@ object SuperstepRunner {
           val committed =
             commit(spark, cfg.checkpointDir.get, cfg.runId, step, next, metrics, wallMs, converged)
           // the committed parquet replaces the in-memory copy
-          org.apache.spark.sql.GraftSqlInternals.cachedRdd(next).foreach(_.unpersist(false))
+          pins.release(next)
           committed
         } else next
     }
-    RunResult(state, step, converged, allMetrics.reverse)
+    RunResult(pins.keep(state), step, converged, allMetrics.reverse)
   }
 
   /** Plan-audit hook shared by the runner and hand-rolled loops: when

@@ -101,7 +101,7 @@ object NullModels {
     // input plan each time (the ADVICE r5 recompute item). Values are
     // unchanged; blocks are freed by the ContextCleaner when the
     // result's lineage is dropped.
-    val df0 = org.apache.spark.sql.GraftSqlInternals.resetStats(df.localCheckpoint(true))
+    val df0 = graft.bsp.Pin.pin(df)
     // two-stage hash: hmix's seed is ADDITIVE, so a bare hmix(seed, key)
     // ordering is a mod-P rotation of hmix(0, key)'s — nearly the same
     // permutation for nearby seeds. Feeding the seeded hash through a

@@ -319,7 +319,7 @@ object CorpusOps {
     // (measured 4× the input cost at sf0.1). Values are unchanged; the
     // pin's blocks are freed by the ContextCleaner when the result's
     // lineage is dropped.
-    val df0 = org.apache.spark.sql.GraftSqlInternals.resetStats(df.localCheckpoint(true))
+    val df0 = graft.bsp.Pin.pin(df)
     val n = df0.count()
     if (n == 0L)
       return df.withColumn("rank", lit(0L)).withColumn("bucket", lit(0L)).limit(0)

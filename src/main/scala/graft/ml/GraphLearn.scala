@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.bsp.SuperstepRunner
+import graft.bsp.{Pin, SuperstepRunner}
 import graft.graph.TemporalGraph
 
 /**
@@ -263,16 +263,14 @@ object GraphLearn {
       seed: Long = 42L): (DataFrame, SuperstepRunner.RunResult) = {
     require(length >= 1 && length <= 64, s"length=$length out of [1, 64]")
     require(nWalks >= 1 && nWalks <= 1024, s"nWalks=$nWalks out of [1, 1024]")
-    val adj = g.adjacencyOut
-      .repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Pin.scope { pins =>
+      val adj = pins.persist(g.adjacencyOut.repartition(col("src")))
       val init = g.nodes
         .select(col("id").as("start"))
         .withColumn("walk", explode(array((0 until nWalks).map(i => lit(i.toLong)): _*)))
         .withColumn("node", col("start"))
 
-      walkLoop(init, length, "walks") { (state, k) =>
+      walkLoop(pins, init, length, "walks") { (state, k) =>
         val frontier = state.select(col("start"), col("walk"), col("node").as("cur"))
         val pick = transform(
           col("dsts"),
@@ -286,14 +284,8 @@ object GraphLearn {
           .agg(min(col("m")).as("m"))
           .select(col("start"), col("walk"), col("m.n").as("node"))
       }
-    } finally adj.unpersist(false)
+    }
   }
-
-  /** Eager local checkpoint with inherited statistics dropped — pins a
-    * per-step frontier's own cache blocks and truncates lineage (the
-    * SuperstepRunner truncate, inlined for the hand-rolled walk loop). */
-  private def pinned(df: DataFrame): DataFrame =
-    org.apache.spark.sql.GraftSqlInternals.resetStats(df.localCheckpoint(true))
 
   /**
    * Hand-rolled frontier loop shared by the walk families. Each step's
@@ -305,15 +297,17 @@ object GraphLearn {
    * (every step's frontier stays cached until the one end-of-run corpus
    * assembly, O(length·walkers) total), per-step traffic halves, and the
    * loop still stops early when the frontier empties. Lineage is truncated
-   * by the per-step pin exactly as the runner did.
+   * by the per-step pin exactly as the runner did. Frontiers are pinned
+   * through the caller's scope, so they are freed when it ends; only the
+   * returned corpus is handed back.
    *
    * @param mkStep (pinned state, step k ≥ 1) => next-frontier plan
    * @return (corpus = union of per-step frontiers with their `step`,
    *         RunResult with the final frontier + per-step live/wallMs)
    */
-  private def walkLoop(init: DataFrame, length: Int, name: String = "walks")(
+  private def walkLoop(pins: Pin.Scope, init: DataFrame, length: Int, name: String)(
       mkStep: (DataFrame, Int) => DataFrame): (DataFrame, SuperstepRunner.RunResult) = {
-    var state = pinned(init)
+    var state = pins.pin(init)
     val frames = scala.collection.mutable.ArrayBuffer[(Long, DataFrame)](0L -> state)
     var metrics = List.empty[Map[String, Double]]
     var step = 0
@@ -324,18 +318,18 @@ object GraphLearn {
       val stepPlan = mkStep(state, step)
       if (step == math.min(2, length))
         SuperstepRunner.explainHook(s"${name}_superstep", stepPlan)
-      state = pinned(stepPlan)
+      state = pins.pin(stepPlan)
       frames += step.toLong -> state
       val live = state.count()
       done = live == 0L
       metrics ::= Map("live" -> live.toDouble, "wallMs" -> (System.nanoTime() - t0) / 1e6)
     }
     val res = SuperstepRunner.RunResult(state, step, done, metrics.reverse)
-    // ONE full-corpus pin; then free every per-step frontier (incl. the
-    // final state) — nothing stays cached but the returned frame. Block
-    // columns: (start, walk, step, node[, ts]) — walker-internal columns
-    // (node2vec's prev) stay out of the corpus.
-    val corpus = pinned(
+    // ONE full-corpus pin; the scope then frees every per-step frontier
+    // (incl. the final state) — nothing stays cached but the returned
+    // frame. Block columns: (start, walk, step, node[, ts]) —
+    // walker-internal columns (node2vec's prev) stay out of the corpus.
+    val corpus = Pin.pin(
       frames
         .map { case (k, f) =>
           val cols = Seq(col("start"), col("walk"), lit(k).as("step")) ++
@@ -343,9 +337,6 @@ object GraphLearn {
           f.select(cols: _*)
         }
         .reduce(_.unionByName(_)))
-    frames.foreach { case (_, f) =>
-      org.apache.spark.sql.GraftSqlInternals.cachedRdd(f).foreach(_.unpersist(false))
-    }
     (corpus, res)
   }
 
@@ -388,15 +379,12 @@ object GraphLearn {
     Seq("wReturn" -> wReturn, "wInner" -> wInner, "wOuter" -> wOuter).foreach {
       case (n, w) => require(w >= 1 && w <= 16, s"$n=$w out of [1, 16]")
     }
-    val adj = g.adjacencyOut
-      .repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nbrs = g.undirectedPairs
-      .filter(col("node") =!= col("nbr"))
-      .groupBy("node")
-      .agg(sort_array(collect_list(col("nbr"))).as("pn"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Pin.scope { pins =>
+      val adj = pins.persist(g.adjacencyOut.repartition(col("src")))
+      val nbrs = pins.persist(g.undirectedPairs
+        .filter(col("node") =!= col("nbr"))
+        .groupBy("node")
+        .agg(sort_array(collect_list(col("nbr"))).as("pn")))
       val emptyArr = array().cast("array<bigint>")
       // frontier-only state: (start, walk, node, prev) — one row per live
       // walker; each pinned frontier doubles as the corpus block (walkLoop)
@@ -406,7 +394,7 @@ object GraphLearn {
         .withColumn("node", col("start"))
         .withColumn("prev", lit(null).cast("long"))
 
-      walkLoop(init, length, "n2v") { (state, k) =>
+      walkLoop(pins, init, length, "n2v") { (state, k) =>
         val frontier = state.select(col("start"), col("walk"), col("node").as("cur"), col("prev"))
         // step 1 has NO prev (uniform step): skip the classification join
         // entirely — an all-NULL join key never matches but hashes every
@@ -445,9 +433,6 @@ object GraphLearn {
             col("start"), col("walk"),
             col("m.n").as("node"), col("cur").as("prev"))
       }._1
-    } finally {
-      adj.unpersist(false)
-      nbrs.unpersist(false)
     }
   }
 
@@ -482,18 +467,17 @@ object GraphLearn {
     // adjacencyOut sharding contract, entries carry the event time
     val ev = g.edges.select(col("src"), col("dst"), col("ts")).distinct()
     val deg = ev.groupBy("src").agg(count(lit(1)).as("deg"))
-    val adj = ev
-      .join(deg, Seq("src"))
-      .withColumn(
-        "salt",
-        pmod(xxhash64(col("dst"), col("ts")),
-          greatest(ceil(col("deg") / maxShard.toDouble), lit(1L))).cast("int"))
-      .groupBy("src", "salt")
-      .agg(collect_list(struct(col("ts"), col("dst"))).as("evs"))
-      .repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    Pin.scope { pins =>
+      val adj = pins.persist(ev
+        .join(deg, Seq("src"))
+        .withColumn(
+          "salt",
+          pmod(xxhash64(col("dst"), col("ts")),
+            greatest(ceil(col("deg") / maxShard.toDouble), lit(1L))).cast("int"))
+        .groupBy("src", "salt")
+        .agg(collect_list(struct(col("ts"), col("dst"))).as("evs"))
+        .repartition(col("src")))
 
-    try {
       // frontier-only state: (start, walk, node, ts) — each pinned
       // frontier doubles as the corpus block (walkLoop)
       val init = g.nodes
@@ -502,7 +486,7 @@ object GraphLearn {
         .withColumn("node", col("start"))
         .withColumn("ts", lit(startTs))
 
-      walkLoop(init, length, "twalks") { (state, k) =>
+      walkLoop(pins, init, length, "twalks") { (state, k) =>
         val frontier = state
           .select(col("start"), col("walk"), col("node").as("cur"), col("ts").as("t"))
         val pick = transform(
@@ -522,7 +506,7 @@ object GraphLearn {
             col("start"), col("walk"),
             col("m.n").as("node"), col("m.ets").as("ts"))
       }._1
-    } finally adj.unpersist(false)
+    }
   }
 
   /**

@@ -157,10 +157,8 @@ object SemDedup {
     // Pinned (eager local checkpoint): the assigned frame feeds BOTH sides
     // of the within-cell pair join and the final labelling — the r5 shape
     // recomputed the broadcast-pivot assignment argmax up to three times.
-    val a = org.apache.spark.sql.GraftSqlInternals.resetStats(
-      assignedFrame
-        .withColumn("cell_n", count(lit(1)).over(Window.partitionBy("cell")))
-        .localCheckpoint(true))
+    val a = graft.bsp.Pin.pin(
+      assignedFrame.withColumn("cell_n", count(lit(1)).over(Window.partitionBy("cell"))))
     val paired = a.filter(col("cell_n") <= maxCell)
     val l = paired.select(col("cell"), col("id").as("pa"), col("v").as("va"))
     val r = paired.select(col("cell"), col("id").as("pb"), col("v").as("vb"))

@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.bsp.Pin
 import graft.data.TranscriptGen
 import graft.graph.{EdgeBuilder, TemporalGraph}
 
@@ -126,7 +127,7 @@ object Explain {
         .groupBy("id")
         .agg(sum("wv").as("msum"))
         .explain("formatted")
-      adj.unpersist(false)
+      Pin.release(adj)
     }
 
     // expected shape per node2vec step (the walk result itself is a
@@ -172,7 +173,7 @@ object Explain {
         .groupBy("start", "walk", "cur")
         .agg(min(col("m")).as("m"))
         .explain("formatted")
-      adj.unpersist(false); nbrs.unpersist(false)
+      Pin.release(adj, nbrs)
     }
 
     // expected shape: ONE exchange — the register frame re-keys from

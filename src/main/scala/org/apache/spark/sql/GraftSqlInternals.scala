@@ -66,13 +66,18 @@ object GraftSqlInternals {
   def expression(c: Column): catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)
 
-  /** The materialized RDD behind a (checkpointed) LogicalRDD plan, if any —
-    * used by the superstep runner to unpersist the previous superstep's
-    * state eagerly. Waiting for the ContextCleaner instead lets cached
-    * superstep states pile up and throttles long runs with GC pressure. */
-  def cachedRdd(df: DataFrame): Option[RDD[_]] =
-    df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => Some(l.rdd)
+  /** The materialized RDD behind a (checkpointed) LogicalRDD plan, or
+    * behind a column projection of one, if any — used by `graft.bsp.Pin`
+    * to free a pinned frame eagerly. Waiting for the ContextCleaner instead
+    * lets cached superstep states pile up and throttles long runs with GC
+    * pressure. */
+  def cachedRdd(df: DataFrame): Option[RDD[_]] = {
+    @scala.annotation.tailrec
+    def leaf(p: catalyst.plans.logical.LogicalPlan): Option[RDD[_]] = p match {
+      case l: execution.LogicalRDD => Some(l.rdd)
+      case catalyst.plans.logical.Project(_, child) => leaf(child)
       case _ => None
     }
+    leaf(df.queryExecution.analyzed)
+  }
 }

@@ -2,7 +2,8 @@
 """Compare two graft.Verify dump dirs (parquet per query): order-insensitive
 row-multiset + schema equality per query, via DuckDB. Usage:
   python3 tools/compare_dumps.py BASE_DIR NEW_DIR [query ...]
-Prints one line per differing query; exit 0 iff all equal."""
+Prints one line per differing query; exit 0 iff all equal. A query filter
+that names a query absent from BASE_DIR, or matches none, exits 2."""
 import sys, os
 import duckdb
 
@@ -10,6 +11,10 @@ base, new = sys.argv[1], sys.argv[2]
 only = set(sys.argv[3:])
 qs = sorted(d for d in os.listdir(base)
             if os.path.isdir(os.path.join(base, d)) and (not only or d in only))
+unknown = sorted(only - set(qs))
+if unknown or not qs:
+    print(f"unknown queries: {' '.join(unknown)}" if unknown else "no queries to check")
+    sys.exit(2)
 con = duckdb.connect()
 bad = 0
 for q in qs:

@@ -3,11 +3,13 @@
 
 Mirrors the driver's check: each table <sf>/<name>.parquet is registered as a
 view named <name>; each query's oracle SQL runs in DuckDB and is compared to
-the Spark dump (schema by sorted column name, rows as an order-insensitive
-multiset with 1e-9 tolerance via the same round-trip the driver hashes).
+the Spark dump: the oracle's full column set must equal the dump's (compared
+by sorted column name), and rows must be equal as an order-insensitive
+multiset (exact `EXCEPT ALL` both ways: no tolerance, no rounding).
 
 Usage: python3 tools/oracle_replay.py SF_DIR DUMP_DIR [query ...]
-Exit 0 iff every checked query matches.
+Exit 0 iff every checked query matches; a query filter that names an unknown
+query, or matches none, exits 2.
 """
 import json
 import os
@@ -20,6 +22,10 @@ only = set(sys.argv[3:])
 
 with open(os.path.join(dump, "oracle_sql.json")) as f:
     oracles = json.load(f)
+unknown = sorted(only - set(oracles))
+if unknown:
+    print(f"unknown queries: {' '.join(unknown)}")
+    sys.exit(2)
 
 con = duckdb.connect()
 for fn in sorted(os.listdir(sf)):
@@ -44,12 +50,13 @@ for q in sorted(oracles):
         cols = sorted(spark_rel.columns)
         collist = ", ".join(f'"{c}"' for c in cols)
         con.execute(f"CREATE OR REPLACE VIEW __spark AS SELECT {collist} FROM '{qdir}/*.parquet'")
-        con.execute(f"CREATE OR REPLACE VIEW __oracle AS WITH __o AS ({oracles[q]}) SELECT {collist} FROM __o")
-        ocols = [c[0] for c in con.execute("DESCRIBE __oracle").fetchall()]
-        if sorted(ocols) != cols:
-            print(f"SCHEMA  {q}: spark {cols} vs oracle {sorted(ocols)}")
+        con.execute(f"CREATE OR REPLACE VIEW __oracle_raw AS WITH __o AS ({oracles[q]}) SELECT * FROM __o")
+        ocols = sorted(c[0] for c in con.execute("DESCRIBE __oracle_raw").fetchall())
+        if ocols != cols:
+            print(f"SCHEMA  {q}: spark {cols} vs oracle {ocols}")
             bad += 1
             continue
+        con.execute(f"CREATE OR REPLACE VIEW __oracle AS SELECT {collist} FROM __oracle_raw")
         d = con.execute(
             "SELECT count(*) FROM ((SELECT * FROM __spark EXCEPT ALL SELECT * FROM __oracle)"
             " UNION ALL (SELECT * FROM __oracle EXCEPT ALL SELECT * FROM __spark))"
@@ -61,4 +68,6 @@ for q in sorted(oracles):
         print(f"ERROR   {q}: {str(e).splitlines()[0][:200]}")
         bad += 1
 print(f"replayed {n} queries against DuckDB, {bad} mismatched")
+if n == 0:
+    sys.exit(2)
 sys.exit(1 if bad else 0)
