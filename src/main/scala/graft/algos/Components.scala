@@ -1,6 +1,6 @@
 package graft.algos
 
-import graft.bsp.SuperstepRunner
+import graft.bsp.{Pin, SuperstepRunner}
 import graft.bsp.SuperstepRunner.{RunConfig, Step}
 import graft.graph.TemporalGraph
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -23,8 +23,12 @@ object Components {
   def inComponent(spark: SparkSession, g: TemporalGraph, seed: Long, maxIter: Int = 100): DataFrame =
     bfs(spark, g.simpleEdges.select(col("dst").as("src"), col("src").as("dst")), seed, maxIter)
 
-  private def bfs(spark: SparkSession, edges: DataFrame, seed: Long, maxIter: Int): DataFrame = {
-    val e = edges.persist()
+  private def bfs(
+      spark: SparkSession,
+      edges: DataFrame,
+      seed: Long,
+      maxIter: Int): DataFrame = Pin.scope { pins =>
+    val e = pins.persist(edges)
     val init = spark.range(1).select(lit(seed).as("id"), lit(0).as("dist"))
     var prevCount = 1L
     val result = SuperstepRunner.run(spark, init, RunConfig(maxSteps = maxIter, runId = "bfs")) {
@@ -44,7 +48,6 @@ object Components {
             (done, Map("visited" -> c.toDouble))
           })
     }
-    e.unpersist(false)
     result.state
   }
 
@@ -64,14 +67,14 @@ object Components {
       spark: SparkSession,
       g: TemporalGraph,
       direction: String = "in",
-      maxIter: Int = 10000): DataFrame = {
+      maxIter: Int = 10000): DataFrame = Pin.scope { pins =>
     val base = g.simpleEdges.filter(col("src") =!= col("dst"))
     // pair (id, m) = "m is in the <direction>-component of id"
-    val e = (direction match {
+    val e = pins.persist(direction match {
       case "in"  => base.select(col("dst").as("id"), col("src").as("m"))
       case "out" => base.select(col("src").as("id"), col("dst").as("m"))
       case other => throw new IllegalArgumentException(s"direction=$other")
-    }).persist()
+    })
     e.count()
 
     var prev = -1L
@@ -94,14 +97,12 @@ object Components {
         })
     }.state
 
-    val withSelf = g.nodes.join(closure, Seq("id"), "left")
-    val out = withSelf
+    g.nodes
+      .join(closure, Seq("id"), "left")
       .groupBy("id")
       .agg(
         sort_array(collect_list(col("m"))).as("members"),
         count(col("m")).as("size"))
-    e.unpersist(false)
-    out
   }
 
   /** Largest weakly connected component as an induced subgraph view —

@@ -1,6 +1,6 @@
 package graft.algos
 
-import graft.bsp.SuperstepRunner
+import graft.bsp.{Pin, SuperstepRunner}
 import graft.bsp.SuperstepRunner.{RunConfig, Step}
 import graft.graph.TemporalGraph
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -58,8 +58,8 @@ object Hits {
   def runWithMetrics(
       spark: SparkSession,
       g: TemporalGraph,
-      cfg: Config = Config()): (DataFrame, List[Map[String, Double]]) = {
-    val adj = g.adjacencySigned(cfg.maxShard).persist()
+      cfg: Config = Config()): (DataFrame, List[Map[String, Double]]) = Pin.scope { pins =>
+    val adj = pins.persist(g.adjacencySigned(cfg.maxShard))
     val init = g.nodes.select(
       col("id"), lit(1.0).as("recv_hub"), lit(1.0).as("recv_auth"))
 
@@ -87,22 +87,9 @@ object Hits {
       RunConfig(cfg.maxIter, cfg.checkpointDir, cfg.checkpointEvery, runId = "hits")) {
       (state, step) =>
         val scores = scoresOf(state, step)
-        // fused pass: for edge u→v the (v, out=1) entry on u ships hub(u)
-        // to v (recv_hub), the (u, out=0) entry on v ships auth(v) to u
-        // (recv_auth) — one explode, map-side partial agg, ONE exchange
-        val recv = adj
-          .join(scores, adj("node") === col("id"))
-          .select(explode(col("nbrs")).as("m"), col("hub"), col("auth"))
-          .select(
-            col("m.nbr").as("id"),
-            when(col("m.out") === 1, col("hub")).as("hub_msg"),
-            when(col("m.out") === 0, col("auth")).as("auth_msg"))
-          .groupBy("id")
-          .agg(sum("hub_msg").as("recv_hub"), sum("auth_msg").as("recv_auth"))
-
         val next = scores
           .select(col("id"), col("hub").as("prev_hub"), col("auth").as("prev_auth"))
-          .join(recv, Seq("id"), "left")
+          .join(received(adj, scores), Seq("id"), "left")
           .select(
             col("id"),
             coalesce(col("recv_hub"), lit(0.0)).as("recv_hub"),
@@ -130,14 +117,31 @@ object Hits {
             }
           })
     }
-    adj.unpersist(false)
     val finalScores =
       if (result.steps == 0) // never stepped: the all-ones init IS the score
         result.state.select(col("id"), lit(1.0).as("hub"), lit(1.0).as("auth"))
       else scoresOf(result.state, result.steps + 1)
-    (
-      finalScores.select(
-        col("id"), col("hub").as("hub_score"), col("auth").as("auth_score")),
-      result.metrics)
+    // the normalized scores read the state twice (row + totals): pin them
+    // once so the caller owns exactly one frame; the scope frees the state
+    pins.own(result.state)
+    val out = pins.keep(pins.pin(finalScores.select(
+      col("id"), col("hub").as("hub_score"), col("auth").as("auth_score"))))
+    (out, result.metrics)
   }
+
+  /** The fused message pass over the signed CSR `(node, salt, nbrs:
+    * array<struct<nbr, out>>, deg)`: for edge u→v the (v, out=1) entry on
+    * u ships hub(u) to v (recv_hub), the (u, out=0) entry on v ships
+    * auth(v) to u (recv_auth) — one explode, map-side partial agg, ONE
+    * exchange; `(id, recv_hub, recv_auth)`. */
+  private[graft] def received(adj: DataFrame, scores: DataFrame): DataFrame =
+    adj
+      .join(scores, adj("node") === col("id"))
+      .select(explode(col("nbrs")).as("m"), col("hub"), col("auth"))
+      .select(
+        col("m.nbr").as("id"),
+        when(col("m.out") === 1, col("hub")).as("hub_msg"),
+        when(col("m.out") === 0, col("auth")).as("auth_msg"))
+      .groupBy("id")
+      .agg(sum("hub_msg").as("recv_hub"), sum("auth_msg").as("recv_auth"))
 }

@@ -1,6 +1,6 @@
 package graft.algos
 
-import graft.bsp.SuperstepRunner
+import graft.bsp.{Pin, SuperstepRunner}
 import graft.bsp.SuperstepRunner.{RunConfig, Step}
 import graft.graph.TemporalGraph
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -24,8 +24,8 @@ object KCore {
       checkpointEvery: Int = 10)
 
   /** Node ids in the k-core: one `id` column. */
-  def coreSet(spark: SparkSession, g: TemporalGraph, cfg: Config): DataFrame = {
-    val pairs = g.undirectedPairs.persist()
+  def coreSet(spark: SparkSession, g: TemporalGraph, cfg: Config): DataFrame = Pin.scope { pins =>
+    val pairs = pins.persist(g.undirectedPairs)
 
     val init = pairs
       .groupBy(col("node").as("id"))
@@ -56,7 +56,6 @@ object KCore {
             (done, Map("alive" -> c.toDouble))
           })
     }
-    pairs.unpersist(false)
     result.state.select("id")
   }
 

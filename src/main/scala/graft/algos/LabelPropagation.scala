@@ -1,6 +1,6 @@
 package graft.algos
 
-import graft.bsp.SuperstepRunner
+import graft.bsp.{Pin, SuperstepRunner}
 import graft.bsp.SuperstepRunner.{RunConfig, Step}
 import graft.graph.TemporalGraph
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -48,8 +48,8 @@ object LabelPropagation {
   def runWithMetrics(
       spark: SparkSession,
       g: TemporalGraph,
-      cfg: Config = Config()): (DataFrame, List[Map[String, Double]]) = {
-    val adj = g.adjacencyBoth(cfg.maxShard).persist()
+      cfg: Config = Config()): (DataFrame, List[Map[String, Double]]) = Pin.scope { pins =>
+    val adj = pins.persist(g.adjacencyBoth(cfg.maxShard))
     val init = g.nodes.select(col("id"), col("id").as("label"))
 
     val result = SuperstepRunner.run(
@@ -60,25 +60,12 @@ object LabelPropagation {
         checkpointDir = cfg.checkpointDir,
         checkpointEvery = cfg.checkpointEvery,
         runId = "lpa")) { (state, _) =>
-      // each node's PREVIOUS label is sent to all its distinct neighbours
-      // (symmetric adjacency ⇒ identical to "each node collects its
-      // neighbours' labels", but the static CSR side joins on its own
-      // partitioning key)
-      val nbrVotes = adj
-        .join(state.select(col("id"), col("label")), adj("node") === col("id"))
-        .select(explode(col("nbrs")).as("id"), col("label"))
-      val ownVotes = state.select(col("id"), col("label"))
-      val tally = nbrVotes
-        .union(ownVotes)
-        .groupBy("id", "label")
-        .agg(count(lit(1)).as("votes"))
-
       // winner = argmax (votes, then label) — max(struct) keeps the winner
       // selection inside the SAME (id)-hash aggregate instead of paying a
       // second exchange for a row_number window (the tally shuffle is on
       // (id, label); the max-struct agg partially aggregates map-side and
       // shuffles once on id).
-      val winner = tally
+      val winner = tally(adj, state)
         .groupBy("id")
         .agg(max(struct(col("votes"), col("label"))).as("w"))
         .select(col("id"), col("w.label").as("new_label"))
@@ -97,7 +84,23 @@ object LabelPropagation {
           (changes == 0, Map("changes" -> changes.toDouble))
         })
     }
-    adj.unpersist(false)
     (result.state.select("id", "label"), result.metrics)
+  }
+
+  /** The message pass over the both-CSR `(node, salt, nbrs, deg)`: the
+    * `(id, label, votes)` tally of each node's neighbour votes plus its own. */
+  private[graft] def tally(adj: DataFrame, state: DataFrame): DataFrame = {
+    // each node's PREVIOUS label is sent to all its distinct neighbours
+    // (symmetric adjacency ⇒ identical to "each node collects its
+    // neighbours' labels", but the static CSR side joins on its own
+    // partitioning key)
+    val nbrVotes = adj
+      .join(state.select(col("id"), col("label")), adj("node") === col("id"))
+      .select(explode(col("nbrs")).as("id"), col("label"))
+    val ownVotes = state.select(col("id"), col("label"))
+    nbrVotes
+      .union(ownVotes)
+      .groupBy("id", "label")
+      .agg(count(lit(1)).as("votes"))
   }
 }

@@ -1,6 +1,6 @@
 package graft.algos
 
-import graft.bsp.SuperstepRunner
+import graft.bsp.{Pin, SuperstepRunner}
 import graft.bsp.SuperstepRunner.{RunConfig, Step}
 import graft.graph.TemporalGraph
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -49,16 +49,15 @@ object PageRank {
     runWithStats(spark, g, cfg)._1
 
   /** As [[run]], also returning the number of supersteps executed. */
-  def runWithStats(spark: SparkSession, g: TemporalGraph, cfg: Config = Config()): (DataFrame, Int) = {
+  def runWithStats(spark: SparkSession, g: TemporalGraph, cfg: Config = Config()): (DataFrame, Int) =
     // Hub-salted CSR (north rule): a hub's neighbour list arrives as
     // multiple (src, salt) shard rows, each carrying the TOTAL out_deg, so
-    // the message explode below is per-shard (bounded rows) and needs no
+    // the explode in [[messages]] is per-shard (bounded rows) and needs no
     // merge. The shards stay hash-partitioned on src — the per-superstep
     // rank join reuses the persisted layout without re-shuffling the CSR.
-    val adj = g.adjacencyOut(cfg.maxShard).persist()
-    try runOnAdjacency(spark, adj, g.nodes, cfg)
-    finally adj.unpersist(false)
-  }
+    Pin.scope { pins =>
+      runOnAdjacency(spark, pins.persist(g.adjacencyOut(cfg.maxShard)), g.nodes, cfg)
+    }
 
   /** PageRank over a PREBUILT (and ideally persisted) salted CSR adjacency
     * from [[graft.graph.TemporalGraph.adjacencyOut]]. In a deployment the
@@ -85,10 +84,8 @@ object PageRank {
    *   score' = (1−d)·p + d·Σ msgs + d·sink_mass·p
    *
    * With seeds = all nodes this IS standard PageRank (p = 1/n — asserted
-   * in PageRankSpec). Same superstep plan as [[runFull]]: one persisted
-   * salted-CSR join per step, sink mass as an in-plan broadcast aggregate;
-   * the personalization column rides in the state, so personalization adds
-   * ZERO exchanges. Convergence uses the same Σ‖Δ‖ ≤ tol·n gate.
+   * in PageRankSpec). The personalization column rides in the state, so
+   * personalization adds ZERO exchanges.
    *
    * @param seeds one column `id`; duplicates ignored
    * @return (id, score) per node
@@ -97,71 +94,10 @@ object PageRank {
       spark: SparkSession,
       g: TemporalGraph,
       seeds: DataFrame,
-      cfg: Config = Config()): DataFrame = {
-    val adj = g.adjacencyOut(cfg.maxShard).persist()
-    try {
-      val base = g.nodes
-        .join(
-          adj.select(col("src").as("id"), col("out_deg")).dropDuplicates("id"),
-          Seq("id"),
-          "left")
-        .select(col("id"), coalesce(col("out_deg"), lit(0L)).as("out_deg"))
-      val seedSet = seeds.select(col("id")).distinct()
-      val sCount = seedSet.count().toDouble
-      require(sCount > 0, "personalized: empty seed set")
-      val n = base.count().toDouble
-      val damp = cfg.damping
-      val init = base
-        .join(seedSet.withColumn("__s", lit(1)), Seq("id"), "left")
-        .select(
-          col("id"), col("out_deg"),
-          when(col("__s").isNotNull, lit(1.0 / sCount)).otherwise(lit(0.0)).as("p"))
-        .withColumn("score", col("p"))
-
-      val result = SuperstepRunner.run(
-        spark,
-        init,
-        RunConfig(
-          maxSteps = cfg.maxIter,
-          checkpointDir = cfg.checkpointDir,
-          checkpointEvery = cfg.checkpointEvery,
-          runId = "ppr")) { (state, _) =>
-        val sinkAgg = broadcast(
-          state
-            .filter(col("out_deg") === 0)
-            .agg(coalesce(sum("score"), lit(0.0)).as("sink_mass")))
-        val msgs = adj
-          .join(state.select(col("id"), col("score")), adj("src") === col("id"))
-          .select(explode(col("dsts")).as("id"), (col("score") / col("out_deg")).as("w"))
-          .groupBy("id")
-          .agg(sum("w").as("msum"))
-        val newScore =
-          lit(1.0 - damp) * col("p") +
-            lit(damp) * coalesce(col("msum"), lit(0.0)) +
-            lit(damp) * col("sink_mass") * col("p")
-        val next = state
-          .join(msgs, Seq("id"), "left")
-          .crossJoin(sinkAgg)
-          .select(
-            col("id"), col("out_deg"), col("p"),
-            newScore.as("score"),
-            abs(newScore - col("score")).as("diff"))
-        Step(
-          next.select("id", "out_deg", "p", "score", "diff"),
-          { materialized =>
-            if (cfg.tol <= 0.0) (false, Map.empty)
-            else {
-              val row = materialized
-                .agg(sum(if (cfg.useL2Norm) col("diff") * col("diff") else col("diff")).as("d"))
-                .first()
-              val d = if (row.isNullAt(0)) 0.0 else row.getDouble(0)
-              val normed = if (cfg.useL2Norm) math.sqrt(d) else d
-              (normed <= cfg.tol * n, Map("diff" -> normed))
-            }
-          })
-      }
-      result.state.select("id", "score")
-    } finally adj.unpersist(false)
+      cfg: Config = Config()): DataFrame = Pin.scope { pins =>
+    val adj = pins.persist(g.adjacencyOut(cfg.maxShard))
+    iterate(spark, adj, g.nodes, "out_deg", "ppr", cfg, Some(seeds))(messages)
+      .state.select("id", "score")
   }
 
   /**
@@ -180,71 +116,15 @@ object PageRank {
    * the natural transcript weighting (event multiplicity, or the
    * half-life recency decay in `q_graph_pagerank_weighted`, which
    * quantizes decay to powers of two for exactness).
-   *
-   * Same plan shape as [[runFull]]: hub-salted weighted CSR persisted
-   * hash-partitioned once, one message exchange per superstep, sink mass
-   * as an in-plan one-row broadcast.
    */
   def weighted(
       spark: SparkSession,
       g: TemporalGraph,
-      weights: org.apache.spark.sql.DataFrame,
-      cfg: Config = Config()): DataFrame = {
-    val adj = g.adjacencyOutWeighted(weights, cfg.maxShard).persist()
-    try {
-      val init0 = g.nodes
-        .join(
-          adj.select(col("src").as("id"), col("out_w")).dropDuplicates("id"),
-          Seq("id"),
-          "left")
-        .select(col("id"), coalesce(col("out_w"), lit(0L)).as("out_w"))
-      val n = init0.count().toDouble
-      val damp = cfg.damping
-      val init = init0.withColumn("score", lit(1.0 / n))
-
-      val result = SuperstepRunner.run(
-        spark,
-        init,
-        RunConfig(cfg.maxIter, cfg.checkpointDir, cfg.checkpointEvery, runId = "wpagerank")) {
-        (state, _) =>
-          val sinkAgg = broadcast(
-            state
-              .filter(col("out_w") === 0)
-              .agg(coalesce(sum("score"), lit(0.0)).as("sink_mass")))
-          val msgs = adj
-            .join(state.select(col("id"), col("score")), adj("src") === col("id"))
-            .select(explode(col("dsts")).as("m"), col("score"), col("out_w"))
-            .select(
-              col("m.dst").as("id"),
-              (col("score") * col("m.w") / col("out_w")).as("wv"))
-            .groupBy("id")
-            .agg(sum("wv").as("msum"))
-          val newScore =
-            lit((1.0 - damp) / n) + lit(damp) * coalesce(col("msum"), lit(0.0)) +
-              lit(damp / n) * col("sink_mass")
-          val next = state
-            .join(msgs, Seq("id"), "left")
-            .crossJoin(sinkAgg)
-            .select(
-              col("id"), col("out_w"),
-              newScore.as("score"),
-              abs(newScore - col("score")).as("diff"))
-          Step(
-            next.select("id", "out_w", "score", "diff"),
-            { m =>
-              if (cfg.tol <= 0.0) (false, Map.empty)
-              else {
-                val row = m
-                  .agg(sum(if (cfg.useL2Norm) col("diff") * col("diff") else col("diff")).as("d"))
-                  .first()
-                val d = if (row.isNullAt(0)) 0.0 else row.getDouble(0)
-                val normed = if (cfg.useL2Norm) math.sqrt(d) else d
-                (normed <= cfg.tol * n, Map("diff" -> normed))
-              }
-            })
-      }
-      result.state.select("id", "score")
-    } finally adj.unpersist(false)
+      weights: DataFrame,
+      cfg: Config = Config()): DataFrame = Pin.scope { pins =>
+    val adj = pins.persist(g.adjacencyOutWeighted(weights, cfg.maxShard))
+    iterate(spark, adj, g.nodes, "out_w", "wpagerank", cfg)(weightedMessages)
+      .state.select("id", "score")
   }
 
   /** As [[runOnAdjacency]], returning the full [[SuperstepRunner.RunResult]]
@@ -255,57 +135,97 @@ object PageRank {
       spark: SparkSession,
       adj: DataFrame,
       nodes: DataFrame,
-      cfg: Config = Config()): SuperstepRunner.RunResult = {
+      cfg: Config = Config()): SuperstepRunner.RunResult =
+    iterate(spark, adj, nodes, "out_deg", "pagerank", cfg)(messages)
 
-    // state: (id, score, out_deg); sinks have out_deg = 0. dropDuplicates:
-    // hub shards repeat (src, out_deg).
-    val init = nodes
-      .join(
-        adj.select(col("src").as("id"), col("out_deg")).dropDuplicates("id"),
-        Seq("id"),
-        "left")
-      .select(col("id"), coalesce(col("out_deg"), lit(0L)).as("out_deg"))
-    val n = init.count().toDouble
+  /** Unweighted message pass over the out-CSR `(src, salt, dsts, out_deg)`:
+    * each shard row ships score/out_deg to every dst; `(id, msum)`. */
+  private[graft] def messages(adj: DataFrame, scores: DataFrame): DataFrame =
+    adj
+      .join(scores, adj("src") === col("id"))
+      .select(explode(col("dsts")).as("id"), (col("score") / col("out_deg")).as("w"))
+      .groupBy("id")
+      .agg(sum("w").as("msum"))
+
+  /** Weighted message pass over the struct-array CSR
+    * `(src, salt, dsts: array<struct<dst, w>>, out_w)`: each entry ships
+    * score·w/out_w to its dst; `(id, msum)`. */
+  private[graft] def weightedMessages(adj: DataFrame, scores: DataFrame): DataFrame =
+    adj
+      .join(scores, adj("src") === col("id"))
+      .select(explode(col("dsts")).as("m"), col("score"), col("out_w"))
+      .select(col("m.dst").as("id"), (col("score") * col("m.w") / col("out_w")).as("wv"))
+      .groupBy("id")
+      .agg(sum("wv").as("msum"))
+
+  /**
+   * The one superstep loop behind every variant, so all of them have the
+   * superstep plan described above and differ only in the message pass.
+   * The state is `(id, <deg>, [p,] score, diff)`; sinks have `<deg>` = 0.
+   *
+   * Teleport and sink mass go to 1/n per node, or — with `seeds` — to the
+   * seed distribution p carried in the state. Each variant keeps its own
+   * float expression and CSR: deriving one from another (p = 1/n, or all
+   * weights 1) would change the float ops, and so the scores, and would put
+   * the struct-array CSR on the unweighted path.
+   *
+   * @param deg      the CSR's degree column: `out_deg`, or `out_w` (weighted)
+   * @param messages the CSR kind's message pass: (adj, (id, score)) => (id, msum)
+   */
+  private def iterate(
+      spark: SparkSession,
+      adj: DataFrame,
+      nodes: DataFrame,
+      deg: String,
+      runId: String,
+      cfg: Config,
+      seeds: Option[DataFrame] = None)(
+      messages: (DataFrame, DataFrame) => DataFrame): SuperstepRunner.RunResult = {
+    // dropDuplicates: hub shards repeat (src, <deg>)
+    val base = nodes
+      .join(adj.select(col("src").as("id"), col(deg)).dropDuplicates("id"), Seq("id"), "left")
+      .select(col("id"), coalesce(col(deg), lit(0L)).as(deg))
+    val n = base.count().toDouble
     val damp = cfg.damping
-    val teleport = (1.0 - damp) / n
-    val init2 = init.withColumn("score", lit(1.0 / n))
+    val msum = coalesce(col("msum"), lit(0.0))
+    val (init, newScore) = seeds match {
+      case None =>
+        (
+          base.withColumn("score", lit(1.0 / n)),
+          lit((1.0 - damp) / n) + lit(damp) * msum + lit(damp / n) * col("sink_mass"))
+      case Some(s) =>
+        val seedSet = s.select(col("id")).distinct()
+        val sCount = seedSet.count().toDouble
+        require(sCount > 0, "personalized: empty seed set")
+        val p = when(col("__s").isNotNull, lit(1.0 / sCount)).otherwise(lit(0.0))
+        (
+          base
+            .join(seedSet.withColumn("__s", lit(1)), Seq("id"), "left")
+            .select(col("id"), col(deg), p.as("p"))
+            .withColumn("score", col("p")),
+          lit(1.0 - damp) * col("p") + lit(damp) * msum + lit(damp) * col("sink_mass") * col("p"))
+    }
+    val carried = (Seq("id", deg) ++ seeds.map(_ => "p")).map(col)
 
-    val result = SuperstepRunner.run(
+    SuperstepRunner.run(
       spark,
-      init2,
+      init,
       RunConfig(
         maxSteps = cfg.maxIter,
         checkpointDir = cfg.checkpointDir,
         checkpointEvery = cfg.checkpointEvery,
-        runId = "pagerank")) { (state, _) =>
-      // sink mass from the previous superstep's scores, as a broadcast
-      // one-row aggregate inside the same plan (pagerank.rs:107-127)
+        runId = runId)) { (state, _) =>
+      // sink mass from the previous superstep's scores (pagerank.rs:107-127)
       val sinkAgg = broadcast(
         state
-          .filter(col("out_deg") === 0)
+          .filter(col(deg) === 0)
           .agg(coalesce(sum("score"), lit(0.0)).as("sink_mass")))
-
-      val msgs = adj
-        .join(state.select(col("id"), col("score")), adj("src") === col("id"))
-        .select(explode(col("dsts")).as("id"), (col("score") / col("out_deg")).as("w"))
-        .groupBy("id")
-        .agg(sum("w").as("msum"))
-
-      val newScore =
-        lit(teleport) + lit(damp) * coalesce(col("msum"), lit(0.0)) +
-          lit(damp / n) * col("sink_mass")
-
       val next = state
-        .join(msgs, Seq("id"), "left")
+        .join(messages(adj, state.select(col("id"), col("score"))), Seq("id"), "left")
         .crossJoin(sinkAgg)
-        .select(
-          col("id"),
-          col("out_deg"),
-          newScore.as("score"),
-          abs(newScore - col("score")).as("diff"))
-
+        .select(carried :+ newScore.as("score") :+ abs(newScore - col("score")).as("diff"): _*)
       Step(
-        next.select("id", "out_deg", "score", "diff"),
+        next,
         { materialized =>
           if (cfg.tol <= 0.0) (false, Map.empty)
           else {
@@ -318,6 +238,5 @@ object PageRank {
           }
         })
     }
-    result
   }
 }

@@ -400,25 +400,6 @@ case class TemporalGraph(
         first("out_w").as("out_w"))
   }
 
-  /** Salted CSR-style in-adjacency `(dst, salt, srcs: array<long>, in_deg)`
-    * over distinct in-neighbours — the reverse-direction twin of
-    * [[adjacencyOut]] (same sharding contract, output hash-partitioned on
-    * dst) for algorithms that push messages along reversed edges (HITS'
-    * auth pass, backward reachability). */
-  def adjacencyIn(maxShard: Int): DataFrame = {
-    val deg = simpleEdges.groupBy("dst").agg(count(lit(1)).as("in_deg"))
-    simpleEdges
-      .join(deg, Seq("dst"))
-      .withColumn(
-        "salt",
-        pmod(xxhash64(col("src")), greatest(ceil(col("in_deg") / maxShard.toDouble), lit(1L)))
-          .cast("int"))
-      .groupBy("dst", "salt")
-      .agg(collect_list("src").as("srcs"), first("in_deg").as("in_deg"))
-  }
-
-  def adjacencyIn: DataFrame = adjacencyIn(TemporalGraph.DefaultMaxShard)
-
   /** Salted CSR-style BOTH-direction adjacency `(node, salt, nbrs, deg)` —
     * same sharding contract as [[adjacencyOut]]. */
   def adjacencyBoth(maxShard: Int): DataFrame = {

@@ -429,7 +429,7 @@ object Dedup {
    * duplicated passage of S tokens reports one span with
    * `span_len = S = n_windows + minTokens − 1`.
    *
-   * The 100 TB shape (plan verified via `tools.Explain`), stated honestly:
+   * The 100 TB shape (plan verified via `tools.PlanDump`), stated honestly:
    *
    *  - **The census `groupBy(wh)` IS a full corpus-token-scale exchange** —
    *    ~one shuffle row per corpus token, and because window hashes are

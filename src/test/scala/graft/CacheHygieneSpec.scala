@@ -1,12 +1,14 @@
 package graft
 
-import graft.algos.{Betweenness, Louvain, Matching, PageRank, Reach, Scc}
+import graft.algos.{Betweenness, Hits, LabelPropagation, Louvain, Matching, PageRank, Reach, Scc}
 import graft.bsp.{Pin, SuperstepRunner}
 import graft.bsp.SuperstepRunner.{RunConfig, Step}
 import graft.graph.TemporalGraph
 import graft.ml.{Dedup, GraphLearn}
 import org.apache.spark.sql.{DataFrame, GraftSqlInternals}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
+
+import java.nio.file.Files
 
 /**
  * Cache-lifecycle contract for the operators the round-2 review flagged as
@@ -95,7 +97,15 @@ class CacheHygieneSpec extends SparkSpec {
     "Louvain.run" -> (() => Louvain.run(spark, bridged)),
     "Reach.harmonicCloseness" -> (() => Reach.harmonicCloseness(spark, bridged, iters = 2)),
     "GraphLearn.randomWalks" -> (() => GraphLearn.randomWalks(spark, bridged, length = 3)),
-    "PageRank.run" -> (() => PageRank.run(spark, bridged, PageRank.Config(maxIter = 5))))
+    "PageRank.run" -> (() => PageRank.run(spark, bridged, PageRank.Config(maxIter = 5))),
+    "PageRank.personalized" -> (() =>
+      PageRank.personalized(spark, bridged, spark.range(1, 3).toDF("id"), PageRank.Config(maxIter = 5))),
+    "PageRank.weighted" -> (() =>
+      PageRank.weighted(
+        spark, bridged, bridged.simpleEdges.withColumn("w", lit(2L)), PageRank.Config(maxIter = 5))),
+    "Hits.run" -> (() => Hits.run(spark, bridged, Hits.Config(maxIter = 5))),
+    "LabelPropagation.run" -> (() =>
+      LabelPropagation.run(spark, bridged, LabelPropagation.Config(maxIter = 5))))
 
   for ((name, run) <- owners)
     test(s"$name frees every internal cache; caller owns exactly the result") {
@@ -120,5 +130,19 @@ class CacheHygieneSpec extends SparkSpec {
     }
     assert(boom.getMessage == "step 3")
     assert((persistedIds -- before).isEmpty, "a failed run must free every pinned state")
+  }
+
+  test("LPA and HITS free their CSR when a checkpoint commit throws") {
+    // a regular file where the checkpoint directory should be: the
+    // step-1 commit cannot create `steps/1/data` under it and throws
+    val notADir = Files.createTempFile("graft-ckpt", ".file")
+    try {
+      val before = persistedIds
+      intercept[Exception](LabelPropagation.run(spark, bridged, LabelPropagation.Config(
+        checkpointDir = Some(notADir.toString), checkpointEvery = 1)))
+      intercept[Exception](Hits.run(spark, bridged, Hits.Config(
+        checkpointDir = Some(notADir.toString), checkpointEvery = 1)))
+      assert((persistedIds -- before).isEmpty, "a failed run must free its CSR and state")
+    } finally Files.delete(notADir)
   }
 }

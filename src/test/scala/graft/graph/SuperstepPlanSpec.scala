@@ -1,6 +1,7 @@
 package graft.graph
 
 import graft.SparkSpec
+import graft.algos.{Hits, LabelPropagation, PageRank}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -75,12 +76,7 @@ class SuperstepPlanSpec extends SparkSpec {
       val adj = g.adjacencyOut(1 << 17).persist()
       adj.count()
       val state = g.nodes.select(col("id"), lit(0.5).as("score")).localCheckpoint(true)
-      val msgs = adj
-        .join(state, adj("src") === state("id"))
-        .select(explode(col("dsts")).as("id"), (col("score") / col("out_deg")).as("w"))
-        .groupBy("id")
-        .agg(sum("w").as("msum"))
-      assertAdjacencyStaysPut(msgs)
+      assertAdjacencyStaysPut(PageRank.messages(adj, state))
       adj.unpersist(true)
     }
   }
@@ -90,12 +86,7 @@ class SuperstepPlanSpec extends SparkSpec {
       val adj = g.adjacencyBoth(1 << 17).persist()
       adj.count()
       val state = g.nodes.select(col("id"), col("id").as("label")).localCheckpoint(true)
-      val tally = adj
-        .join(state, adj("node") === state("id"))
-        .select(explode(col("nbrs")).as("id"), col("label"))
-        .groupBy("id", "label")
-        .agg(count(lit(1)).as("votes"))
-      assertAdjacencyStaysPut(tally)
+      assertAdjacencyStaysPut(LabelPropagation.tally(adj, state))
       adj.unpersist(true)
     }
   }
@@ -108,17 +99,8 @@ class SuperstepPlanSpec extends SparkSpec {
         .select(col("id"), lit(1.0).as("hub"), lit(1.0).as("auth"))
         .localCheckpoint(true)
       // the fused pass: ONE join + ONE explode + ONE groupBy carries both
-      // the hub and the auth message streams (Hits.scala superstep body)
-      val recv = adj
-        .join(state, adj("node") === state("id"))
-        .select(explode(col("nbrs")).as("m"), col("hub"), col("auth"))
-        .select(
-          col("m.nbr").as("id"),
-          when(col("m.out") === 1, col("hub")).as("hub_msg"),
-          when(col("m.out") === 0, col("auth")).as("auth_msg"))
-        .groupBy("id")
-        .agg(sum("hub_msg").as("recv_hub"), sum("auth_msg").as("recv_auth"))
-      assertAdjacencyStaysPut(recv)
+      // the hub and the auth message streams
+      assertAdjacencyStaysPut(Hits.received(adj, state))
       adj.unpersist(true)
     }
   }
@@ -129,13 +111,7 @@ class SuperstepPlanSpec extends SparkSpec {
       val adj = g.adjacencyOutWeighted(weights, 1 << 17).persist()
       adj.count()
       val state = g.nodes.select(col("id"), lit(0.5).as("score")).localCheckpoint(true)
-      val msgs = adj
-        .join(state, adj("src") === state("id"))
-        .select(explode(col("dsts")).as("m"), col("score"), col("out_w"))
-        .select(col("m.dst").as("id"), (col("score") * col("m.w") / col("out_w")).as("wv"))
-        .groupBy("id")
-        .agg(sum("wv").as("msum"))
-      assertAdjacencyStaysPut(msgs)
+      assertAdjacencyStaysPut(PageRank.weightedMessages(adj, state))
       adj.unpersist(true)
     }
   }
@@ -186,19 +162,5 @@ class SuperstepPlanSpec extends SparkSpec {
       assertAdjacencyStaysPut(wcom)
       adj.unpersist(true)
     }
-  }
-
-  test("in-CSR shards a planted in-hub and reassembles exactly") {
-    val hubEdges = (1 to 3000).map(i => (i.toLong, 0L, 1000L + i))
-    val hg = TemporalGraph.fromTriples(spark, hubEdges)
-    val adj = hg.adjacencyIn(256)
-    val shards = adj.filter(col("dst") === 0L)
-      .select(size(col("srcs")).as("n"), col("in_deg"))
-      .collect()
-    assert(shards.length == math.ceil(3000 / 256.0).toInt)
-    assert(shards.forall(_.getAs[Long]("in_deg") == 3000L))
-    val reassembled = adj.filter(col("dst") === 0L)
-      .select(explode(col("srcs")).as("s")).distinct().count()
-    assert(reassembled == 3000L)
   }
 }
