@@ -83,11 +83,7 @@ object Centrality {
       (state, _) =>
         // previous step's normalized scores, from the cached state
         val scores = state.crossJoin(mxOver(state)).select(col("id"), normed.as("score"))
-        val recv = adj
-          .join(scores, adj("src") === col("id"))
-          .select(explode(col("dsts")).as("id"), col("score").as("w"))
-          .groupBy("id")
-          .agg(sum("w").as("msum"))
+        val recv = TemporalGraph.pushOut(adj, scores, col("score"))
         val next = state
           .crossJoin(mxOver(state))
           .select(col("id"), normed.as("prev"))
@@ -135,12 +131,8 @@ object Centrality {
         init,
         RunConfig(cfg.maxIter, cfg.checkpointDir, cfg.checkpointEvery, runId = "katz")) {
         (state, _) =>
-          val recv = adj
-            .join(state.select(col("id"), col("score")), adj("src") === col("id"))
-            .select(explode(col("dsts")).as("id"), col("score").as("w"))
-            .groupBy("id")
-            .agg(sum("w").as("recv"))
-          val newScore = lit(beta) + lit(alpha) * coalesce(col("recv"), lit(0.0))
+          val recv = TemporalGraph.pushOut(adj, state.select(col("id"), col("score")), col("score"))
+          val newScore = lit(beta) + lit(alpha) * coalesce(col("msum"), lit(0.0))
           val next = state
             .select(col("id"), col("score").as("prev"))
             .join(recv, Seq("id"), "left")

@@ -108,7 +108,7 @@ object Components {
   /** Largest weakly connected component as an induced subgraph view —
     * reference LargestConnectedComponent (components/lcc.rs:29). */
   def largestConnectedComponent(spark: SparkSession, g: TemporalGraph): TemporalGraph = {
-    val labels = ConnectedComponents.run(spark, g).persist()
+    val labels = ConnectedComponents.run(spark, g)
     val top = labels
       .groupBy("label")
       .agg(count(lit(1)).as("n"))
@@ -116,9 +116,7 @@ object Components {
       .limit(1)
       .select("label")
     val members = labels.join(top, Seq("label"), "left_semi").select("id")
-    val sub = g.subgraph(members)
-    labels.unpersist(false)
-    sub
+    g.subgraph(members)
   }
 
   /** Component size histogram `(label, size)` — handy result op over WCC. */

@@ -1,6 +1,6 @@
 package graft.algos
 
-import graft.bsp.SuperstepRunner
+import graft.bsp.{Pin, SuperstepRunner}
 import graft.bsp.SuperstepRunner.{RunConfig, Step}
 import graft.graph.TemporalGraph
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -44,8 +44,7 @@ object ConnectedComponents {
   def runWithMetrics(
       spark: SparkSession,
       g: TemporalGraph,
-      cfg: Config = Config()): (DataFrame, List[Map[String, Double]]) = {
-    val nodes = g.nodes.persist()
+      cfg: Config = Config()): (DataFrame, List[Map[String, Double]]) = Pin.scope { pins =>
     val init = g.canonicalUndirected.select(col("a"), col("b")) // a < b, no self-loops
 
     // Both stars compute "min neighbour per center, attached back to every
@@ -118,10 +117,12 @@ object ConnectedComponents {
       .select(greatest(col("a"), col("b")).as("id"), least(col("a"), col("b")).as("label"))
       .groupBy("id")
       .agg(min("label").as("label"))
-    val labels = nodes
+    val labels = g.nodes
       .join(stars, Seq("id"), "left")
       .select(col("id"), coalesce(col("label"), col("id")).as("label"))
-    nodes.unpersist(false)
-    (labels, result.metrics)
+    // pin the labels once so the caller owns exactly one frame; the scope
+    // frees the state they were read from
+    pins.own(result.state)
+    (pins.keep(pins.pin(labels)), result.metrics)
   }
 }

@@ -44,7 +44,7 @@ import org.apache.spark.sql.functions._
  *  - levels repeat until a level makes zero moves.
  *
  * Scale: the per-level neighbour table is grouped into a salted weighted
- * CSR (same sharding contract as [[TemporalGraph.adjacencyOut]]) that is
+ * CSR (sharded by [[TemporalGraph.saltedCsr]]) that is
  * persisted hash-partitioned on its join key, so each round's message join
  * exchanges only the narrow (id, com, k) state frame — the big static
  * adjacency side is never re-shuffled (the PageRank/HITS superstep
@@ -205,6 +205,27 @@ object Louvain {
     (pairs, selfw, k, m2)
   }
 
+  /** Salted weighted CSR `(other, salt, entries: array<struct<nbr, w>>)`
+    * over both orientations of a level's pairs `(a, b, w)`, keyed by the
+    * message SOURCE (`other`, whose community each neighbour reads). */
+  private[graft] def csr(pairs: DataFrame): DataFrame = {
+    val bi = pairs
+      .select(col("a").as("other"), col("b").as("nbr"), col("w"))
+      .unionByName(pairs.select(col("b").as("other"), col("a").as("nbr"), col("w")))
+    TemporalGraph.saltedCsr(bi, "other", "deg", Seq(col("nbr")), TemporalGraph.DefaultMaxShard)(
+      collect_list(struct(col("nbr"), col("w"))).as("entries"))
+  }
+
+  /** w_i→c: weight from each node to each neighbouring community
+    * `(id, cand, w_cand)` — the CSR side stays put; only the (id, com)
+    * projection of the state `(id, com, …)` shuffles. */
+  private[graft] def communityWeights(adj: DataFrame, state: DataFrame): DataFrame =
+    adj
+      .join(state.select(col("id").as("other"), col("com").as("ocom")), Seq("other"))
+      .select(col("ocom"), explode(col("entries")).as("e"))
+      .groupBy(col("e.nbr").as("id"), col("ocom").as("cand"))
+      .agg(sum(col("e.w")).as("w_cand"))
+
   /** One level of synchronous parity-gated local moving.
     * @return (assignment (id, com), whether any node moved, round metrics) */
   private def localMoving(
@@ -215,24 +236,10 @@ object Louvain {
       m2: Double,
       cfg: Config,
       level: Int): (DataFrame, Boolean, List[Map[String, Double]]) = {
-    // Salted weighted CSR keyed by the message SOURCE (`other`, whose
-    // community each neighbour reads): persisted hash-partitioned on the
-    // join key so the static adjacency is never re-exchanged across rounds
-    // — only the narrow state frame shuffles (TemporalGraph.adjacencyOut
-    // sharding contract; hubs split into ~maxShard-entry rows).
-    val maxShard = TemporalGraph.DefaultMaxShard
-    val bi = pairs
-      .select(col("a").as("other"), col("b").as("nbr"), col("w"))
-      .unionByName(pairs.select(col("b").as("other"), col("a").as("nbr"), col("w")))
-    val deg = bi.groupBy("other").agg(count(lit(1)).as("deg"))
-    val adj = pins.persist(bi
-      .join(deg, Seq("other"))
-      .withColumn(
-        "salt",
-        pmod(xxhash64(col("nbr")), greatest(ceil(col("deg") / maxShard.toDouble), lit(1L)))
-          .cast("int"))
-      .groupBy("other", "salt")
-      .agg(collect_list(struct(col("nbr"), col("w"))).as("entries")))
+    // persisted hash-partitioned on the join key so the static adjacency
+    // is never re-exchanged across rounds — only the narrow state frame
+    // shuffles
+    val adj = pins.persist(csr(pairs))
     val init = k.select(col("id"), col("id").as("com"), col("k"))
 
     var zeroStreak = 0
@@ -246,20 +253,13 @@ object Louvain {
         runId = s"louvain-l$level")) { (state, round) =>
       // Σ_tot per community (tiny: ≤ #communities rows; AQE broadcasts it)
       val ktot = state.groupBy(col("com")).agg(sum(col("k")).as("ktot"))
-      // w_i→c: weight from each node to each neighbouring community — the
-      // CSR side stays put; only the (id, com) projection of state shuffles.
       // PINNED (eager local checkpoint): wcom feeds the delta plan TWICE
       // (as itself and as the w_old lookup) — without the pin the CSR join
       // + explode + aggregation executed twice per round (r5 shape;
       // measured ~20 stages/round, the fattest subtree duplicated). The
       // pin's blocks are freed in the evaluate callback below, after the
       // round's state is materialized.
-      val wcom = pins.pin(
-        adj
-          .join(state.select(col("id").as("other"), col("com").as("ocom")), Seq("other"))
-          .select(col("ocom"), explode(col("entries")).as("e"))
-          .groupBy(col("e.nbr").as("id"), col("ocom").as("cand"))
-          .agg(sum(col("e.w")).as("w_cand")))
+      val wcom = pins.pin(communityWeights(adj, state))
       // candidate deltas (modularity.rs move_delta; self-loop term cancels).
       // w_i→own-community is a per-node scalar over the SAME wcom group —
       // a max-over-window on the node key, instead of the r5 self-join of

@@ -40,8 +40,7 @@ object Matching {
   final case class Config(
       weightCol: Option[String] = None,
       maxCardinality: Boolean = false,
-      maxRounds: Int = 10000,
-      checkpointDir: Option[String] = None)
+      maxRounds: Int = 10000)
 
   /** Undirected weighted pair list (a < b, weight = max over directed
     * edges between the endpoints, self-loops dropped — a matching can

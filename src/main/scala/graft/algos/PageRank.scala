@@ -52,7 +52,7 @@ object PageRank {
   def runWithStats(spark: SparkSession, g: TemporalGraph, cfg: Config = Config()): (DataFrame, Int) =
     // Hub-salted CSR (north rule): a hub's neighbour list arrives as
     // multiple (src, salt) shard rows, each carrying the TOTAL out_deg, so
-    // the explode in [[messages]] is per-shard (bounded rows) and needs no
+    // the explode in the message pass is per-shard (bounded rows) and needs no
     // merge. The shards stay hash-partitioned on src — the per-superstep
     // rank join reuses the persisted layout without re-shuffling the CSR.
     Pin.scope { pins =>
@@ -96,7 +96,8 @@ object PageRank {
       seeds: DataFrame,
       cfg: Config = Config()): DataFrame = Pin.scope { pins =>
     val adj = pins.persist(g.adjacencyOut(cfg.maxShard))
-    iterate(spark, adj, g.nodes, "out_deg", "ppr", cfg, Some(seeds))(messages)
+    iterate(spark, adj, g.nodes, "out_deg", "ppr", cfg, Some(seeds))(
+      TemporalGraph.pushOut(_, _, col("score") / col("out_deg")))
       .state.select("id", "score")
   }
 
@@ -136,16 +137,8 @@ object PageRank {
       adj: DataFrame,
       nodes: DataFrame,
       cfg: Config = Config()): SuperstepRunner.RunResult =
-    iterate(spark, adj, nodes, "out_deg", "pagerank", cfg)(messages)
-
-  /** Unweighted message pass over the out-CSR `(src, salt, dsts, out_deg)`:
-    * each shard row ships score/out_deg to every dst; `(id, msum)`. */
-  private[graft] def messages(adj: DataFrame, scores: DataFrame): DataFrame =
-    adj
-      .join(scores, adj("src") === col("id"))
-      .select(explode(col("dsts")).as("id"), (col("score") / col("out_deg")).as("w"))
-      .groupBy("id")
-      .agg(sum("w").as("msum"))
+    iterate(spark, adj, nodes, "out_deg", "pagerank", cfg)(
+      TemporalGraph.pushOut(_, _, col("score") / col("out_deg")))
 
   /** Weighted message pass over the struct-array CSR
     * `(src, salt, dsts: array<struct<dst, w>>, out_w)`: each entry ships

@@ -132,10 +132,11 @@ object SuperstepRunner {
     state.write.mode("overwrite").parquet(dataDir)
 
     // Per-partition lineage over the *written files* (stable across resumes):
-    // rows + an order-independent checksum (sum of row hashes).
+    // rows + an order-independent checksum (sum of row hashes). The
+    // partition rows sum to the total, so no separate count job runs.
     val reread = spark.read.parquet(dataDir)
     val cols = reread.columns.map(col).toSeq
-    val parts = reread
+    val perPart = reread
       .withColumn("__h", xxhash64(struct(cols: _*)))
       .groupBy(spark_partition_id().as("p"))
       .agg(
@@ -144,8 +145,9 @@ object SuperstepRunner {
         // a plain sum of hashes).
         expr("bit_xor(__h)").as("checksum"))
       .collect()
+    val rowCount = perPart.map(_.getLong(1)).sum
+    val parts = perPart
       .map(r => s"""{"p":${r.getInt(0)},"rows":${r.getLong(1)},"checksum":${r.getLong(2)}}""")
-    val rowCount = reread.count()
 
     val metricsJson = metrics.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
     val manifest =

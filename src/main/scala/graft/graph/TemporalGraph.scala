@@ -322,35 +322,13 @@ case class TemporalGraph(
    * Salted CSR-style out-adjacency `(src, salt, dsts: array<long>, out_deg)`
    * over distinct out-neighbours — the Spark answer to the reference's
    * HopExec adjacency walk (raphtory-cypher/src/hop/execution.rs), made
-   * hub-safe for power-law graphs (the north rule's "explicit salting for
-   * hub-turn skew"):
-   *
-   *  - a source with out-degree ≤ `maxShard` gets exactly ONE row (the CSR
-   *    benefit: a rank-join touches ~|V| rows, fan-out via `explode` after
-   *    the join);
-   *  - a hub with out-degree > `maxShard` is sharded into
-   *    ⌈deg/maxShard⌉ `(src, salt)` rows of ~maxShard neighbours each —
-   *    without this, a degree-10M hub is one ~80 MB collect_list buffer and
-   *    one giant row in a single task;
-   *  - `out_deg` carries the TOTAL distinct out-degree on every shard, so
-   *    consumers divide by the true degree without a merge;
-   *  - the `groupBy(src, salt)` runs on src-hash-partitioned data (salting
-   *    never adds an exchange: HashPartitioning(src) satisfies the clustered
-   *    distribution of (src, salt)), and the output STAYS partitioned by
-   *    src — iterative consumers that persist this and join on src every
-   *    superstep reuse the layout with zero adjacency re-shuffle.
+   * hub-safe for power-law graphs by [[TemporalGraph.saltedCsr]]. `out_deg`
+   * carries the TOTAL distinct out-degree on every shard, so consumers
+   * divide by the true degree without a merge.
    */
-  def adjacencyOut(maxShard: Int): DataFrame = {
-    val deg = simpleEdges.groupBy("src").agg(count(lit(1)).as("out_deg"))
-    simpleEdges
-      .join(deg, Seq("src"))
-      .withColumn(
-        "salt",
-        pmod(xxhash64(col("dst")), greatest(ceil(col("out_deg") / maxShard.toDouble), lit(1L)))
-          .cast("int"))
-      .groupBy("src", "salt")
-      .agg(collect_list("dst").as("dsts"), first("out_deg").as("out_deg"))
-  }
+  def adjacencyOut(maxShard: Int): DataFrame =
+    TemporalGraph.saltedCsr(simpleEdges, "src", "out_deg", Seq(col("dst")), maxShard)(
+      collect_list("dst").as("dsts"), first("out_deg").as("out_deg"))
 
   def adjacencyOut: DataFrame = adjacencyOut(TemporalGraph.DefaultMaxShard)
 
@@ -359,10 +337,8 @@ case class TemporalGraph(
    * (one row per distinct edge; integer weights keep downstream scores
    * exactly replayable, see [[graft.algos.PageRank.weighted]]): shards
    * `(src, salt, dsts: array<struct<dst, w>>, out_w)` where `out_w` is
-   * the TOTAL outgoing weight of src (repeated on every shard, like
-   * out_deg in [[adjacencyOut]]). Sharding is by edge count, so hub fan-
-   * out stays bounded regardless of the weight distribution; output is
-   * hash-partitioned on (src, salt) by the groupBy.
+   * the TOTAL outgoing weight of src. Sharding is by edge count, so hub
+   * fan-out stays bounded regardless of the weight distribution.
    *
    * The '(src, dst) unique, w ≥ 1' contract is ENFORCED here rather than
    * trusted: duplicate (src, dst) rows collapse by summing (multiplicity
@@ -386,33 +362,15 @@ case class TemporalGraph(
         .as("w"))
       .groupBy("src", "dst")
       .agg(sum("w").as("w"))
-    val deg = checked.groupBy("src")
-      .agg(count(lit(1)).as("out_deg"), sum("w").as("out_w"))
-    checked
-      .join(deg, Seq("src"))
-      .withColumn(
-        "salt",
-        pmod(xxhash64(col("dst")), greatest(ceil(col("out_deg") / maxShard.toDouble), lit(1L)))
-          .cast("int"))
-      .groupBy("src", "salt")
-      .agg(
-        collect_list(struct(col("dst"), col("w"))).as("dsts"),
-        first("out_w").as("out_w"))
+    TemporalGraph.saltedCsr(
+      checked, "src", "out_deg", Seq(col("dst")), maxShard, Seq(sum("w").as("out_w")))(
+      collect_list(struct(col("dst"), col("w"))).as("dsts"), first("out_w").as("out_w"))
   }
 
-  /** Salted CSR-style BOTH-direction adjacency `(node, salt, nbrs, deg)` —
-    * same sharding contract as [[adjacencyOut]]. */
-  def adjacencyBoth(maxShard: Int): DataFrame = {
-    val deg = undirectedPairs.groupBy("node").agg(count(lit(1)).as("deg"))
-    undirectedPairs
-      .join(deg, Seq("node"))
-      .withColumn(
-        "salt",
-        pmod(xxhash64(col("nbr")), greatest(ceil(col("deg") / maxShard.toDouble), lit(1L)))
-          .cast("int"))
-      .groupBy("node", "salt")
-      .agg(collect_list("nbr").as("nbrs"), first("deg").as("deg"))
-  }
+  /** Salted CSR-style BOTH-direction adjacency `(node, salt, nbrs, deg)`. */
+  def adjacencyBoth(maxShard: Int): DataFrame =
+    TemporalGraph.saltedCsr(undirectedPairs, "node", "deg", Seq(col("nbr")), maxShard)(
+      collect_list("nbr").as("nbrs"), first("deg").as("deg"))
 
   def adjacencyBoth: DataFrame = adjacencyBoth(TemporalGraph.DefaultMaxShard)
 
@@ -422,22 +380,14 @@ case class TemporalGraph(
     * (u, 0) on node v. One persisted frame lets a message pass that needs
     * both directions per superstep (HITS: hub along edges, auth along
     * reversed edges) pay ONE state join + ONE groupBy exchange instead of
-    * two of each. Same sharding/partitioning contract as [[adjacencyOut]]:
-    * output stays hash-partitioned on `node`. */
+    * two of each. */
   def adjacencySigned(maxShard: Int): DataFrame = {
     val ends = simpleEdges
       .select(col("src").as("node"), struct(col("dst").as("nbr"), lit(1).as("out")).as("e"))
       .unionByName(simpleEdges
         .select(col("dst").as("node"), struct(col("src").as("nbr"), lit(0).as("out")).as("e")))
-    val deg = ends.groupBy("node").agg(count(lit(1)).as("deg"))
-    ends
-      .join(deg, Seq("node"))
-      .withColumn(
-        "salt",
-        pmod(xxhash64(col("e.nbr"), col("e.out")), greatest(ceil(col("deg") / maxShard.toDouble), lit(1L)))
-          .cast("int"))
-      .groupBy("node", "salt")
-      .agg(collect_list("e").as("nbrs"), first("deg").as("deg"))
+    TemporalGraph.saltedCsr(ends, "node", "deg", Seq(col("e.nbr"), col("e.out")), maxShard)(
+      collect_list("e").as("nbrs"), first("deg").as("deg"))
   }
 
   def adjacencySigned: DataFrame = adjacencySigned(TemporalGraph.DefaultMaxShard)
@@ -449,6 +399,58 @@ object TemporalGraph {
     * big enough that non-hub sources stay single-row, small enough that a
     * hub row can't blow a task's memory. */
   val DefaultMaxShard: Int = 1 << 17
+
+  /**
+   * The one hub-sharding rule behind every salted CSR (the north rule's
+   * "explicit salting for hub-turn skew"). `rows` holds one row per
+   * (key, entry); the result has one row per `(key, salt)` carrying the
+   * caller's `aggs` — the collected entries and any `first(<total>)`:
+   *
+   *  - the per-key degree `deg` (row count, plus any `totals` such as the
+   *    weighted CSR's total weight) is joined back onto every row, so a
+   *    carried total is the TOTAL on every shard and consumers need no
+   *    merge;
+   *  - a key with degree ≤ `maxShard` gets exactly ONE row (the CSR
+   *    benefit: a rank-join touches ~|V| rows, fan-out via `explode` after
+   *    the join);
+   *  - a hub with degree > `maxShard` is sharded into ⌈deg/maxShard⌉
+   *    `(key, salt)` rows of ~maxShard entries each, salted by a hash of
+   *    the `hashed` entry columns — without this, a degree-10M hub is one
+   *    ~80 MB collect_list buffer and one giant row in a single task;
+   *  - the `groupBy(key, salt)` runs on key-hash-partitioned data (salting
+   *    never adds an exchange: HashPartitioning(key) satisfies the
+   *    clustered distribution of (key, salt)), and the output STAYS
+   *    partitioned by key — iterative consumers that persist this and join
+   *    on key every superstep reuse the layout with zero adjacency
+   *    re-shuffle.
+   */
+  private[graft] def saltedCsr(
+      rows: DataFrame,
+      key: String,
+      deg: String,
+      hashed: Seq[Column],
+      maxShard: Int,
+      totals: Seq[Column] = Nil)(aggs: Column*): DataFrame = {
+    val degs = rows.groupBy(key).agg(count(lit(1)).as(deg), totals: _*)
+    rows
+      .join(degs, Seq(key))
+      .withColumn(
+        "salt",
+        pmod(xxhash64(hashed: _*), greatest(ceil(col(deg) / maxShard.toDouble), lit(1L)))
+          .cast("int"))
+      .groupBy(key, "salt")
+      .agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** The plain out-CSR message pass: each shard row of `adj`
+    * `(src, salt, dsts, …)` joined to `scores(id, score)` ships `value` to
+    * every one of its dsts; `(id, msum)` sums what each node received. */
+  private[graft] def pushOut(adj: DataFrame, scores: DataFrame, value: Column): DataFrame =
+    adj
+      .join(scores, adj("src") === col("id"))
+      .select(explode(col("dsts")).as("id"), value.as("w"))
+      .groupBy("id")
+      .agg(sum("w").as("msum"))
 
   /** Build from a transcript table via [[EdgeBuilder]]. */
   def fromTranscripts(transcripts: DataFrame): TemporalGraph =

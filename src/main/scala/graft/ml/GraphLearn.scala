@@ -463,20 +463,14 @@ object GraphLearn {
       maxShard: Int = TemporalGraph.DefaultMaxShard): DataFrame = {
     require(length >= 1 && length <= 64, s"length=$length out of [1, 64]")
     require(nWalks >= 1 && nWalks <= 1024, s"nWalks=$nWalks out of [1, 1024]")
-    // salted temporal CSR over distinct (src, dst, ts) events — the
-    // adjacencyOut sharding contract, entries carry the event time
+    // salted temporal CSR over distinct (src, dst, ts) events; entries
+    // carry the event time
     val ev = g.edges.select(col("src"), col("dst"), col("ts")).distinct()
-    val deg = ev.groupBy("src").agg(count(lit(1)).as("deg"))
     Pin.scope { pins =>
-      val adj = pins.persist(ev
-        .join(deg, Seq("src"))
-        .withColumn(
-          "salt",
-          pmod(xxhash64(col("dst"), col("ts")),
-            greatest(ceil(col("deg") / maxShard.toDouble), lit(1L))).cast("int"))
-        .groupBy("src", "salt")
-        .agg(collect_list(struct(col("ts"), col("dst"))).as("evs"))
-        .repartition(col("src")))
+      val adj = pins.persist(
+        TemporalGraph.saltedCsr(ev, "src", "deg", Seq(col("dst"), col("ts")), maxShard)(
+          collect_list(struct(col("ts"), col("dst"))).as("evs"))
+          .repartition(col("src")))
 
       // frontier-only state: (start, walk, node, ts) — each pinned
       // frontier doubles as the corpus block (walkLoop)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.algos.{Betweenness, Hits, LabelPropagation, Louvain, Matching, PageRank, Reach, Scc}
+import graft.algos.{Betweenness, ConnectedComponents, Hits, LabelPropagation, Louvain, Matching, PageRank, Reach, Scc}
 import graft.bsp.{Pin, SuperstepRunner}
 import graft.bsp.SuperstepRunner.{RunConfig, Step}
 import graft.graph.TemporalGraph
@@ -92,6 +92,7 @@ class CacheHygieneSpec extends SparkSpec {
 
   private val owners: Seq[(String, () => DataFrame)] = Seq(
     "Betweenness.run" -> (() => Betweenness.run(spark, bridged)),
+    "ConnectedComponents.run" -> (() => ConnectedComponents.run(spark, bridged)),
     "Matching.locallyDominant" -> (() => Matching.locallyDominant(spark, bridged)),
     "Matching.auctionBipartite" -> (() => Matching.auctionBipartite(spark, bipartite)),
     "Louvain.run" -> (() => Louvain.run(spark, bridged)),

@@ -35,6 +35,9 @@ class SuperstepRunnerSpec extends SparkSpec {
     assert(manifest.get.contains("\"rows\":100"))
     assert(manifest.get.contains("\"partitions\":["))
     assert(manifest.get.contains("\"checksum\":"))
+    val parts = manifest.get.substring(manifest.get.indexOf("\"partitions\":"))
+    assert("\"rows\":(\\d+)".r.findAllMatchIn(parts).map(_.group(1).toLong).sum == 100L,
+      "the partitions' rows must sum to the manifest's rows")
 
     // Resume picks up at superstep 3 and runs only the remaining 2.
     var stepsRun = 0

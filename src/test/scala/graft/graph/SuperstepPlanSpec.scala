@@ -1,7 +1,7 @@
 package graft.graph
 
 import graft.SparkSpec
-import graft.algos.{Hits, LabelPropagation, PageRank}
+import graft.algos.{Hits, LabelPropagation, Louvain, PageRank}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
  * CSR adjacency (the big, static side) must NOT sit under a shuffle
  * exchange in the per-superstep message join — its cached layout
  * (hash-partitioned on the join key by construction, see
- * [[TemporalGraph.adjacencyOut]]) is reused every superstep, and only the
+ * [[TemporalGraph.saltedCsr]]) is reused every superstep, and only the
  * narrow state frame is exchanged. This is the steady-state cost model the
  * scaling gate depends on; a regression here re-shuffles the whole edge
  * set once (PageRank/LPA) or twice (HITS) per superstep.
@@ -76,7 +76,7 @@ class SuperstepPlanSpec extends SparkSpec {
       val adj = g.adjacencyOut(1 << 17).persist()
       adj.count()
       val state = g.nodes.select(col("id"), lit(0.5).as("score")).localCheckpoint(true)
-      assertAdjacencyStaysPut(PageRank.messages(adj, state))
+      assertAdjacencyStaysPut(TemporalGraph.pushOut(adj, state, col("score") / col("out_deg")))
       adj.unpersist(true)
     }
   }
@@ -137,29 +137,12 @@ class SuperstepPlanSpec extends SparkSpec {
     withShuffledJoins {
       // the per-level weighted CSR Louvain.localMoving builds: keyed by the
       // message source, persisted, hash-partitioned by the groupBy
-      val pairs = g.canonicalUndirected.withColumn("w", lit(1.0))
-      val bi = pairs
-        .select(col("a").as("other"), col("b").as("nbr"), col("w"))
-        .unionByName(pairs.select(col("b").as("other"), col("a").as("nbr"), col("w")))
-      val deg = bi.groupBy("other").agg(count(lit(1)).as("deg"))
-      val adj = bi
-        .join(deg, Seq("other"))
-        .withColumn(
-          "salt",
-          pmod(xxhash64(col("nbr")), greatest(ceil(col("deg") / 65536.0), lit(1L))).cast("int"))
-        .groupBy("other", "salt")
-        .agg(collect_list(struct(col("nbr"), col("w"))).as("entries"))
-        .persist()
+      val adj = Louvain.csr(g.canonicalUndirected.withColumn("w", lit(1.0))).persist()
       adj.count()
       val state = g.nodes
         .select(col("id"), col("id").as("com"), lit(1.0).as("k"))
         .localCheckpoint(true)
-      val wcom = adj
-        .join(state.select(col("id").as("other"), col("com").as("ocom")), Seq("other"))
-        .select(col("ocom"), explode(col("entries")).as("e"))
-        .groupBy(col("e.nbr").as("id"), col("ocom").as("cand"))
-        .agg(sum(col("e.w")).as("w_cand"))
-      assertAdjacencyStaysPut(wcom)
+      assertAdjacencyStaysPut(Louvain.communityWeights(adj, state))
       adj.unpersist(true)
     }
   }
