@@ -1,5 +1,6 @@
 package graft.algos
 
+import graft.bsp.Pin
 import graft.graph.TemporalGraph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -87,21 +88,22 @@ object Metrics {
 
   /** Local clustering coefficient per node: 2·tri(v) / (d·(d−1)) over
     * distinct non-self neighbours
-    * (reference .../local_clustering_coefficient.rs:66, batch variant :68). */
-  def localClusteringCoefficient(spark: SparkSession, g: TemporalGraph): DataFrame = {
+    * (reference .../local_clustering_coefficient.rs:66, batch variant :68).
+    * Pinned once; the caller owns the frame and frees it with [[Pin.release]]. */
+  def localClusteringCoefficient(spark: SparkSession, g: TemporalGraph): DataFrame = Pin.scope { pins =>
     val deg = g.undirectedPairs
       .filter(col("node") =!= col("nbr"))
       .groupBy(col("node").as("id"))
       .agg(count(lit(1)).as("d"))
-    val tri = Triangles.localCounts(spark, g)
-    deg
+    val tri = pins.own(Triangles.localCounts(spark, g))
+    pins.keep(pins.pin(deg
       .join(tri, Seq("id"), "left")
       .select(
         col("id"),
         when(col("d") >= 2,
           round(lit(2.0) * coalesce(col("triangles"), lit(0L)) / (col("d") * (col("d") - 1)), 6))
           .otherwise(lit(0.0))
-          .as("lcc"))
+          .as("lcc"))))
   }
 
   /** Directed graph density E / (N·(N−1))

@@ -23,12 +23,17 @@ import scala.util.Using
 object Pin {
 
   /** Eager local checkpoint with the inherited plan statistics dropped
-    * ([[org.apache.spark.sql.GraftSqlInternals.resetStats]]): output
-    * partitioning survives, so the next superstep's joins on the same key
-    * skip the exchange, while the BigInt size estimates that otherwise
-    * double in bit-length per superstep are reset. Eager, because a lazy
-    * checkpoint folds the whole superstep pipeline into the next action
-    * and loses AQE's per-stage planning of the materialization. */
+    * ([[org.apache.spark.sql.GraftSqlInternals.resetStats]]), so the BigInt
+    * size estimates that otherwise double in bit-length per superstep are
+    * reset. The pinned frame keeps whatever output partitioning its
+    * executed plan declared. With AQE off that is the key's
+    * `hashpartitioning`, and the next superstep's joins on the same key
+    * skip the exchange. Under AQE (Spark's default) it is
+    * `UnknownPartitioning(0)`: AQE reads the last shuffle locally, so the
+    * next superstep exchanges the pinned state again (ROADMAP direction 1).
+    * Eager, because a lazy checkpoint folds the whole superstep pipeline
+    * into the next action and loses AQE's per-stage planning of the
+    * materialization. */
   def pin(df: DataFrame): DataFrame = GraftSqlInternals.resetStats(df.localCheckpoint(true))
 
   /** Free each frame's blocks now: the checkpoint blocks behind a pinned

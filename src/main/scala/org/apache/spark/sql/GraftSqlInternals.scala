@@ -34,9 +34,9 @@ object GraftSqlInternals {
   /**
    * Drop the inherited `originStats`/`originConstraints` from a
    * checkpointed Dataset's `LogicalRDD` while *keeping* its output
-   * partitioning and ordering — so the next superstep's joins/aggregations
-   * on the same key skip the exchange, and the BigInt statistics can't
-   * snowball across iterations. Falls back to a stats-free rewrap when the
+   * partitioning and ordering (under AQE the checkpoint's partitioning is
+   * usually already unknown; see `graft.bsp.Pin.pin`), so the BigInt
+   * statistics can't snowball across iterations. Falls back to a stats-free rewrap when the
    * plan isn't a bare LogicalRDD.
    */
   def resetStats(df: DataFrame): DataFrame = {

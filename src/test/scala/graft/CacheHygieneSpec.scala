@@ -1,6 +1,6 @@
 package graft
 
-import graft.algos.{Betweenness, ConnectedComponents, Hits, LabelPropagation, Louvain, Matching, PageRank, Reach, Scc}
+import graft.algos.{Betweenness, ConnectedComponents, Hits, LabelPropagation, Louvain, Matching, Metrics, PageRank, Reach, Scc, Triangles}
 import graft.bsp.{Pin, SuperstepRunner}
 import graft.bsp.SuperstepRunner.{RunConfig, Step}
 import graft.graph.TemporalGraph
@@ -41,6 +41,12 @@ class CacheHygieneSpec extends SparkSpec {
     val pairs = Dedup.minHashLsh(docs, threshold = 0.5).collect()
     assert(pairs.nonEmpty)
     assert((persistedIds -- before).isEmpty, "minHashLsh must not leak cached frames")
+  }
+
+  test("Triangles.globalCount leaves no persisted frames behind") {
+    val before = persistedIds
+    assert(Triangles.globalCount(spark, bridged) == 2L)
+    assert((persistedIds -- before).isEmpty, "globalCount must not leak pinned phases")
   }
 
   test("simHashPairs leaves no persisted frames behind") {
@@ -106,7 +112,10 @@ class CacheHygieneSpec extends SparkSpec {
         spark, bridged, bridged.simpleEdges.withColumn("w", lit(2L)), PageRank.Config(maxIter = 5))),
     "Hits.run" -> (() => Hits.run(spark, bridged, Hits.Config(maxIter = 5))),
     "LabelPropagation.run" -> (() =>
-      LabelPropagation.run(spark, bridged, LabelPropagation.Config(maxIter = 5))))
+      LabelPropagation.run(spark, bridged, LabelPropagation.Config(maxIter = 5))),
+    "Triangles.localCounts" -> (() => Triangles.localCounts(spark, bridged)),
+    "Triangles.triangleRows" -> (() => Triangles.triangleRows(bridged)),
+    "Metrics.localClusteringCoefficient" -> (() => Metrics.localClusteringCoefficient(spark, bridged)))
 
   for ((name, run) <- owners)
     test(s"$name frees every internal cache; caller owns exactly the result") {

@@ -1,12 +1,42 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
+
+import scala.collection.mutable
 
 /** Shared local SparkSession for all specs. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Run `body` and return its result with the executed plan of every
+    * query it ran (actions, eager checkpoints, writes). */
+  def withExecutedPlans[A](body: => A): (A, Seq[SparkPlan]) = {
+    val plans = mutable.ArrayBuffer[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        plans.synchronized { plans += qe.executedPlan }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val out = body
+      // QueryExecutionListener delivery is async; wait until the captured
+      // plan count is stable (listenerBus.waitUntilEmpty is private[spark])
+      var prev = -1
+      var stable = 0
+      var waited = 0
+      while (stable < 3 && waited < 15000) {
+        Thread.sleep(250); waited += 250
+        val now = plans.synchronized(plans.size)
+        if (now == prev) stable += 1 else { stable = 0; prev = now }
+      }
+      (out, plans.synchronized(plans.toList))
+    } finally spark.listenerManager.unregister(listener)
+  }
 }
 
 object SparkSpec {

@@ -53,36 +53,16 @@ class RelSpec extends SparkSpec {
         col("id").cast("double") / lit(2e7)).as("score"), col("id"))
     // capture executed plans: the whole call must never run a GLOBAL sort
     // (TakeOrderedAndProject and per-partition work are fine)
-    val plans = scala.collection.mutable.ArrayBuffer[String]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
-        plans.synchronized { plans += qe.executedPlan.toString }
-      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      val got = ResultOps.median(vals.toDF(), "score")
-      // oracle: exact rank-n/2 element via a driver-side sort of the same
-      // deterministic values (cheap: generated locally, not via Spark)
-      val local = (0L until n).map(i =>
-        java.lang.Math.floorMod(i * 2654435761L, 1L << 31).toDouble + i.toDouble / 2e7)
-        .sorted
-      assert(got.contains(local((n / 2).toInt)), s"got $got want ${local((n / 2).toInt)}")
-      // QueryExecutionListener delivery is async; wait until the captured
-      // plan count is stable (listenerBus.waitUntilEmpty is private[spark])
-      var prev = -1
-      var stable = 0
-      var waited = 0
-      while (stable < 3 && waited < 15000) {
-        Thread.sleep(250); waited += 250
-        val now = plans.synchronized(plans.size)
-        if (now == prev) stable += 1 else { stable = 0; prev = now }
-      }
-      val globalSorts = plans.synchronized {
-        plans.filter(p => p.linesIterator.exists(l => l.contains("Sort ") && l.contains("], true,")))
-      }
-      assert(globalSorts.isEmpty, s"median ran a global sort:\n${globalSorts.headOption.getOrElse("")}")
-    } finally spark.listenerManager.unregister(listener)
+    val (got, plans) = withExecutedPlans(ResultOps.median(vals.toDF(), "score"))
+    // oracle: exact rank-n/2 element via a driver-side sort of the same
+    // deterministic values (cheap: generated locally, not via Spark)
+    val local = (0L until n).map(i =>
+      java.lang.Math.floorMod(i * 2654435761L, 1L << 31).toDouble + i.toDouble / 2e7)
+      .sorted
+    assert(got.contains(local((n / 2).toInt)), s"got $got want ${local((n / 2).toInt)}")
+    val globalSorts = plans.map(_.toString)
+      .filter(p => p.linesIterator.exists(l => l.contains("Sort ") && l.contains("], true,")))
+    assert(globalSorts.isEmpty, s"median ran a global sort:\n${globalSorts.headOption.getOrElse("")}")
   }
 
   test("median: forced iterative brackets + duplicate-dominated stall branch stay exact") {
