@@ -1,6 +1,6 @@
 package graft.algos
 
-import graft.bsp.SuperstepRunner
+import graft.bsp.{Pin, SuperstepRunner}
 import graft.bsp.SuperstepRunner.{RunConfig, Step}
 import graft.graph.TemporalGraph
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -47,11 +47,10 @@ object Centrality {
    *
    * @return (id, score)
    */
-  def eigenvector(spark: SparkSession, g: TemporalGraph, cfg: Config = Config()): DataFrame = {
-    val adj = g.adjacencyOut(cfg.maxShard).persist()
-    try eigenvectorOnAdjacency(spark, adj, g.nodes, cfg)
-    finally adj.unpersist(false)
-  }
+  def eigenvector(spark: SparkSession, g: TemporalGraph, cfg: Config = Config()): DataFrame =
+    Pin.scope { pins =>
+      eigenvectorOnAdjacency(spark, pins.persist(g.adjacencyOut(cfg.maxShard)), g.nodes, cfg)
+    }
 
   /** As [[eigenvector]] over a prebuilt (ideally persisted) salted CSR.
     *
@@ -64,12 +63,14 @@ object Centrality {
     * twice per superstep (measured: 0.077 GB shuffled/step vs PageRank's
     * 0.043 on the same graph). Same float ops in the same order — score
     * values are bit-identical (max is order-independent; the division
-    * happens once per node per iteration either way). */
+    * happens once per node per iteration either way). The normalized
+    * scores read the final state twice (row + max), so they are pinned
+    * once; the caller owns that frame and frees it with [[Pin.release]]. */
   def eigenvectorOnAdjacency(
       spark: SparkSession,
       adj: DataFrame,
       nodes: DataFrame,
-      cfg: Config = Config()): DataFrame = {
+      cfg: Config = Config()): DataFrame = Pin.scope { pins =>
     // raw = 1.0 with an implied sup-norm of 1.0 reproduces init score 1.0
     val init = nodes.select(col("id"), lit(1.0).as("recv"))
     def mxOver(state: DataFrame) =
@@ -104,7 +105,8 @@ object Centrality {
             }
           })
     }
-    result.state.crossJoin(mxOver(result.state)).select(col("id"), normed.as("score"))
+    val state = pins.own(result.state)
+    pins.keep(pins.pin(state.crossJoin(mxOver(state)).select(col("id"), normed.as("score"))))
   }
 
   /**
@@ -121,34 +123,32 @@ object Centrality {
       g: TemporalGraph,
       alpha: Double = 0.1,
       beta: Double = 1.0,
-      cfg: Config = Config()): DataFrame = {
+      cfg: Config = Config()): DataFrame = Pin.scope { pins =>
     require(alpha > 0.0 && alpha < 1.0, s"alpha=$alpha out of (0, 1)")
-    val adj = g.adjacencyOut(cfg.maxShard).persist()
-    try {
-      val init = g.nodes.select(col("id"), lit(beta).as("score"))
-      val result = SuperstepRunner.run(
-        spark,
-        init,
-        RunConfig(cfg.maxIter, cfg.checkpointDir, cfg.checkpointEvery, runId = "katz")) {
-        (state, _) =>
-          val recv = TemporalGraph.pushOut(adj, state.select(col("id"), col("score")), col("score"))
-          val newScore = lit(beta) + lit(alpha) * coalesce(col("msum"), lit(0.0))
-          val next = state
-            .select(col("id"), col("score").as("prev"))
-            .join(recv, Seq("id"), "left")
-            .select(col("id"), newScore.as("score"), abs(newScore - col("prev")).as("diff"))
-          Step(
-            next.select("id", "score", "diff"),
-            { m =>
-              if (cfg.tol <= 0.0) (false, Map.empty)
-              else {
-                val r = m.agg(max("diff")).first()
-                val d = if (r.isNullAt(0)) 0.0 else r.getDouble(0)
-                (d <= cfg.tol, Map("max_diff" -> d))
-              }
-            })
-      }
-      result.state.select("id", "score")
-    } finally adj.unpersist(false)
+    val adj = pins.persist(g.adjacencyOut(cfg.maxShard))
+    val init = g.nodes.select(col("id"), lit(beta).as("score"))
+    val result = SuperstepRunner.run(
+      spark,
+      init,
+      RunConfig(cfg.maxIter, cfg.checkpointDir, cfg.checkpointEvery, runId = "katz")) {
+      (state, _) =>
+        val recv = TemporalGraph.pushOut(adj, state.select(col("id"), col("score")), col("score"))
+        val newScore = lit(beta) + lit(alpha) * coalesce(col("msum"), lit(0.0))
+        val next = state
+          .select(col("id"), col("score").as("prev"))
+          .join(recv, Seq("id"), "left")
+          .select(col("id"), newScore.as("score"), abs(newScore - col("prev")).as("diff"))
+        Step(
+          next.select("id", "score", "diff"),
+          { m =>
+            if (cfg.tol <= 0.0) (false, Map.empty)
+            else {
+              val r = m.agg(max("diff")).first()
+              val d = if (r.isNullAt(0)) 0.0 else r.getDouble(0)
+              (d <= cfg.tol, Map("max_diff" -> d))
+            }
+          })
+    }
+    result.state.select("id", "score")
   }
 }

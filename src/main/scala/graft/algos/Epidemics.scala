@@ -1,6 +1,6 @@
 package graft.algos
 
-import graft.bsp.SuperstepRunner
+import graft.bsp.{Pin, SuperstepRunner}
 import graft.bsp.SuperstepRunner.{RunConfig, Step}
 import graft.graph.TemporalGraph
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -79,9 +79,10 @@ object Epidemics {
    * @param seeds DataFrame with an `id` column — the initially infected.
    * @return (id, infected, active, recovered) for every node the outbreak
    *         reached (matching the reference's map over infected nodes;
-   *         `recovered` is Long.MaxValue under SI / no recovery).
+   *         `recovered` is Long.MaxValue under SI / no recovery), pinned
+   *         once; the caller frees it with [[Pin.release]].
    */
-  def run(spark: SparkSession, g: TemporalGraph, seeds: DataFrame, cfg: Config): DataFrame = {
+  def run(spark: SparkSession, g: TemporalGraph, seeds: DataFrame, cfg: Config): DataFrame = Pin.scope { pins =>
     require(cfg.infectionProb >= 0.0 && cfg.infectionProb <= 1.0)
     // per-node deterministic draws
     val incub = cfg.incubationRate
@@ -90,20 +91,17 @@ object Epidemics {
     val recov = cfg.recoveryRate
       .map(r => expSample(r, lit(cfg.seed), lit("recov"), col("id")))
       .getOrElse(lit(null).cast("long")) // null = never recovers
-    val draws = g.nodes
-      .select(col("id"), incub.as("incub"), recov.as("recov"))
-      .persist()
+    val draws = pins.persist(g.nodes.select(col("id"), incub.as("incub"), recov.as("recov")))
 
     // transmissible temporal edge events: the per-event Bernoulli draw is a
     // pure column filter — events that fail the draw never enter any join
-    val transmissible = g.edges
+    val transmissible = pins.persist(g.edges
       .filter(col("src") =!= col("dst"))
       .filter(
         pmod(
           xxhash64(lit(cfg.seed), lit("transmit"), col("src"), col("dst"), col("ts"), col("event_id")),
           lit(1L << 20)).cast("double") < lit(cfg.infectionProb * (1L << 20)))
-      .select(col("src"), col("dst"), col("ts"))
-      .persist()
+      .select(col("src"), col("dst"), col("ts")))
 
     val init = g.nodes
       .join(seeds.select(col("id")).distinct().withColumn("s", lit(true)), Seq("id"), "left")
@@ -147,7 +145,7 @@ object Epidemics {
         })
     }
 
-    val out = result.state
+    val out = pins.own(result.state)
       .filter(col("infected").isNotNull)
       .join(draws, Seq("id"))
       .select(
@@ -156,10 +154,6 @@ object Epidemics {
         (col("infected") + col("incub")).as("active"),
         when(col("recov").isNull, lit(Long.MaxValue))
           .otherwise(col("infected") + col("incub") + col("recov")).as("recovered"))
-    val materialized = out.persist()
-    materialized.count()
-    draws.unpersist(false)
-    transmissible.unpersist(false)
-    materialized
+    pins.keep(pins.pin(out))
   }
 }

@@ -1,6 +1,6 @@
 package graft.algos
 
-import graft.bsp.SuperstepRunner
+import graft.bsp.{Pin, SuperstepRunner}
 import graft.bsp.SuperstepRunner.{RunConfig, Step}
 import graft.graph.TemporalGraph
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -40,8 +40,8 @@ object FastRP {
       normalizationStrength: Double = 0.5,
       iterWeights: Seq[Double] = Seq(1.0, 1.0, 0.5),
       seed: Long = 42L,
-      portable: Boolean = false): DataFrame = {
-    val pairs = g.undirectedPairs.persist()
+      portable: Boolean = false): DataFrame = Pin.scope { pins =>
+    val pairs = pins.persist(g.undirectedPairs)
     val deg = pairs.groupBy(col("node").as("id")).agg(count(lit(1)).as("deg"))
     val m = deg.count().toDouble
     val s = math.sqrt(m)
@@ -102,7 +102,6 @@ object FastRP {
             .as("emb"))
       Step(next.select("id", "deg", "emb"), _ => (false, Map.empty))
     }
-    pairs.unpersist(false)
     result.state.select("id", "emb")
   }
 }

@@ -1,6 +1,6 @@
 package graft.algos
 
-import graft.bsp.SuperstepRunner
+import graft.bsp.{Pin, SuperstepRunner}
 import graft.bsp.SuperstepRunner.{RunConfig, Step}
 import graft.graph.TemporalGraph
 import graft.ml.GraphLearn
@@ -56,61 +56,60 @@ object Independent {
       spark: SparkSession,
       g: TemporalGraph,
       maxRounds: Int = 256,
-      seed: Long = 42L): DataFrame = {
+      seed: Long = 42L): DataFrame = Pin.scope { pins =>
     // persisted hash-partitioned on `nbr`, the key of BOTH per-round joins
     // (the pair set is symmetric, so "neighbours of X" reads identically
     // through either column — the exclusion join below probes on nbr too);
     // the static side then never re-exchanges, only the shrinking frontier
-    val und = g.undirectedPairs.filter(col("node") =!= col("nbr"))
-      .repartition(col("nbr")).persist()
-    try {
-      // status: 0 undecided, 1 in, 2 out
-      val init = g.nodes.select(
-        col("id"), pri(seed, col("id")).as("h"), lit(0).as("status"))
-      val res = SuperstepRunner.run(
-        spark, init, RunConfig(maxSteps = maxRounds, runId = s"mis-$seed")) { (state, _) =>
-        val u = state.filter(col("status") === 0).select(col("id"), col("h"))
-        // smallest-π undecided neighbour per undecided node
-        val mn = und
-          .join(u.select(col("id").as("nbr"), col("h").as("nh")), Seq("nbr"))
-          .groupBy("node")
-          .agg(min(struct(col("nh"), col("nbr"))).as("mn"))
-        val winners = u
-          .join(mn, u("id") === mn("node"), "left")
-          .filter(
-            col("mn").isNull ||
-              before(col("h"), col("id"), col("mn.nh"), col("mn.nbr")))
-          .select(col("id"))
-        // symmetric pair set: joining winners on nbr and reading node is
-        // the same neighbour set as joining on node and reading nbr, but
-        // reuses und's nbr partitioning (zero static-side exchange)
-        val excluded = und
-          .join(winners.select(col("id").as("nbr")), Seq("nbr"))
-          .select(col("node").as("id"))
-          .distinct()
-        val next = state
-          .join(winners.withColumn("win", lit(true)), Seq("id"), "left")
-          .join(excluded.withColumn("excl", lit(true)), Seq("id"), "left")
-          .select(
-            col("id"), col("h"),
-            when(col("status") =!= 0, col("status"))
-              .when(col("win"), lit(1))
-              .when(col("excl"), lit(2))
-              .otherwise(lit(0)).as("status"))
-        Step(
-          next,
-          st => {
-            val undecided = st.filter(col("status") === 0).count()
-            (undecided == 0L, Map("undecided" -> undecided.toDouble))
-          })
-      }
-      if (!res.converged)
-        throw new IllegalStateException(
-          s"MIS did not converge in $maxRounds rounds (" +
-            s"${res.metrics.lastOption.flatMap(_.get("undecided")).getOrElse(-1.0)} " +
-            "nodes undecided) — a truncated result would be non-maximal; raise maxRounds")
-      res.state.select(col("id"), (col("status") === 1).as("in_mis"))
-    } finally und.unpersist(false)
+    val und = pins.persist(
+      g.undirectedPairs.filter(col("node") =!= col("nbr")).repartition(col("nbr")))
+    // status: 0 undecided, 1 in, 2 out
+    val init = g.nodes.select(
+      col("id"), pri(seed, col("id")).as("h"), lit(0).as("status"))
+    val res = SuperstepRunner.run(
+      spark, init, RunConfig(maxSteps = maxRounds, runId = s"mis-$seed")) { (state, _) =>
+      val u = state.filter(col("status") === 0).select(col("id"), col("h"))
+      // smallest-π undecided neighbour per undecided node
+      val mn = und
+        .join(u.select(col("id").as("nbr"), col("h").as("nh")), Seq("nbr"))
+        .groupBy("node")
+        .agg(min(struct(col("nh"), col("nbr"))).as("mn"))
+      val winners = u
+        .join(mn, u("id") === mn("node"), "left")
+        .filter(
+          col("mn").isNull ||
+            before(col("h"), col("id"), col("mn.nh"), col("mn.nbr")))
+        .select(col("id"))
+      // symmetric pair set: joining winners on nbr and reading node is
+      // the same neighbour set as joining on node and reading nbr, but
+      // reuses und's nbr partitioning (zero static-side exchange)
+      val excluded = und
+        .join(winners.select(col("id").as("nbr")), Seq("nbr"))
+        .select(col("node").as("id"))
+        .distinct()
+      val next = state
+        .join(winners.withColumn("win", lit(true)), Seq("id"), "left")
+        .join(excluded.withColumn("excl", lit(true)), Seq("id"), "left")
+        .select(
+          col("id"), col("h"),
+          when(col("status") =!= 0, col("status"))
+            .when(col("win"), lit(1))
+            .when(col("excl"), lit(2))
+            .otherwise(lit(0)).as("status"))
+      Step(
+        next,
+        st => {
+          val undecided = st.filter(col("status") === 0).count()
+          (undecided == 0L, Map("undecided" -> undecided.toDouble))
+        })
+    }
+    pins.own(res.state) // freed if the run did not converge
+    if (!res.converged)
+      throw new IllegalStateException(
+        s"MIS did not converge in $maxRounds rounds (" +
+          s"${res.metrics.lastOption.flatMap(_.get("undecided")).getOrElse(-1.0)} " +
+          "nodes undecided) — a truncated result would be non-maximal; raise maxRounds")
+    pins.keep(res.state).select(col("id"), (col("status") === 1).as("in_mis"))
   }
 
   /**
@@ -136,57 +135,56 @@ object Independent {
       spark: SparkSession,
       g: TemporalGraph,
       maxRounds: Int = 1024,
-      seed: Long = 42L): DataFrame = {
-    val und = g.undirectedPairs.filter(col("node") =!= col("nbr")).persist()
-    try {
-      val init = g.nodes.select(
-        col("id"), pri(seed, col("id")).as("h"), lit(null).cast("long").as("color"))
-      val res = SuperstepRunner.run(
-        spark, init, RunConfig(maxSteps = maxRounds, runId = s"jp-$seed")) { (state, _) =>
-        val uncol = state.filter(col("color").isNull)
-        // blocked: an uncolored smaller-π neighbour exists
-        val blocked = und
-          .join(
-            uncol.select(col("id").as("nbr"), col("h").as("nh")), Seq("nbr"))
-          .join(uncol.select(col("id").as("node"), col("h").as("oh")), Seq("node"))
-          .filter(before(col("nh"), col("nbr"), col("oh"), col("node")))
-          .select(col("node").as("id"))
-          .distinct()
-        // colored-neighbour color sets for the unblocked frontier
-        val colored = state.filter(col("color").isNotNull)
-        val cols = und
-          .join(
-            colored.select(col("id").as("nbr"), col("color").as("nc")), Seq("nbr"))
-          .groupBy("node")
-          .agg(sort_array(collect_set(col("nc"))).as("cs"))
-        val emptyCols = array().cast("array<bigint>")
-        val mex = element_at(
-          filter(
-            sequence(lit(0L), size(col("cs")).cast("long")),
-            x => !array_contains(col("cs"), x)),
-          1)
-        val newlyColored = uncol
-          .join(blocked.withColumn("blk", lit(true)), Seq("id"), "left")
-          .filter(col("blk").isNull)
-          .join(cols, uncol("id") === cols("node"), "left")
-          .withColumn("cs", coalesce(col("cs"), emptyCols))
-          .select(col("id"), mex.as("newc"))
-        val next = state
-          .join(newlyColored, Seq("id"), "left")
-          .select(col("id"), col("h"), coalesce(col("color"), col("newc")).as("color"))
-        Step(
-          next,
-          st => {
-            val remaining = st.filter(col("color").isNull).count()
-            (remaining == 0L, Map("uncolored" -> remaining.toDouble))
-          })
-      }
-      if (!res.converged)
-        throw new IllegalStateException(
-          s"Jones–Plassmann did not converge in $maxRounds rounds (" +
-            s"${res.metrics.lastOption.flatMap(_.get("uncolored")).getOrElse(-1.0)} " +
-            "nodes uncolored) — a truncated result has null colors; raise maxRounds")
-      res.state.select(col("id"), col("color"))
-    } finally und.unpersist(false)
+      seed: Long = 42L): DataFrame = Pin.scope { pins =>
+    val und = pins.persist(g.undirectedPairs.filter(col("node") =!= col("nbr")))
+    val init = g.nodes.select(
+      col("id"), pri(seed, col("id")).as("h"), lit(null).cast("long").as("color"))
+    val res = SuperstepRunner.run(
+      spark, init, RunConfig(maxSteps = maxRounds, runId = s"jp-$seed")) { (state, _) =>
+      val uncol = state.filter(col("color").isNull)
+      // blocked: an uncolored smaller-π neighbour exists
+      val blocked = und
+        .join(
+          uncol.select(col("id").as("nbr"), col("h").as("nh")), Seq("nbr"))
+        .join(uncol.select(col("id").as("node"), col("h").as("oh")), Seq("node"))
+        .filter(before(col("nh"), col("nbr"), col("oh"), col("node")))
+        .select(col("node").as("id"))
+        .distinct()
+      // colored-neighbour color sets for the unblocked frontier
+      val colored = state.filter(col("color").isNotNull)
+      val cols = und
+        .join(
+          colored.select(col("id").as("nbr"), col("color").as("nc")), Seq("nbr"))
+        .groupBy("node")
+        .agg(sort_array(collect_set(col("nc"))).as("cs"))
+      val emptyCols = array().cast("array<bigint>")
+      val mex = element_at(
+        filter(
+          sequence(lit(0L), size(col("cs")).cast("long")),
+          x => !array_contains(col("cs"), x)),
+        1)
+      val newlyColored = uncol
+        .join(blocked.withColumn("blk", lit(true)), Seq("id"), "left")
+        .filter(col("blk").isNull)
+        .join(cols, uncol("id") === cols("node"), "left")
+        .withColumn("cs", coalesce(col("cs"), emptyCols))
+        .select(col("id"), mex.as("newc"))
+      val next = state
+        .join(newlyColored, Seq("id"), "left")
+        .select(col("id"), col("h"), coalesce(col("color"), col("newc")).as("color"))
+      Step(
+        next,
+        st => {
+          val remaining = st.filter(col("color").isNull).count()
+          (remaining == 0L, Map("uncolored" -> remaining.toDouble))
+        })
+    }
+    pins.own(res.state) // freed if the run did not converge
+    if (!res.converged)
+      throw new IllegalStateException(
+        s"Jones–Plassmann did not converge in $maxRounds rounds (" +
+          s"${res.metrics.lastOption.flatMap(_.get("uncolored")).getOrElse(-1.0)} " +
+          "nodes uncolored) — a truncated result has null colors; raise maxRounds")
+    pins.keep(res.state).select(col("id"), col("color"))
   }
 }

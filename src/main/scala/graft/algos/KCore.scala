@@ -88,42 +88,40 @@ object KCore {
       spark: SparkSession,
       g: TemporalGraph,
       maxIter: Int = 100,
-      checkpointDir: Option[String] = None): DataFrame = {
+      checkpointDir: Option[String] = None): DataFrame = Pin.scope { pins =>
     // persisted hash-partitioned on the per-step join key (`nbr`): the
     // h-index join then reuses the layout every superstep instead of
     // re-exchanging the full pair frame (the r5 shape paid that exchange
     // per step; only the narrow state frame should move)
-    val pairs = g.undirectedPairs.repartition(col("nbr")).persist()
-    try {
-      val init = pairs
+    val pairs = pins.persist(g.undirectedPairs.repartition(col("nbr")))
+    val init = pairs
+      .groupBy(col("node").as("id"))
+      .agg(count(lit(1)).as("c"))
+    var prevSum = -1L
+    val result = SuperstepRunner.run(
+      spark,
+      init,
+      RunConfig(maxIter, checkpointDir, 10, runId = "coreness")) { (state, _) =>
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("node")
+        .orderBy(col("cn").desc, col("nbr"))
+      val h = pairs
+        .join(state.select(col("id").as("nbr"), col("c").as("cn")), Seq("nbr"))
+        .withColumn("rn", row_number().over(w).cast("long"))
         .groupBy(col("node").as("id"))
-        .agg(count(lit(1)).as("c"))
-      var prevSum = -1L
-      val result = SuperstepRunner.run(
-        spark,
-        init,
-        RunConfig(maxIter, checkpointDir, 10, runId = "coreness")) { (state, _) =>
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("node")
-          .orderBy(col("cn").desc, col("nbr"))
-        val h = pairs
-          .join(state.select(col("id").as("nbr"), col("c").as("cn")), Seq("nbr"))
-          .withColumn("rn", row_number().over(w).cast("long"))
-          .groupBy(col("node").as("id"))
-          .agg(max(least(col("cn"), col("rn"))).as("h"))
-        val next = state
-          .join(h, Seq("id"), "left")
-          .select(col("id"), least(col("c"), coalesce(col("h"), lit(0L))).as("c"))
-        Step(
-          next,
-          { m =>
-            val s = m.agg(coalesce(sum("c"), lit(0L))).first().getLong(0)
-            val done = s == prevSum
-            prevSum = s
-            (done, Map("sum_c" -> s.toDouble))
-          })
-      }
-      result.state.select(col("id"), col("c").as("coreness"))
-    } finally pairs.unpersist(false)
+        .agg(max(least(col("cn"), col("rn"))).as("h"))
+      val next = state
+        .join(h, Seq("id"), "left")
+        .select(col("id"), least(col("c"), coalesce(col("h"), lit(0L))).as("c"))
+      Step(
+        next,
+        { m =>
+          val s = m.agg(coalesce(sum("c"), lit(0L))).first().getLong(0)
+          val done = s == prevSum
+          prevSum = s
+          (done, Map("sum_c" -> s.toDouble))
+        })
+    }
+    result.state.select(col("id"), col("c").as("coreness"))
   }
 }

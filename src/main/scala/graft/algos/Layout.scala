@@ -1,6 +1,6 @@
 package graft.algos
 
-import graft.bsp.SuperstepRunner
+import graft.bsp.{Pin, SuperstepRunner}
 import graft.bsp.SuperstepRunner.{RunConfig, Step}
 import graft.graph.TemporalGraph
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -86,8 +86,8 @@ object Layout {
   def cohesiveFruchtermanReingold(
       spark: SparkSession,
       g: TemporalGraph,
-      cfg: Config = Config()): DataFrame = {
-    val comps = ConnectedComponents.run(spark, g) // (id, label)
+      cfg: Config = Config()): DataFrame = Pin.scope { pins =>
+    val comps = pins.own(ConnectedComponents.run(spark, g)) // (id, label)
     val nComps = comps.select("label").distinct().count()
     val neighbours =
       if (nComps <= 1) neighboursOf(g)
@@ -121,7 +121,7 @@ object Layout {
       spark: SparkSession,
       nodes: DataFrame,
       neighbours: DataFrame, // (id, nbr) symmetric, distinct
-      cfg: Config): DataFrame = {
+      cfg: Config): DataFrame = Pin.scope { pins =>
     val half = cfg.nodeStartSize / 2.0
     val cell = if (cfg.cellSize > 0) cfg.cellSize else 2.0 * cfg.scale
     val init = nodes.select(
@@ -130,7 +130,7 @@ object Layout {
       hashUniform(col("id"), 1, cfg.seed, half, cfg.portable).as("y"),
       lit(0.0).as("vx"),
       lit(0.0).as("vy"))
-    val nbr = neighbours.persist()
+    val nbr = pins.persist(neighbours)
 
     val result = SuperstepRunner.run(
       spark,
@@ -169,7 +169,6 @@ object Layout {
           col("vx"), col("vy"))
       Step(next, _ => (false, Map.empty))
     }
-    nbr.unpersist(false)
     result.state.select("id", "x", "y")
   }
 
@@ -210,7 +209,6 @@ object Layout {
     val cells = binned
       .groupBy("cx", "cy")
       .agg(count(lit(1)).as("cn"), avg(col("x")).as("mx"), avg(col("y")).as("my"))
-      .persist()
 
     // near-field: node × nodes in its 3×3 neighbourhood, exact pair force
     val offsets = Seq(-1L, 0L, 1L)
@@ -251,13 +249,11 @@ object Layout {
         sum(col("cn") * lit(s2) * (col("x") - col("mx")) / (col("d") * col("d"))).as("ffx"),
         sum(col("cn") * lit(s2) * (col("y") - col("my")) / (col("d") * col("d"))).as("ffy"))
 
-    val out = near
+    near
       .join(far, Seq("id"), "outer")
       .select(
         col("id"),
         (coalesce(col("nfx"), lit(0.0)) + coalesce(col("ffx"), lit(0.0))).as("rfx"),
         (coalesce(col("nfy"), lit(0.0)) + coalesce(col("ffy"), lit(0.0))).as("rfy"))
-    cells.unpersist(false)
-    out
   }
 }

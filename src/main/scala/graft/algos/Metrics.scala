@@ -57,11 +57,10 @@ object Metrics {
 
   /** Global reciprocity |reciprocated edges| / |edges|, self-loops excluded
     * (reference metrics/reciprocity.rs:97). */
-  def globalReciprocity(g: TemporalGraph): Double = {
-    val e = g.simpleEdges.filter(col("src") =!= col("dst")).persist()
+  def globalReciprocity(g: TemporalGraph): Double = Pin.scope { pins =>
+    val e = pins.persist(g.simpleEdges.filter(col("src") =!= col("dst")))
     val inter = e.intersect(e.select(col("dst").as("src"), col("src").as("dst"))).count()
     val total = e.count()
-    e.unpersist(false)
     if (total == 0) 0.0 else inter.toDouble / total
   }
 

@@ -1,6 +1,6 @@
 package graft.algos
 
-import graft.bsp.SuperstepRunner
+import graft.bsp.{Pin, SuperstepRunner}
 import graft.bsp.SuperstepRunner.{RunConfig, Step}
 import graft.graph.TemporalGraph
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -22,8 +22,8 @@ object Paths {
    *         the result deterministic where the reference's is
    *         iteration-order dependent).
    */
-  def sssp(spark: SparkSession, g: TemporalGraph, source: Long, cutoff: Int): DataFrame = {
-    val edges = g.simpleEdges.persist()
+  def sssp(spark: SparkSession, g: TemporalGraph, source: Long, cutoff: Int): DataFrame = Pin.scope { pins =>
+    val edges = pins.persist(g.simpleEdges)
     val init = spark
       .range(1)
       .select(lit(source).as("id"), lit(0).as("dist"), array(lit(source)).as("path"))
@@ -52,7 +52,6 @@ object Paths {
           (done, Map("visited" -> c.toDouble))
         })
     }
-    edges.unpersist(false)
     result.state.select("id", "dist", "path")
   }
 
@@ -75,7 +74,8 @@ object Paths {
    *    lexicographically-smallest (dist, path) struct — deterministic
    *    where the reference's heap order is not.
    *
-   * @return (id, dist, path) for reached nodes (targets if given).
+   * @return (id, dist, path) for reached nodes (targets if given),
+   *         pinned once; the caller frees it with [[Pin.release]].
    */
   def dijkstra(
       spark: SparkSession,
@@ -84,7 +84,7 @@ object Paths {
       targets: Option[Seq[Long]] = None,
       weightCol: Option[String] = None,
       direction: String = "both",
-      maxIter: Int = 200): DataFrame = {
+      maxIter: Int = 200): DataFrame = Pin.scope { pins =>
     val weighted = weightCol match {
       case Some(c) =>
         g.edges
@@ -93,7 +93,7 @@ object Paths {
           .agg(min("w").as("w"))
       case None => g.simpleEdges.select(col("src"), col("dst"), lit(1.0).as("w"))
     }
-    val w = (direction match {
+    val w = pins.persist(direction match {
       case "out" => weighted
       case "in"  => weighted.select(col("dst").as("src"), col("src").as("dst"), col("w"))
       case "both" =>
@@ -102,7 +102,7 @@ object Paths {
           .groupBy("src", "dst")
           .agg(min("w").as("w"))
       case other => throw new IllegalArgumentException(s"direction=$other")
-    }).persist()
+    })
 
     val init = g.nodes.select(
       col("id"),
@@ -139,14 +139,13 @@ object Paths {
           (c == 0, Map("relaxed" -> c.toDouble))
         })
     }
-    w.unpersist(false)
-    val reached = result.state
+    val reached = pins.own(result.state)
       .filter(col("dist") =!= Double.PositiveInfinity)
       .select("id", "dist", "path")
-    targets match {
+    pins.keep(pins.pin(targets match {
       case Some(ts) => reached.filter(col("id").isin(ts: _*))
       case None     => reached
-    }
+    }))
   }
 
   /** Distances-only wrapper over [[dijkstra]] with out-direction weights —
@@ -173,9 +172,9 @@ object Paths {
       spark: SparkSession,
       g: TemporalGraph,
       seeds: Seq[(Long, Long)],
-      maxIter: Int = 100): DataFrame = {
+      maxIter: Int = 100): DataFrame = Pin.scope { pins =>
     import spark.implicits._
-    val events = g.edges.select(col("src"), col("dst"), col("ts")).persist()
+    val events = pins.persist(g.edges.select(col("src"), col("dst"), col("ts")))
     val init = seeds.toDF("id", "taint_ts")
 
     val result = SuperstepRunner.run(
@@ -201,7 +200,6 @@ object Paths {
           (c == 0, Map("changed" -> c.toDouble))
         })
     }
-    events.unpersist(false)
     result.state.select("id", "taint_ts")
   }
 }

@@ -1,5 +1,6 @@
 package graft.algos
 
+import graft.bsp.Pin
 import graft.graph.TemporalGraph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -42,17 +43,13 @@ object RichClub {
       windowSize: Int): Double = {
     require(windowSize > 0, "windowSize must be positive")
     val nChunks = views.length / windowSize
-    val club = aggregate.degrees.filter(col("deg") >= k).select("id").persist()
-    try {
-      val nClub = club.count()
-      if (nClub <= 1 || nChunks == 0) return 0.0
-      val snapEdges = views
+    maxChunkDensity(aggregate.degrees, k, nChunks, windowSize) {
+      views
         .take(nChunks * windowSize)
         .zipWithIndex
         .map { case (v, i) => v.canonicalUndirected.withColumn("snap", lit(i.toLong)) }
         .reduce(_ unionByName _)
-      maxChunkDensity(snapEdges, club, nClub, windowSize)
-    } finally club.unpersist(false)
+    }
   }
 
   /** Tumbling fast path: the snapshots are `g.rolling(step, step, align)`
@@ -73,11 +70,8 @@ object RichClub {
         val start = math.floorDiv(t0, alignMs) * alignMs
         val nSnaps = math.floorDiv(t1 - start, stepMs) + 1
         val nChunks = nSnaps / windowSize
-        val club = g.degrees.filter(col("deg") >= k).select("id").persist()
-        try {
-          val nClub = club.count()
-          if (nClub <= 1 || nChunks == 0) return 0.0
-          val snapEdges = g.edges
+        maxChunkDensity(g.degrees, k, nChunks, windowSize) {
+          g.edges
             .filter(col("src") =!= col("dst"))
             .select(
               least(col("src"), col("dst")).as("a"),
@@ -85,32 +79,34 @@ object RichClub {
               floor((col("ts") - start) / stepMs).cast("long").as("snap"))
             .filter(col("snap") < nChunks * windowSize.toLong)
             .distinct()
-          maxChunkDensity(snapEdges, club, nClub, windowSize)
-        } finally club.unpersist(false)
+        }
       case _ => 0.0
     }
   }
 
   /** Max over chunks of |edges present in every snapshot of the chunk| /
-    * C(nClub, 2). `snapEdges` must be distinct (snap, a, b) rows. */
-  private def maxChunkDensity(
-      snapEdges: DataFrame,
-      club: DataFrame,
-      nClub: Long,
-      windowSize: Int): Double = {
-    val row = snapEdges
-      .join(club.withColumnRenamed("id", "a"), Seq("a"), "left_semi")
-      .join(club.withColumnRenamed("id", "b"), Seq("b"), "left_semi")
-      .withColumn("chunk", floor(col("snap") / windowSize))
-      .groupBy("chunk", "a", "b")
-      .agg(count(lit(1)).as("n"))
-      .filter(col("n") === windowSize.toLong)
-      .groupBy("chunk")
-      .agg(count(lit(1)).as("stable"))
-      .agg(max(col("stable")).as("best"))
-      .first()
-    val best = if (row.isNullAt(0)) 0L else row.getLong(0)
-    val possible = nClub * (nClub - 1) / 2
-    best.toDouble / possible.toDouble
+    * C(nClub, 2), for the club of nodes with `deg` ≥ k; 0.0 when the club
+    * has at most one node or there is no full chunk (then `snapEdges` is
+    * never built). `snapEdges` must be distinct (snap, a, b) rows. */
+  private def maxChunkDensity(degrees: DataFrame, k: Long, nChunks: Long, windowSize: Int)(
+      snapEdges: => DataFrame): Double = Pin.scope { pins =>
+    val club = pins.persist(degrees.filter(col("deg") >= k).select("id"))
+    val nClub = club.count()
+    if (nClub <= 1 || nChunks == 0) 0.0
+    else {
+      val row = snapEdges
+        .join(club.withColumnRenamed("id", "a"), Seq("a"), "left_semi")
+        .join(club.withColumnRenamed("id", "b"), Seq("b"), "left_semi")
+        .withColumn("chunk", floor(col("snap") / windowSize))
+        .groupBy("chunk", "a", "b")
+        .agg(count(lit(1)).as("n"))
+        .filter(col("n") === windowSize.toLong)
+        .groupBy("chunk")
+        .agg(count(lit(1)).as("stable"))
+        .agg(max(col("stable")).as("best"))
+        .first()
+      val best = if (row.isNullAt(0)) 0L else row.getLong(0)
+      best.toDouble / (nClub * (nClub - 1) / 2).toDouble
+    }
   }
 }

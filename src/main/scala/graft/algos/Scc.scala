@@ -135,9 +135,9 @@ object Scc {
       val newly = pins.persist(reached.filter(col("hit")).select(col("id"), col("c").as("root")))
       val nNew = newly.count()
       pins.release(reached)
-      // localCheckpoint: truncates the O(rounds) union lineage AND lets the
+      // pinned: truncates the O(rounds) union lineage AND lets the
       // previous round's accumulator blocks be freed now
-      assigned = pins.replace(assigned, assigned.unionByName(newly).localCheckpoint(true))
+      assigned = pins.replace(assigned, Pin.pin(assigned.unionByName(newly)))
 
       // shrink the working graph
       val prevNodes = nodes
@@ -155,12 +155,12 @@ object Scc {
     }
 
     // canonicalize: label = min node id per component (roots are the max).
-    // The output is materialized so every internal cache (including the
-    // accumulated `assigned` checkpoint) is freed when the scope ends —
-    // after this call the only cached blocks left are the (|V|-row) result.
+    // The output is pinned and kept, so every internal cache (including
+    // the accumulated `assigned` pin) is freed when the scope ends — after
+    // this call the only cached blocks left are the (|V|-row) result.
     val canon = assigned
       .groupBy("root")
       .agg(min("id").as("label"))
-    assigned.join(canon, Seq("root")).select("id", "label").localCheckpoint(true)
+    pins.keep(pins.pin(assigned.join(canon, Seq("root")).select("id", "label")))
   }
 }

@@ -1,5 +1,6 @@
 package graft.algos
 
+import graft.bsp.Pin
 import graft.graph.TemporalGraph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -33,11 +34,10 @@ import org.apache.spark.sql.functions._
  *
  * Scale notes (power-law safe):
  *  - triangles are enumerated DEGREE-ORIENTED (each undirected edge
- *    directed from its (degree, id)-lower endpoint; wedges open at the
- *    lowest-rank corner): per-key wedge candidates are bounded by the
- *    oriented out-degree (O(√m) on any graph) instead of a hub's full
- *    degree — an id-ordered enumeration puts O(deg²) wedge rows under one
- *    hub join key;
+ *    directed from its (degree, id)-lower endpoint, then intersected over
+ *    [[Triangles]]' forward lists): a list holds the oriented out-degree
+ *    (O(√m) on any graph) instead of a hub's full degree — an id-ordered
+ *    enumeration puts O(deg²) wedge rows under one hub join key;
  *  - per-entity event lists (star centres, pairs — and hence triangles,
  *    whose events are the union of three pairs) are capped at
  *    `maxEventsPerEntity`: entities above the cap are EXCLUDED and
@@ -294,39 +294,37 @@ object TemporalMotifs {
 
   /**
    * Degree-oriented triangle enumeration over a canonical undirected edge
-   * set `(a, b)` (a < b, no self-loops): each edge is directed from its
-   * (degree, id)-lower endpoint ([[Triangles.orient]]), wedges open at the lowest-rank corner and
-   * close along the orientation — every triangle is produced exactly once
-   * and the per-join-key wedge fan-out is bounded by the oriented
-   * out-degree (O(√m)), not a hub's raw degree. Returns id-sorted corners
-   * (x1 < x2 < x3), the role layout the counting kernels expect.
+   * set `(a, b)` (a < b, no self-loops), on [[Triangles]]' pinned forward
+   * lists: each edge is directed from its (degree, id)-lower endpoint and
+   * closes a triangle with every common forward neighbour of its ends, so
+   * every triangle is produced exactly once and a hub's list holds only
+   * its oriented out-degree (O(√m)), not its raw degree. The phases are
+   * held by `pins`. Returns id-sorted corners (x1 < x2 < x3), the role
+   * layout the counting kernels expect.
    */
-  private[algos] def orientedTriangles(und: DataFrame): DataFrame = {
-    // `oriented` feeds THREE branches of the triangle plan (both wedge legs
-    // and the closing probe); persist it for the duration of this call or
-    // each branch recomputes the degree joins from scratch — measured 8.3 s
-    // vs 0.9 s for the whole enumeration on the 100k-node bench RA graph.
-    val oriented = Triangles.orient(und, Triangles.degree(und)).persist()
-    val w1 = oriented.select(col("u"), col("v").as("w1"), col("dv").as("d1"))
-    val w2 = oriented.select(col("u"), col("v").as("w2"), col("dv").as("d2"))
-    val wedges = w1
-      .join(w2, Seq("u"))
-      .filter(col("d1") < col("d2") || (col("d1") === col("d2") && col("w1") < col("w2")))
-    // Recover the middle corner by sorting, NOT by (u+w1+w2)-x1-x3: node
+  private[algos] def orientedTriangles(und: DataFrame, pins: Pin.Scope): DataFrame =
+    // Recover the middle corner by sorting, NOT by (u+v+w)-x1-x3: node
     // ids are full-range xxhash64 longs, so the 3-way sum overflows (and
     // raises under Spark 4's default ANSI mode).
-    val tris = wedges
-      .join(oriented.select(col("u").as("w1"), col("v").as("w2")), Seq("w1", "w2"))
-      .select(array_sort(array(col("u"), col("w1"), col("w2"))).as("s"))
+    Triangles.triangles(Triangles.forwardGraph(und, pins))
+      .select(array_sort(array(col("u"), col("v"), col("w"))).as("s"))
       .select(
         element_at(col("s"), 1).as("x1"),
         element_at(col("s"), 2).as("x2"),
         element_at(col("s"), 3).as("x3"))
-      .persist()
-    tris.count() // materialize while `oriented` is cached …
-    oriented.unpersist(false) // … then release the intermediate immediately
-    tris // persisted; [[global]]/[[local]] unpersist after their census job
-  }
+
+  /** Each triangle's three corner pairs `(tri, p, q)`, the keys its events
+    * are looked up by in `pairEvents`. */
+  private def trianglePairs(tris: DataFrame): DataFrame =
+    tris
+      .withColumn("tri", struct(col("x1"), col("x2"), col("x3")))
+      .select(
+        col("tri"),
+        explode(array(
+          struct(col("x1").as("p"), col("x2").as("q")),
+          struct(col("x2").as("p"), col("x3").as("q")),
+          struct(col("x1").as("p"), col("x3").as("q")))).as("pq"))
+      .select(col("tri"), col("pq.p").as("p"), col("pq.q").as("q"))
 
   /** Global 40-dim census at one delta. @return (motif_id 0..39, count). */
   def global(
@@ -353,15 +351,14 @@ object TemporalMotifs {
       spark: SparkSession,
       g: TemporalGraph,
       deltas: Seq[Long],
-      maxEventsPerEntity: Int = DefaultMaxEventsPerEntity): DataFrame = {
+      maxEventsPerEntity: Int = DefaultMaxEventsPerEntity): DataFrame = Pin.scope { pins =>
     import spark.implicits._
     require(deltas.nonEmpty, "globalMulti: need at least one delta")
     val deltaArr: Array[Long] = deltas.toArray // serializable, loop-friendly
     val nD = deltaArr.length
-    val ev = g.edges
+    val ev = pins.persist(g.edges
       .filter(col("src") =!= col("dst"))
-      .select(col("src"), col("dst"), col("ts"), col("event_id"))
-      .persist()
+      .select(col("src"), col("dst"), col("ts"), col("event_id")))
     ev.count()
     // hub guard: entities above the event cap are excluded BEFORE any
     // collect_list builds their (multi-GB) row; the exclusions are
@@ -377,7 +374,7 @@ object TemporalMotifs {
     // where the old Seq[(Long, Long, Int)] encoder boxed a tuple per event.
     // `pairEvents` is persisted because the pair census, the undirected edge
     // set AND the triangle event lists all derive from this one exchange. --
-    val pairEvents = ev
+    val pairEvents = pins.persist(ev
       .select(
         least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"),
@@ -390,8 +387,7 @@ object TemporalMotifs {
       .agg(sort_array(collect_list(col("e"))).as("evs"))
       .select(
         col("a"), col("b"),
-        col("evs.ts").as("ts"), col("evs.event_id").as("eid"), col("evs.dir").as("dir"))
-      .persist()
+        col("evs.ts").as("ts"), col("evs.event_id").as("eid"), col("evs.dir").as("dir")))
     pairEvents.count() // materialize the shared exchange before forking jobs
 
     // The three census blocks are INDEPENDENT jobs over cached inputs;
@@ -447,21 +443,13 @@ object TemporalMotifs {
 
     // -- triangle block: degree-oriented enumeration over the pair keys
     // (the groupBy(a, b) output IS the distinct undirected edge set, so the
-    // cached exchange is reused instead of a second distinct over ev) --
+    // cached exchange is reused instead of a second distinct over ev). Its
+    // phases are pinned through `pins` from this thread alone; the caller
+    // thread only awaits --
     val fTri8 = Future {
-      val und = pairEvents.select(col("a"), col("b"))
-      val tris = orientedTriangles(und)
-      val triPairs = tris
-        .withColumn("tri", struct(col("x1"), col("x2"), col("x3")))
-        .select(
-          col("tri"),
-          explode(array(
-            struct(col("x1").as("p"), col("x2").as("q")),
-            struct(col("x2").as("p"), col("x3").as("q")),
-            struct(col("x1").as("p"), col("x3").as("q")))).as("pq"))
-        .select(col("tri"), col("pq.p").as("p"), col("pq.q").as("q"))
-      val triEvents = triEventLists(triPairs, pairEvents)
-      val v = sumVectors(
+      val tris = orientedTriangles(pairEvents.select(col("a"), col("b")), pins)
+      val triEvents = triEventLists(trianglePairs(tris), pairEvents)
+      sumVectors(
         triEvents
           .select(
             col("tri").as[(Long, Long, Long)],
@@ -481,16 +469,11 @@ object TemporalMotifs {
             out
           },
         8 * nD)
-      tris.unpersist(false)
-      v
     }
 
     val two8 = Await.result(fTwo8, Duration.Inf)
     val star24 = Await.result(fStar24, Duration.Inf)
     val tri8 = Await.result(fTri8, Duration.Inf)
-
-    ev.unpersist(false)
-    pairEvents.unpersist(false)
 
     // assemble per delta: star24 − cycled two8 ++ two8 ++ tri8
     // (reference :63-74, :293; the adjustment is linear per delta slice)
@@ -518,18 +501,18 @@ object TemporalMotifs {
    * triangle credits all three corners without re-running per role.
    *
    * @return (id, motif_id 0..39, count) — 40 rows per node, same slot
-   *         layout as [[global]].
+   *         layout as [[global]], pinned once; the caller frees it with
+   *         [[Pin.release]].
    */
   def local(
       spark: SparkSession,
       g: TemporalGraph,
       deltaMs: Long,
-      maxEventsPerEntity: Int = DefaultMaxEventsPerEntity): DataFrame = {
+      maxEventsPerEntity: Int = DefaultMaxEventsPerEntity): DataFrame = Pin.scope { pins =>
     import spark.implicits._
-    val ev = g.edges
+    val ev = pins.persist(g.edges
       .filter(col("src") =!= col("dst"))
-      .select(col("src"), col("dst"), col("ts"), col("event_id"))
-      .persist()
+      .select(col("src"), col("dst"), col("ts"), col("event_id")))
     ev.count()
     // hub guard — see [[global]]; exclusions observable via [[droppedEntities]]
     val hn = broadcast(heavyNodes(ev, maxEventsPerEntity).select("node"))
@@ -537,7 +520,7 @@ object TemporalMotifs {
 
     // -- two-node block: one kernel per pair, credited to both endpoints
     // (same primitive-array extraction + shared exchange as [[global]]) --
-    val pairEvents = ev
+    val pairEvents = pins.persist(ev
       .select(
         least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"),
@@ -550,8 +533,7 @@ object TemporalMotifs {
       .agg(sort_array(collect_list(col("e"))).as("evs"))
       .select(
         col("a"), col("b"),
-        col("evs.ts").as("ts"), col("evs.event_id").as("eid"), col("evs.dir").as("dir"))
-      .persist()
+        col("evs.ts").as("ts"), col("evs.event_id").as("eid"), col("evs.dir").as("dir")))
     val twoByNode = sumByNode(
       pairEvents
         .select(col("a").as[Long], col("b").as[Long], col("ts").as[Array[Long]], col("dir").as[Array[Int]])
@@ -577,20 +559,9 @@ object TemporalMotifs {
       .toDF("id", "star")
 
     // -- triangle block: kernel once per triangle, credited to all corners --
-    val und = pairEvents.select(col("a"), col("b"))
-    val tris = orientedTriangles(und)
-
-    val triPairs = tris
-      .withColumn("tri", struct(col("x1"), col("x2"), col("x3")))
-      .select(
-        col("tri"),
-        explode(array(
-          struct(col("x1").as("p"), col("x2").as("q")),
-          struct(col("x2").as("p"), col("x3").as("q")),
-          struct(col("x1").as("p"), col("x3").as("q")))).as("pq"))
-      .select(col("tri"), col("pq.p").as("p"), col("pq.q").as("q"))
+    val tris = orientedTriangles(pairEvents.select(col("a"), col("b")), pins)
     val triByNode = sumByNode(
-      triEventLists(triPairs, pairEvents)
+      triEventLists(trianglePairs(tris), pairEvents)
         .select(
           col("tri").as[(Long, Long, Long)],
           col("ts").as[Array[Long]], col("src").as[Array[Long]], col("dst").as[Array[Long]])
@@ -616,13 +587,8 @@ object TemporalMotifs {
             "when i < 32 then two[i - 24] " +
             "else tri[i - 32] end as count))")).as("m"))
       .select(col("id"), col("m.motif_id").as("motif_id"), col("m.count").as("count"))
-    // materialize before releasing the cached inputs the plan depends on
-    val result = out.persist()
-    result.count()
-    ev.unpersist(false)
-    pairEvents.unpersist(false)
-    tris.unpersist(false)
-    result
+    // materialized before the scope frees the cached inputs it reads
+    pins.keep(pins.pin(out))
   }
 
   /** Per-triangle sorted event lists, rebuilt from the cached per-pair

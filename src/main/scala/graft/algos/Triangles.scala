@@ -29,7 +29,7 @@ object Triangles {
 
   /** Global triangle count. */
   def globalCount(spark: SparkSession, g: TemporalGraph): Long = Pin.scope { pins =>
-    val r = intersections(forwardGraph(g, pins))
+    val r = intersections(forwardGraph(g.canonicalUndirected, pins))
       .agg(sum(size(col("common")).cast("long")).as("triangles"))
       .first()
     if (r.isNullAt(0)) 0L else r.getLong(0)
@@ -42,7 +42,7 @@ object Triangles {
     * neighbours connected in either direction. Pinned once; the caller
     * owns the frame and frees it with [[Pin.release]]. */
   def localCounts(spark: SparkSession, g: TemporalGraph): DataFrame = Pin.scope { pins =>
-    val counts = triangles(forwardGraph(g, pins))
+    val counts = triangles(forwardGraph(g.canonicalUndirected, pins))
       .select(explode(array(col("u"), col("v"), col("w"))).as("id"))
       .groupBy("id")
       .agg(count(lit(1)).as("triangles"))
@@ -52,11 +52,11 @@ object Triangles {
   /** One row per triangle (u, v, w), canonically ordered by the degree
     * orientation. Pinned once; the caller owns the frame. */
   def triangleRows(g: TemporalGraph): DataFrame = Pin.scope { pins =>
-    pins.keep(pins.pin(triangles(forwardGraph(g, pins))))
+    pins.keep(pins.pin(triangles(forwardGraph(g.canonicalUndirected, pins))))
   }
 
   /** Per-node degree `(id, d)` of a canonical undirected edge set `(a, b)`. */
-  private[algos] def degree(und: DataFrame): DataFrame =
+  private def degree(und: DataFrame): DataFrame =
     und
       .select(col("a").as("id"))
       .union(und.select(col("b").as("id")))
@@ -64,25 +64,25 @@ object Triangles {
       .agg(count(lit(1)).as("d"))
 
   /** Orient each canonical edge `(a, b)` from its smaller (degree, id)
-    * endpoint to the larger: `(u, v, dv)` with `dv` the degree of `v`. */
-  private[algos] def orient(und: DataFrame, deg: DataFrame): DataFrame = {
+    * endpoint to the larger: `(u, v)`. */
+  private def orient(und: DataFrame, deg: DataFrame): DataFrame = {
     val aLower = col("da") < col("db") || (col("da") === col("db") && col("a") < col("b"))
     und
       .join(deg.select(col("id").as("a"), col("d").as("da")), Seq("a"))
       .join(deg.select(col("id").as("b"), col("d").as("db")), Seq("b"))
       .select(
         when(aLower, col("a")).otherwise(col("b")).as("u"),
-        when(aLower, col("b")).otherwise(col("a")).as("v"),
-        when(aLower, col("db")).otherwise(col("da")).as("dv"))
+        when(aLower, col("b")).otherwise(col("a")).as("v"))
   }
 
-  /** The pinned phases: oriented edges `(u, v)` and forward lists
-    * `(node, fwd)`. The canonical edges and degrees are freed as soon as
-    * the orientation is pinned; `pins` frees the rest. */
-  private def forwardGraph(g: TemporalGraph, pins: Pin.Scope): (DataFrame, DataFrame) = {
-    val und = pins.pin(g.canonicalUndirected)
+  /** The pinned phases over a canonical undirected edge set `(a, b)`:
+    * oriented edges `(u, v)` and forward lists `(node, fwd)`. The pinned
+    * canonical edges and degrees are freed as soon as the orientation is
+    * pinned; `pins` frees the rest. */
+  private[algos] def forwardGraph(canonical: DataFrame, pins: Pin.Scope): (DataFrame, DataFrame) = {
+    val und = pins.pin(canonical)
     val deg = pins.pin(degree(und))
-    val oriented = pins.pin(orient(und, deg).select("u", "v"))
+    val oriented = pins.pin(orient(und, deg))
     pins.release(und, deg)
     val fwd = pins.pin(
       oriented.groupBy(col("u").as("node")).agg(sort_array(collect_list(col("v"))).as("fwd")))
@@ -99,6 +99,7 @@ object Triangles {
       .select(col("u"), col("v"), array_intersect(col("fu"), col("fv")).as("common"))
   }
 
-  private def triangles(graph: (DataFrame, DataFrame)): DataFrame =
+  /** One row per triangle `(u, v, w)`, ordered by the orientation. */
+  private[algos] def triangles(graph: (DataFrame, DataFrame)): DataFrame =
     intersections(graph).select(col("u"), col("v"), explode(col("common")).as("w"))
 }

@@ -1,6 +1,6 @@
 package graft.algos
 
-import graft.bsp.SuperstepRunner
+import graft.bsp.{Pin, SuperstepRunner}
 import graft.bsp.SuperstepRunner.{RunConfig, Step}
 import graft.graph.TemporalGraph
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -56,22 +56,25 @@ object Truss {
 
   /** As [[run]], also returning every peel round's metrics (`wallMs`,
     * `removed`, `affected`, `edges`) — the evidence that per-round cost
-    * tracks the removal neighbourhood rather than |E|. */
+    * tracks the removal neighbourhood rather than |E|. Each round's
+    * `removed`/`aff` frames are persisted through the run's scope: the
+    * evaluator frees them once the next state is pinned, a throw frees
+    * them with the scope. */
   def runWithMetrics(
       spark: SparkSession,
       g: TemporalGraph,
       k: Int,
-      maxRounds: Int = 64): (DataFrame, List[Map[String, Double]]) = {
+      maxRounds: Int = 64): (DataFrame, List[Map[String, Double]]) = Pin.scope { pins =>
     require(k >= 2, s"k=$k must be >= 2")
     val thresh = (k - 2).toLong
     val init = supported(g.canonicalUndirected) // (a, b, support)
 
     val res = SuperstepRunner.run(
       spark, init, RunConfig(maxSteps = maxRounds, runId = s"truss-$k")) { (state, _) =>
-      val removed = state.filter(col("support") < thresh).persist()
+      val removed = pins.persist(state.filter(col("support") < thresh))
       val nRemoved = removed.count()
       if (nRemoved == 0L) {
-        removed.unpersist(false)
+        pins.release(removed)
         Step(
           state.select("a", "b", "support"),
           st => (true, Map("removed" -> 0.0, "affected" -> 0.0, "edges" -> st.count().toDouble)))
@@ -82,14 +85,13 @@ object Truss {
           .distinct()
         // survivors incident to a removed edge's endpoint — the only edges
         // whose support can have changed
-        val aff = surv
+        val aff = pins.persist(surv
           .join(touched.select(col("node").as("a")), Seq("a"), "left_semi")
           .select("a", "b")
           .unionByName(
             surv.join(touched.select(col("node").as("b")), Seq("b"), "left_semi")
               .select("a", "b"))
-          .distinct()
-          .persist()
+          .distinct())
         val nAffected = aff.count()
         // survivor neighbour arrays ONLY for affected endpoints
         val affNodes = aff.select(col("a").as("node"))
@@ -112,8 +114,7 @@ object Truss {
         Step(
           next,
           st => {
-            removed.unpersist(false)
-            aff.unpersist(false)
+            pins.release(removed, aff)
             val c = st.count()
             (false, Map(
               "removed" -> nRemoved.toDouble,

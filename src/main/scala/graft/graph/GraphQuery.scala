@@ -4,6 +4,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{col, lit}
 
+import graft.bsp.Pin
 import graft.rel.Predicates
 import graft.rel.Predicates._
 
@@ -87,14 +88,16 @@ object GraphQuery {
     * page as a DataFrame. With an `algorithm` clause the document's view
     * chain composes FIRST (window/layers/filters), the algorithm runs on
     * the composed view, and `select.sort/offset/limit` page its output —
-    * the same order the reference's GraphQL algorithm plugins apply. */
+    * the same order the reference's GraphQL algorithm plugins apply. The
+    * algorithm's own result is freed here and the page is pinned once: the
+    * caller owns it and frees it with [[graft.bsp.Pin.release]]. */
   def run(pg: PropertyGraph, json: String): DataFrame = {
     val spec = parse(json)
     val viewed = GraphViews.applyViews(pg, spec.view)
     val sort = spec.select.sort
     spec.algorithm match {
-      case Some(a) =>
-        val out = runAlgorithm(a, viewed)
+      case Some(a) => Pin.scope { pins =>
+        val out = pins.own(runAlgorithm(a, viewed))
         // default stable order: by id for per-node results; global scalar
         // results (e.g. triangle_count) sort by their first column
         val defaultSort =
@@ -102,10 +105,11 @@ object GraphQuery {
           else if (out.columns.take(2).sameElements(Array("a", "b")))
             Seq(GraphViews.SortKey("a"), GraphViews.SortKey("b")) // edge-shaped (k-truss)
           else Seq(GraphViews.SortKey(out.columns.head))
-        GraphViews.resultPage(
+        pins.keep(pins.pin(GraphViews.resultPage(
           out,
           if (sort.nonEmpty) sort else defaultSort,
-          spec.select.offset, spec.select.limit)
+          spec.select.offset, spec.select.limit)))
+      }
       case None =>
         // empty sort → each resolver's own deterministic default (nodes
         // sort by id; edges by (src, dst) — edges carry no `id` column)

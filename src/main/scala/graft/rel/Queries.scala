@@ -1394,13 +1394,9 @@ object Queries {
       // |out ∩ in| / |out| summed over nodes, self-loops excluded
       // (reference reciprocity.rs:97-117)
       (s, d) => {
-        val e = eventGraph(s, d).simpleEdges.filter(col("src") =!= col("dst")).persist()
-        val rev = e.select(col("dst").as("src"), col("src").as("dst"))
-        val inter = e.intersect(rev).count().toDouble
-        val total = e.count().toDouble
-        e.unpersist(false)
         import s.implicits._
-        Seq(inter / total).toDF("r").select(round(col("r"), 6).as("reciprocity"))
+        Seq(Metrics.globalReciprocity(eventGraph(s, d))).toDF("r")
+          .select(round(col("r"), 6).as("reciprocity"))
       },
       Some(
         s"""WITH e0 AS ($eventEdgesSql),
@@ -5171,17 +5167,10 @@ object Queries {
       // explained by degree sequence alone). Both legs + the rewiring
       // replay exactly in DuckDB.
       (s, d) => {
-        def recip(edges: org.apache.spark.sql.DataFrame): Double = {
-          val e = TemporalGraph(edges).simpleEdges
-            .filter(col("src") =!= col("dst")).persist()
-          val rev = e.select(col("dst").as("src"), col("src").as("dst"))
-          val r = e.intersect(rev).count().toDouble / e.count().toDouble
-          e.unpersist(false)
-          r
-        }
         val g = eventGraph(s, d)
-        val obs = recip(g.edges)
-        val nul = recip(graft.graph.NullModels.configurationModel(g.edges, seed = 21L))
+        val obs = Metrics.globalReciprocity(g)
+        val nul = Metrics.globalReciprocity(
+          TemporalGraph(graft.graph.NullModels.configurationModel(g.edges, seed = 21L)))
         import s.implicits._
         Seq((obs, nul)).toDF("o", "n").select(
           round(col("o"), 6).as("observed"),

@@ -3,6 +3,7 @@ package graft.server
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.bsp.Pin
 import graft.graph.{CypherLite, GraphQuery}
 import graft.sources.GraphStore
 
@@ -182,7 +183,9 @@ final class QueryServer(
         try {
           val g = st.read()
           val df = if (cypher) CypherLite.run(g, body) else GraphQuery.run(g, body)
-          (200, render(df))
+          // free a pinned page now, not when the ContextCleaner gets to it; a no-op
+          // for lazy (Cypher) frames
+          try (200, render(df)) finally Pin.release(df)
         } catch {
           case e: IllegalArgumentException => (400, err(e.getMessage))
           case NonFatal(e) => (500, err(s"${e.getClass.getSimpleName}: ${e.getMessage}"))

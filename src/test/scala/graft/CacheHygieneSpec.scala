@@ -1,6 +1,6 @@
 package graft
 
-import graft.algos.{Betweenness, ConnectedComponents, Hits, LabelPropagation, Louvain, Matching, Metrics, PageRank, Reach, Scc, Triangles}
+import graft.algos.{Betweenness, Centrality, Components, ConnectedComponents, Epidemics, FastRP, Hits, Independent, KCore, LabelPropagation, Layout, Louvain, Matching, Metrics, PageRank, Paths, Reach, Scc, TemporalMotifs, Triangles, Truss}
 import graft.bsp.{Pin, SuperstepRunner}
 import graft.bsp.SuperstepRunner.{RunConfig, Step}
 import graft.graph.TemporalGraph
@@ -8,7 +8,8 @@ import graft.ml.{Dedup, GraphLearn}
 import org.apache.spark.sql.{DataFrame, GraftSqlInternals}
 import org.apache.spark.sql.functions.{col, lit}
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
+import scala.jdk.CollectionConverters._
 
 /**
  * Cache-lifecycle contract for the operators the round-2 review flagged as
@@ -16,8 +17,9 @@ import java.nio.file.Files
  * returns (and its materialized result is released), the session's
  * persistent-RDD registry must be back to its pre-call size. Dedup's LSH
  * paths now run persist-free; the iterative operators free every internal
- * cache (also when a superstep throws) and return a single pinned frame
- * the caller owns.
+ * cache (also when a superstep or a checkpoint commit throws) and return a
+ * single pinned frame the caller owns. A lint keeps every other src/main
+ * cache site on [[Pin]].
  */
 class CacheHygieneSpec extends SparkSpec {
 
@@ -115,7 +117,26 @@ class CacheHygieneSpec extends SparkSpec {
       LabelPropagation.run(spark, bridged, LabelPropagation.Config(maxIter = 5))),
     "Triangles.localCounts" -> (() => Triangles.localCounts(spark, bridged)),
     "Triangles.triangleRows" -> (() => Triangles.triangleRows(bridged)),
-    "Metrics.localClusteringCoefficient" -> (() => Metrics.localClusteringCoefficient(spark, bridged)))
+    "Metrics.localClusteringCoefficient" -> (() => Metrics.localClusteringCoefficient(spark, bridged)),
+    "Centrality.eigenvector" -> (() =>
+      Centrality.eigenvector(spark, bridged, Centrality.Config(maxIter = 5, tol = 0.0))),
+    "Centrality.katz" -> (() => Centrality.katz(spark, bridged, cfg = Centrality.Config(maxIter = 5))),
+    "Paths.sssp" -> (() => Paths.sssp(spark, bridged, source = 1L, cutoff = 4)),
+    "Paths.dijkstra" -> (() => Paths.dijkstra(spark, bridged, source = 1L)),
+    "Paths.temporalReachability" -> (() => Paths.temporalReachability(spark, bridged, Seq(1L -> 0L))),
+    "Epidemics.run" -> (() => Epidemics.run(spark, bridged, seedOne, infectAll)),
+    "TemporalMotifs.local" -> (() => TemporalMotifs.local(spark, bridged, deltaMs = 5L)),
+    "KCore.coreness" -> (() => KCore.coreness(spark, bridged)),
+    "Independent.maximalIndependentSet" -> (() => Independent.maximalIndependentSet(spark, bridged)),
+    "Independent.jonesPlassmann" -> (() => Independent.jonesPlassmann(spark, bridged)),
+    "FastRP.run" -> (() => FastRP.run(spark, bridged)),
+    "Truss.run" -> (() => Truss.run(spark, bridged, k = 3)),
+    "Layout.fruchtermanReingold" -> (() =>
+      Layout.fruchtermanReingold(spark, bridged, Layout.Config(iterations = 3))),
+    "Components.outComponent" -> (() => Components.outComponent(spark, bridged, seed = 1L)))
+
+  private def seedOne = spark.range(1, 2).toDF("id")
+  private val infectAll = Epidemics.Config(infectionProb = 1.0, initialInfection = 0L)
 
   for ((name, run) <- owners)
     test(s"$name frees every internal cache; caller owns exactly the result") {
@@ -154,5 +175,53 @@ class CacheHygieneSpec extends SparkSpec {
         checkpointDir = Some(notADir.toString), checkpointEvery = 1)))
       assert((persistedIds -- before).isEmpty, "a failed run must free its CSR and state")
     } finally Files.delete(notADir)
+  }
+
+  test("Epidemics, Layout, coreness, Katz and SCC free their static frames when a checkpoint commit throws") {
+    // as above: the first commit cannot create its directory under a file
+    val notADir = Files.createTempFile("graft-ckpt", ".file")
+    val dir = Some(notADir.toString)
+    try {
+      val before = persistedIds
+      intercept[Exception](Epidemics.run(spark, bridged, seedOne, infectAll.copy(checkpointDir = dir)))
+      intercept[Exception](
+        Layout.fruchtermanReingold(spark, bridged, Layout.Config(iterations = 5, checkpointDir = dir)))
+      intercept[Exception](KCore.coreness(spark, bridged, checkpointDir = dir))
+      intercept[Exception](Centrality.katz(
+        spark, bridged, cfg = Centrality.Config(checkpointDir = dir, checkpointEvery = 1)))
+      intercept[Exception](Scc.run(spark, bridged, Scc.Config(checkpointDir = dir)))
+      assert((persistedIds -- before).isEmpty, "a failed run must free its static frames and state")
+    } finally Files.delete(notADir)
+  }
+
+  /** src/main files that may cache outside [[Pin]], each with its reason. */
+  private val cacheAllowed: Map[String, String] = Map(
+    "graft/bsp/Pin.scala" -> "the lifecycle itself",
+    "graft/Bench.scala" -> "bench harness: persists its inputs and leg frames itself",
+    "graft/bench/Scaling.scala" -> "bench harness: persists its inputs in set-up",
+    "graft/tools/KernelBench.scala" -> "bench harness: persists the kernel inputs once",
+    "graft/graph/TemporalGraph.scala" ->
+      "cacheView/uncacheView: a public cache the caller owns (the reference's CachedView)",
+    "graft/vectors/VectorisedGraph.scala" ->
+      "its localCheckpoints predate Pin; how Pin.pin's stats reset changes their plans is unmeasured")
+
+  test("no persist, cache or localCheckpoint outside Pin") {
+    val root = Path.of("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root (no $root)")
+    val site = """\.persist\(\)|\.cache\(\)|\.localCheckpoint\(""".r
+    val files = {
+      val walk = Files.walk(root)
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList finally walk.close()
+    }
+    val hits = for {
+      f <- files
+      rel = root.relativize(f).toString
+      if !cacheAllowed.contains(rel)
+      (line, no) <- Files.readAllLines(f).asScala.zipWithIndex
+      code = line.trim
+      if !(code.startsWith("//") || code.startsWith("*") || code.startsWith("/*"))
+      if site.findFirstIn(code).nonEmpty
+    } yield s"$rel:${no + 1}: $code"
+    assert(hits.isEmpty, s"cache outside Pin.scope:\n${hits.mkString("\n")}")
   }
 }

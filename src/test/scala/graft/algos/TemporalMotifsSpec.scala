@@ -1,6 +1,7 @@
 package graft.algos
 
 import graft.SparkSpec
+import graft.bsp.Pin
 import graft.graph.TemporalGraph
 import org.apache.spark.sql.functions._
 
@@ -163,9 +164,7 @@ class TemporalMotifsSpec extends SparkSpec {
       } yield (i, j, k)).toSet
     }
     val und = canon.toDF("a", "b")
-    val got = TemporalMotifs
-      .orientedTriangles(und)
-      .collect()
+    val got = Pin.scope(pins => TemporalMotifs.orientedTriangles(und, pins).collect())
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .toSet
     assert(got == expected, s"missing=${expected -- got} extra=${got -- expected}")
@@ -193,12 +192,13 @@ class TemporalMotifsSpec extends SparkSpec {
     val ids = ev.select("src").as[Long].collect()
     assert(ids.exists(id => math.abs(id) > (Long.MaxValue / 3)), s"ids not full-range: ${ids.toSeq}")
     val g = graft.graph.TemporalGraph(ev)
-    val tri = TemporalMotifs
+    val tri = Pin.scope(pins => TemporalMotifs
       .orientedTriangles(
         ev.select(
           org.apache.spark.sql.functions.least(col("src"), col("dst")).as("a"),
-          org.apache.spark.sql.functions.greatest(col("src"), col("dst")).as("b")).distinct())
-      .collect()
+          org.apache.spark.sql.functions.greatest(col("src"), col("dst")).as("b")).distinct(),
+        pins)
+      .collect())
     assert(tri.length == 2, s"expected 2 triangles, got ${tri.toSeq}")
     tri.foreach(r => assert(r.getLong(0) < r.getLong(1) && r.getLong(1) < r.getLong(2)))
     // full census must complete (previously raised) and count triangle motifs
@@ -220,7 +220,7 @@ class TemporalMotifsSpec extends SparkSpec {
     val und = g.edges
       .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
       .distinct()
-    val tris = TemporalMotifs.orientedTriangles(und).collect()
+    val tris = Pin.scope(pins => TemporalMotifs.orientedTriangles(und, pins).collect())
     assert(tris.length == 100, s"expected 100 hub-ring triangles, got ${tris.length}")
     assert(tris.forall(r => Seq(r.getLong(0), r.getLong(1), r.getLong(2)).contains(hub)))
   }

@@ -90,6 +90,23 @@ class QueryServerSpec extends SparkSpec {
     } finally srv.stop()
   }
 
+  test("served algorithm requests free every block they pinned") {
+    val work = Files.createTempDirectory("graft-server-pins").toString
+    val srv = new QueryServer(spark, work)
+    val port = srv.start()
+    try {
+      post(port, "/graphs/g", edgesJson)
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      for (algo <- Seq("pagerank", "eigenvector")) {
+        val (c, b) = post(port, "/query/g", s"""{"algorithm":{"name":"$algo","params":{"iterCount":3}}}""")
+        assert(c == 200, b)
+        assert(mapper.readTree(b).get("rowCount").asInt == 4, b)
+      }
+      val left = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+      assert(left.isEmpty, s"served requests left pinned blocks $left")
+    } finally srv.stop()
+  }
+
   test("error envelopes: 404 unknown graph, 400 bad documents, path traversal") {
     val work = Files.createTempDirectory("graft-server-err").toString
     val srv = new QueryServer(spark, work)
