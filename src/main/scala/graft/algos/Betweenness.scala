@@ -1,6 +1,7 @@
 package graft.algos
 
-import graft.bsp.Pin
+import graft.bsp.{Pin, SuperstepRunner}
+import graft.bsp.SuperstepRunner.{RunConfig, Step}
 import graft.graph.TemporalGraph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -15,9 +16,10 @@ import org.apache.spark.sql.functions._
  * ALL sources run simultaneously: state is keyed by (source, node), so the
  * forward phase is one frontier join per BFS level for every source at
  * once, and the backward (dependency-accumulation) phase is one join per
- * level descending. Cost is O(k·V) state and O(diameter) supersteps —
- * exact betweenness is inherently quadratic; use `k` to sample sources at
- * scale (the reference offers the same escape hatch).
+ * level descending, each phase one [[SuperstepRunner]] run. Cost is O(k·V)
+ * state and O(diameter) supersteps — exact betweenness is inherently
+ * quadratic; use `k` to sample sources at scale (the reference offers the
+ * same escape hatch).
  * The result is pinned: the caller owns it (free with `Pin.release`).
  */
 object Betweenness {
@@ -31,51 +33,45 @@ object Betweenness {
     val nodes = pins.persist(g.nodes)
     val n = nodes.count()
 
-    val sources = k match {
-      case Some(kk) => nodes.orderBy("id").limit(kk).select(col("id").as("s"))
-      case None => nodes.select(col("id").as("s"))
-    }
+    val sources = k.fold(nodes)(kk => nodes.orderBy("id").limit(kk)).select(col("id").as("s"))
 
     // ---- forward phase: per-(source, node) BFS distance + path counts ----
-    // state: (s, v, dist, sigma)
-    var state = pins.pin(
-      sources.select(col("s"), col("s").as("v"), lit(0).as("dist"), lit(1.0).as("sigma")))
-    var level = 0
-    var frontierCount = state.count()
-    var maxLevel = 0
-    while (frontierCount > 0) {
-      val frontier = state.filter(col("dist") === level)
-      val expanded = frontier
-        .join(edges, frontier("v") === edges("src"))
+    // state: (s, v, dist, sigma); superstep k expands the level k − 1
+    // frontier and converges on the first empty level. BFS depth is below
+    // n, so n supersteps always reach it.
+    val fwd = SuperstepRunner.run(
+      spark,
+      sources.select(col("s"), col("s").as("v"), lit(0).as("dist"), lit(1.0).as("sigma")),
+      RunConfig(maxSteps = n.toInt, runId = "betweenness-forward")) { (state, step) =>
+      val expanded = state
+        .filter(col("dist") === step - 1)
+        .join(edges, col("v") === edges("src"))
         .groupBy(col("s"), col("dst").as("v"))
         .agg(sum("sigma").as("sig"))
       val newly = expanded
         .join(state.select(col("s"), col("v")), Seq("s", "v"), "left_anti")
-        .select(col("s"), col("v"), lit(level + 1).as("dist"), col("sig").as("sigma"))
-      state = pins.replace(state, Pin.pin(state.unionByName(newly)))
-      frontierCount = state.filter(col("dist") === level + 1).count()
-      if (frontierCount > 0) maxLevel = level + 1
-      level += 1
+        .select(col("s"), col("v"), lit(step).as("dist"), col("sig").as("sigma"))
+      Step(state.unionByName(newly), m => {
+        val reached = m.filter(col("dist") === step).count()
+        (reached == 0, Map("reached" -> reached.toDouble))
+      })
     }
+    val state = pins.own(fwd.state)
+    val maxLevel = fwd.steps - 1
 
     // ---- backward phase: dependency accumulation by descending level ----
-    // delta: (s, v, delta); betweenness accumulates level by level.
-    var delta = pins.pin(state.select(col("s"), col("v"), lit(0.0).as("delta")))
-    var acc = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("bc", org.apache.spark.sql.types.DoubleType))))
-
-    for (l <- maxLevel to 1 by -1) {
+    // state: (s, v, delta). Superstep k pushes level l = maxLevel − k + 1
+    // onto level l − 1; a level's delta is final before it is read. Level
+    // 0 (the sources) adds nothing to betweenness, so its update is skipped.
+    val dependency = pins.own(SuperstepRunner.run(
+      spark,
+      state.select(col("s"), col("v"), lit(0.0).as("delta")),
+      RunConfig(maxSteps = maxLevel - 1, runId = "betweenness-backward")) { (delta, step) =>
+      val l = maxLevel - step + 1
       val w = state
         .filter(col("dist") === l)
         .join(delta, Seq("s", "v"))
         .select(col("s"), col("v").as("w"), col("sigma").as("sigma_w"), col("delta").as("delta_w"))
-      // betweenness contribution of the popped level (w != s always here,
-      // since dist >= 1)
-      acc = pins.replace(acc, Pin.pin(acc.unionByName(
-        w.groupBy(col("w").as("id")).agg(sum("delta_w").as("bc")))))
       // predecessors: v --edge--> w with dist(v) = l − 1
       val contrib = w
         .join(edges, w("w") === edges("dst"))
@@ -85,13 +81,18 @@ object Betweenness {
           Seq("s", "v"))
         .groupBy(col("s"), col("v"))
         .agg(sum(col("sigma") / col("sigma_w") * (lit(1.0) + col("delta_w"))).as("dinc"))
-      delta = pins.replace(delta, Pin.pin(
+      Step(
         delta
           .join(contrib, Seq("s", "v"), "left")
-          .select(col("s"), col("v"), (col("delta") + coalesce(col("dinc"), lit(0.0))).as("delta"))))
-    }
+          .select(col("s"), col("v"), (col("delta") + coalesce(col("dinc"), lit(0.0))).as("delta")),
+        _ => (false, Map.empty))
+    }.state)
 
-    val summed = acc.groupBy("id").agg(sum("bc").as("bc"))
+    // bc(v) = Σ_s delta(s, v) over dist ≥ 1, i.e. v ≠ s
+    val summed = dependency
+      .filter(col("v") =!= col("s"))
+      .groupBy(col("v").as("id"))
+      .agg(sum("delta").as("bc"))
     Pin.pin(
       nodes
         .join(summed, Seq("id"), "left")

@@ -51,8 +51,10 @@ import org.apache.spark.sql.functions._
  * pattern). Per round: one CSR⋈state join + explode, one (node, cand)
  * partial-aggregated tally, one (com) aggregate for Σ_tot joined back.
  * Aggregation shrinks the graph geometrically, so level cost is dominated
- * by level 1. All iterative state flows through SuperstepRunner (lineage
- * truncation + checkpoint/resume lineage manifests).
+ * by level 1. Each level's local moving is a SuperstepRunner run (lineage
+ * truncation + checkpoint/resume lineage manifests); the outer level loop
+ * is not, because its four per-level frames are aggregated from the
+ * previous level's (see the runner's header).
  */
 object Louvain {
 

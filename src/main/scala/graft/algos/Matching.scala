@@ -1,6 +1,7 @@
 package graft.algos
 
-import graft.bsp.Pin
+import graft.bsp.{Pin, SuperstepRunner}
+import graft.bsp.SuperstepRunner.{RunConfig, Step}
 import graft.graph.TemporalGraph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -78,17 +79,14 @@ object Matching {
     // cardinality lift cannot change this algorithm's output — reject the
     // flag rather than silently ignore it (the result IS always maximal)
     require(!cfg.maxCardinality, "maxCardinality requires the exact auctionBipartite path")
-    val basePairs = weightedPairs(g, cfg)
-    // state: one row per REMAINING edge (a, b, w); matched edges are
-    // emitted into `matched` and their endpoints' edges dropped
-    var remaining = pins.pin(basePairs)
-    var matched = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      remaining.schema)
-    var rounds = 0
-    var done = remaining.isEmpty
-    while (!done && rounds < cfg.maxRounds) {
-      rounds += 1
+    // state: one row per matched or still-available edge (a, b, w,
+    // matched, fresh); fresh marks the edges matched this round. An
+    // unmatched edge that touches a fresh match is dropped.
+    val init = weightedPairs(g, cfg).select(
+      col("a"), col("b"), col("w"), lit(false).as("matched"), lit(false).as("fresh"))
+    val state = pins.own(SuperstepRunner.run(
+      spark, init, RunConfig(cfg.maxRounds, runId = "matching-dominant")) { (state, _) =>
+      val remaining = state.filter(!col("matched"))
       // best incident edge per node: max (w, then smaller partner id)
       val incident = remaining
         .select(col("a").as("id"), col("b").as("partner"), col("w"))
@@ -97,29 +95,25 @@ object Matching {
         .groupBy("id")
         .agg(max(struct(col("w").as("w"), (-col("partner")).as("np"))).as("best"))
         .select(col("id"), (-col("best.np")).as("pick"))
-      // mutual picks → matched (count each pair once from its a side)
-      val newMatches = remaining
-        .join(pick.select(col("id").as("a"), col("pick").as("apick")), Seq("a"))
-        .join(pick.select(col("id").as("b"), col("pick").as("bpick")), Seq("b"))
-        .filter(col("apick") === col("b") && col("bpick") === col("a"))
-        .select(col("a"), col("b"), col("w"))
-      val nm = pins.pin(newMatches)
-      if (nm.isEmpty) done = true
-      else {
-        matched = pins.replace(matched, Pin.pin(matched.unionByName(nm)))
-        val taken = nm.select(col("a").as("id")).unionByName(nm.select(col("b").as("id")))
-        remaining = pins.replace(remaining, Pin.pin(
-          remaining
-            .join(taken.withColumnRenamed("id", "a"), Seq("a"), "left_anti")
-            .join(taken.withColumnRenamed("id", "b"), Seq("b"), "left_anti")))
-        done = remaining.isEmpty
-      }
-      pins.release(nm)
-    }
-    // report the ORIGINAL weights (the cardinality lift is internal)
+      // mutual picks: (id, pick) whose swap (pick, id) is a pick too
+      val mate = pick.join(pick.select(col("pick").as("id"), col("id").as("pick")), Seq("id", "pick"))
+      Step(
+        state
+          .join(mate.select(col("id").as("a"), col("pick").as("amate")), Seq("a"), "left")
+          .join(mate.select(col("id").as("b"), col("pick").as("bmate")), Seq("b"), "left")
+          .withColumn("fresh", coalesce(col("amate") === col("b"), lit(false)))
+          .filter(col("matched") || col("fresh") || col("amate").isNull && col("bmate").isNull)
+          .select(col("a"), col("b"), col("w"), (col("matched") || col("fresh")).as("matched"), col("fresh")),
+        m => {
+          val r = m.agg(
+            count(when(col("fresh"), 1)).as("fresh"),
+            count(when(!col("matched"), 1)).as("open")).first()
+          val (fresh, open) = (r.getLong(0), r.getLong(1))
+          (fresh == 0 || open == 0, Map("fresh" -> fresh.toDouble, "open" -> open.toDouble))
+        })
+    }.state)
     Pin.pin(
-      matched.select("a", "b")
-        .join(basePairs, Seq("a", "b"))
+      state.filter(col("matched"))
         .select(col("a").as("src"), col("b").as("dst"), col("w").as("weight")))
   }
 
@@ -150,25 +144,27 @@ object Matching {
       .groupBy(col("src").as("person"), col("dst").as("obj"))
       .agg(max(col("w").cast("double")).as("w"))
     val lifted = pins.pin(lift(base, cfg))
-    val nPersons = lifted.select("person").distinct().count()
+    val persons = pins.pin(lifted.select("person").distinct())
+    val nPersons = persons.count()
     val eps = 1.0 / (nPersons + 1.0)
+    val objType = lifted.schema("obj").dataType
 
-    // prices per object; assignment (obj → person); unassigned person set
-    var prices = pins.pin(lifted.select(col("obj")).distinct().withColumn("price", lit(0.0)))
-    var assigned = pins.pin(
-      prices.select(col("obj"), lit(null).cast(lifted.schema("person").dataType).as("person"))
-        .limit(0))
-    var active = pins.pin(lifted.select("person").distinct()) // unassigned, not finalized
-    var rounds = 0
-    while (!active.isEmpty && rounds < cfg.maxRounds) {
-      rounds += 1
+    // state: one row per object (obj, price, holder person or null), plus
+    // (null, null, person) for each person that finalized unmatched. The
+    // active persons (unassigned, not finalized) are the ones not in it.
+    val init = lifted.select(col("obj")).distinct()
+      .select(col("obj"), lit(0.0).as("price"), lit(null).cast(lifted.schema("person").dataType).as("person"))
+    val state = pins.own(SuperstepRunner.run(
+      spark, init, RunConfig(cfg.maxRounds, runId = "matching-auction")) { (state, _) =>
+      val active = persons.join(state.filter(col("person").isNotNull), Seq("person"), "left_anti")
+      val prices = state.filter(col("obj").isNotNull).select("obj", "price")
       // net value of every candidate of every active person, plus the
       // virtual null candidate (net 0) that keeps matching optional
       val nets = lifted
         .join(active, Seq("person"), "left_semi")
         .join(prices, Seq("obj"))
         .select(col("person"), col("obj"), (col("w") - col("price")).as("net"))
-        .unionByName(active.select(col("person"), lit(null).cast(lifted.schema("obj").dataType).as("obj"), lit(0.0).as("net")))
+        .unionByName(active.select(col("person"), lit(null).cast(objType).as("obj"), lit(0.0).as("net")))
       // top-2 nets per person, deterministic (net desc, null last, obj asc)
       val ranked = nets
         .withColumn(
@@ -178,52 +174,46 @@ object Matching {
               .partitionBy("person")
               .orderBy(col("net").desc, col("obj").asc_nulls_last)))
         .filter(col("rk") <= 2)
-      val top = ranked.groupBy("person").agg(
+      // pinned: read by both the bids and the finalized rows below
+      val top = pins.pin(ranked.groupBy("person").agg(
         max(when(col("rk") === 1, struct(col("net"), col("obj")))).as("first"),
-        max(when(col("rk") === 2, col("net"))).as("second"))
+        max(when(col("rk") === 2, col("net"))).as("second")))
       // best = null object → the person finalizes unmatched (prices only
       // rise, so its real nets can only fall below 0 further)
-      val bidders = top
+      val bids = top
         .filter(col("first.obj").isNotNull)
         .select(
           col("person"),
           col("first.obj").as("obj"),
           (col("first.net") - coalesce(col("second"), lit(0.0)) + eps).as("incr"))
-      val bids = bidders
         .join(prices, Seq("obj"))
         .select(col("obj"), col("person"), (col("price") + col("incr")).as("bid"))
-      // each object takes the highest bid (tie → smaller person id)
-      val winners = pins.pin(
-        bids
-          .groupBy("obj")
-          .agg(max(struct(col("bid").as("bid"), (-col("person")).as("np"))).as("wb"))
-          .select(col("obj"), (-col("wb.np")).as("person"), col("wb.bid").as("price")))
-      // displaced holders become active again; winners leave the pool;
-      // finalized-unmatched persons (picked null) leave permanently. The
-      // new active set reads the old prices and assignment (via bidders
-      // and displaced), so it is pinned before either is replaced.
-      val displaced = assigned
-        .join(winners.select("obj"), Seq("obj"), "left_semi")
-        .select("person")
-      active = pins.replace(active, Pin.pin(
-        active
-          .join(bidders.select("person"), Seq("person"), "left_semi") // drop null-pickers
-          .join(winners.select("person"), Seq("person"), "left_anti") // drop new holders
-          .unionByName(displaced)
-          .distinct()))
-      assigned = pins.replace(assigned, Pin.pin(
-        assigned
-          .join(winners.select("obj"), Seq("obj"), "left_anti")
-          .unionByName(winners.select(col("obj"), col("person")))))
-      prices = pins.replace(prices, Pin.pin(
-        prices
-          .join(winners.select("obj"), Seq("obj"), "left_anti")
-          .unionByName(winners.select(col("obj"), col("price")))))
-      pins.release(winners)
-    }
+      // each object takes the highest bid (tie → smaller person id); its
+      // displaced holder drops out of the state and is active again
+      val winners = bids
+        .groupBy("obj")
+        .agg(max(struct(col("bid").as("bid"), (-col("person")).as("np"))).as("wb"))
+        .select(col("obj"), (-col("wb.np")).as("wperson"), col("wb.bid").as("wprice"))
+      val objects = state.filter(col("obj").isNotNull)
+        .join(winners, Seq("obj"), "left")
+        .select(
+          col("obj"),
+          coalesce(col("wprice"), col("price")).as("price"),
+          coalesce(col("wperson"), col("person")).as("person"))
+      val finalized = top
+        .filter(col("first.obj").isNull)
+        .select(lit(null).cast(objType).as("obj"), lit(null).cast("double").as("price"), col("person"))
+      Step(
+        objects.unionByName(state.filter(col("obj").isNull)).unionByName(finalized),
+        m => {
+          pins.release(top)
+          val active = nPersons - m.filter(col("person").isNotNull).count()
+          (active == 0, Map("active" -> active.toDouble))
+        })
+    }.state)
     // report the ORIGINAL weights (the cardinality lift is internal)
     Pin.pin(
-      assigned
+      state
         .join(base, Seq("person", "obj"))
         .select(col("person").as("src"), col("obj").as("dst"), col("w").as("weight")))
   }

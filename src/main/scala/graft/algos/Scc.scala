@@ -30,8 +30,14 @@ import org.apache.spark.sql.functions._
  * Every round finalizes ≥1 SCC per surviving color class; with
  * hash-random node ids the expected outer-round count is O(log n).
  * Inner fixpoints are O(diameter) supersteps — inherent to BFS-based
- * distributed SCC. Each fixpoint is a SuperstepRunner loop (lineage
- * truncation + optional checkpoint lineage per superstep).
+ * distributed SCC.
+ *
+ * The outer rounds are one [[SuperstepRunner]] run over the state
+ * (id, root), root null while unassigned; each round runs the color and
+ * reach fixpoints as runner loops of their own over the unassigned
+ * subgraph. With a checkpoint directory `d`, the outer state commits every
+ * round under `d/rounds` and round r's phases under `d/round<r>/color` and
+ * `d/round<r>/reach`, so a killed run resumes at its last finished round.
  */
 object Scc {
 
@@ -40,64 +46,57 @@ object Scc {
       maxIterPerPhase: Int = 10000,
       checkpointDir: Option[String] = None)
 
+  /** A fixpoint phase converges on the first superstep that changes no node. */
+  private val unchanged: DataFrame => (Boolean, Map[String, Double]) = m => {
+    val changes = m.filter(col("changed")).count()
+    (changes == 0, Map("changes" -> changes.toDouble))
+  }
+
   /** @return (id, label) with label = min node id of the SCC. */
   def run(spark: SparkSession, g: TemporalGraph, cfg: Config = Config()): DataFrame = Pin.scope { pins =>
-    // hash-partitioned on src and persisted: the color fixpoint joins this
-    // (static within the round) frame on src EVERY superstep — without the
-    // explicit repartition each superstep would pay a full exchange of the
-    // big edge table (the state side still shuffles, but it is the small,
-    // narrow side)
-    var edges = pins.persist(g.simpleEdges
-      .filter(col("src") =!= col("dst"))
-      .repartition(col("src")))
-    edges.count()
-    var nodes = pins.persist(g.nodes)
-    var remaining = nodes.count()
+    val simple = pins.persist(g.simpleEdges.filter(col("src") =!= col("dst")))
+    def phase(round: Int, name: String) = RunConfig(
+      cfg.maxIterPerPhase, cfg.checkpointDir.map(d => s"$d/round$round/$name"), 25, s"scc-$name-$round")
 
-    var assigned: DataFrame =
-      spark.emptyDataFrame.select(lit(0L).as("id"), lit(0L).as("root")).limit(0)
-
-    var round = 0
-    while (remaining > 0 && round < cfg.maxRounds) {
-      round += 1
+    // state: (id, root), root null while unassigned
+    val state = pins.own(SuperstepRunner.run(
+      spark,
+      g.nodes.select(col("id"), lit(null).cast("long").as("root")),
+      RunConfig(cfg.maxRounds, cfg.checkpointDir.map(d => s"$d/rounds"), 1, "scc-rounds")) { (assigned, round) =>
+      val open = assigned.filter(col("root").isNull).select("id")
+      // the unassigned subgraph, hash-partitioned on src and persisted: the
+      // color fixpoint joins this (static within the round) frame on src
+      // EVERY superstep — without the explicit repartition each superstep
+      // would pay a full exchange of the big edge table (the state side
+      // still shuffles, but it is the small, narrow side)
+      val e = pins.persist(simple
+        .join(open.select(col("id").as("src")), Seq("src"), "left_semi")
+        .join(open.select(col("id").as("dst")), Seq("dst"), "left_semi")
+        .repartition(col("src")))
+      e.count()
 
       // -- 1. forward max-color fixpoint over the remaining subgraph --
-      val colorInit = nodes.select(col("id"), col("id").as("c"))
-      val e = edges
-      val colorState = pins.own(SuperstepRunner.run(
-        spark,
-        colorInit,
-        RunConfig(cfg.maxIterPerPhase, cfg.checkpointDir, 25, runId = s"scc-color-$round")) {
-        (state, _) =>
-          val msgs = e
-            .join(state.select(col("id"), col("c")), e("src") === col("id"))
-            .groupBy(e("dst").as("id"))
-            .agg(max("c").as("mc"))
-          val next = state
-            .join(msgs, Seq("id"), "left")
-            .select(
-              col("id"),
-              greatest(col("c"), coalesce(col("mc"), col("c"))).as("c"),
-              (coalesce(col("mc"), col("c")) > col("c")).as("changed"))
-          Step(
-            next.select("id", "c", "changed"),
-            m => {
-              val changes = m.filter(col("changed")).count()
-              (changes == 0, Map("changes" -> changes.toDouble))
-            })
+      val colored = pins.own(SuperstepRunner.run(
+        spark, open.select(col("id"), col("id").as("c")), phase(round, "color")) { (state, _) =>
+        val msgs = e
+          .join(state.select(col("id"), col("c")), e("src") === col("id"))
+          .groupBy(e("dst").as("id"))
+          .agg(max("c").as("mc"))
+        val next = state
+          .join(msgs, Seq("id"), "left")
+          .select(
+            col("id"),
+            greatest(col("c"), coalesce(col("mc"), col("c"))).as("c"),
+            (coalesce(col("mc"), col("c")) > col("c")).as("changed"))
+        Step(next.select("id", "c", "changed"), unchanged)
       }.state)
-      val colored = pins.persist(colorState.select("id", "c"))
-      colored.count()
-      // the fixpoint's final superstep state is superseded by `colored` —
-      // free its checkpoint blocks now rather than waiting on the cleaner
-      pins.release(colorState)
 
       // -- 2. multi-source backward reach from every root, within color --
       // reach state: (id, c, hit) — hit = can reach the root of its color
-      val reachInit = colored.withColumn("hit", col("id") === col("c"))
+      val reachInit = colored.select(col("id"), col("c"), (col("id") === col("c")).as("hit"))
       // edges annotated with both endpoint colors once per round;
       // hash-partitioned on dst — the backward-reach fixpoint joins this
-      // static frame on dst every superstep (same rationale as `edges`)
+      // static frame on dst every superstep (same rationale as `e`)
       val ec = pins.persist(e
         .join(colored.select(col("id").as("src"), col("c").as("sc")), Seq("src"))
         .join(colored.select(col("id").as("dst"), col("c").as("dc")), Seq("dst"))
@@ -105,10 +104,7 @@ object Scc {
         .select("src", "dst")
         .repartition(col("dst")))
       ec.count()
-      val reached = pins.own(SuperstepRunner.run(
-        spark,
-        reachInit,
-        RunConfig(cfg.maxIterPerPhase, cfg.checkpointDir, 25, runId = s"scc-reach-$round")) {
+      val reached = pins.own(SuperstepRunner.run(spark, reachInit, phase(round, "reach")) {
         (state, _) =>
           // v hits if any out-neighbour (same color) hits
           val msgs = ec
@@ -124,40 +120,30 @@ object Scc {
               col("c"),
               (col("hit") || coalesce(col("nhit"), lit(false))).as("hit"),
               (!col("hit") && coalesce(col("nhit"), lit(false))).as("changed"))
-          Step(
-            next.select("id", "c", "hit", "changed"),
-            m => {
-              val changes = m.filter(col("changed")).count()
-              (changes == 0, Map("changes" -> changes.toDouble))
-            })
+          Step(next.select("id", "c", "hit", "changed"), unchanged)
       }.state)
 
-      val newly = pins.persist(reached.filter(col("hit")).select(col("id"), col("c").as("root")))
-      val nNew = newly.count()
-      pins.release(reached)
-      // pinned: truncates the O(rounds) union lineage AND lets the
-      // previous round's accumulator blocks be freed now
-      assigned = pins.replace(assigned, Pin.pin(assigned.unionByName(newly)))
+      // -- 3. assign every node that reaches its root --
+      Step(
+        assigned
+          .join(reached.filter(col("hit")).select(col("id"), col("c").as("nroot")), Seq("id"), "left")
+          .select(col("id"), coalesce(col("root"), col("nroot")).as("root")),
+        _ => {
+          // `reached` holds one row per node unassigned before the round
+          val r = reached.agg(count(lit(1)), count(when(col("hit"), 1))).first()
+          val (newly, remaining) = (r.getLong(1), r.getLong(0) - r.getLong(1))
+          pins.release(e, colored, ec, reached)
+          require(newly > 0 || remaining == 0, "SCC round made no progress")
+          (remaining == 0, Map("assigned" -> newly.toDouble, "remaining" -> remaining.toDouble))
+        })
+    }.state)
 
-      // shrink the working graph
-      val prevNodes = nodes
-      val prevEdges = edges
-      nodes = pins.persist(nodes.join(newly.select("id"), Seq("id"), "left_anti"))
-      remaining = nodes.count()
-      edges = pins.persist(edges
-        .join(nodes.select(col("id").as("src")), Seq("src"), "left_semi")
-        .join(nodes.select(col("id").as("dst")), Seq("dst"), "left_semi")
-        .select("src", "dst")
-        .repartition(col("src")))
-      edges.count()
-      pins.release(prevNodes, prevEdges, colored, ec, newly)
-      require(nNew > 0 || remaining == 0, "SCC round made no progress")
-    }
-
-    // canonicalize: label = min node id per component (roots are the max).
-    // The output is pinned and kept, so every internal cache (including
-    // the accumulated `assigned` pin) is freed when the scope ends — after
-    // this call the only cached blocks left are the (|V|-row) result.
+    // canonicalize: label = min node id per component (roots are the max);
+    // nodes still unassigned after maxRounds are left out. The output is
+    // pinned and kept, so every internal cache is freed when the scope
+    // ends — after this call the only cached blocks left are the (|V|-row)
+    // result.
+    val assigned = state.filter(col("root").isNotNull)
     val canon = assigned
       .groupBy("root")
       .agg(min("id").as("label"))

@@ -26,6 +26,13 @@ import scala.util.Try
  * Plan-growth control: each superstep's state is pinned ([[Pin]]) and the
  * previous one released, so lineage and driver planning stay O(1) across
  * hundreds of iterations; on a throw every state the run pinned is freed.
+ *
+ * The graph algorithms iterate here, over one state frame each, except
+ * `GraphLearn.walkLoop` (each step's frontier is also a corpus block, which
+ * the runner would pin twice; measured in its doc) and Louvain's outer
+ * levels (four per-level frames aggregated from the previous level's;
+ * rebuilding them from one mapping frame would re-aggregate the level-1
+ * graph at every level and reorder the weighted float sums).
  */
 object SuperstepRunner {
 
@@ -59,8 +66,8 @@ object SuperstepRunner {
     // LogicalRDD. Iterative plans that reference the previous state more
     // than once (message join + diff join) would otherwise *double* in size
     // per superstep — exponential analysis cost and a driver OOM by ~30
-    // supersteps. The pin keeps the state hash-partitioned on its key across
-    // supersteps (no re-exchange) while dropping the inherited statistics.
+    // supersteps. The pin drops the inherited statistics; whether the next
+    // superstep re-exchanges the state depends on AQE (see [[Pin.pin]]).
     // Only the returned state outlives the run, also when a step throws.
     var (state, startStep) = resumed match {
       case Some((df, k)) => (pins.pin(df), k)

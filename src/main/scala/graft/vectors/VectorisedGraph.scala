@@ -1,5 +1,6 @@
 package graft.vectors
 
+import graft.bsp.Pin
 import graft.graph.TemporalGraph
 import graft.ml.Similarity
 import org.apache.spark.sql.{Column, DataFrame}
@@ -357,13 +358,17 @@ final case class VectorSelection(
       if (added == 0) dry = true
       else {
         remaining -= added.toInt
+        val prev = sel
         sel = sel.copy(
           nodes = dedupNodes(sel.nodes.unionByName(
             batch.filter(col("kind") === "node").select(col("id"), col("score")))),
           edges = dedupEdges(sel.edges.unionByName(
             batch.filter(col("kind") === "edge")
               .select(col("esrc").as("src"), col("edst").as("dst"), col("score"))))).checkpointed
+        // the new selection is materialized: the one it replaces is freed
+        Pin.release(prev.nodes, prev.edges)
       }
+      Pin.release(batch)
     }
     sel
   }

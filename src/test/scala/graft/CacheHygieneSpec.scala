@@ -205,23 +205,56 @@ class CacheHygieneSpec extends SparkSpec {
     "graft/vectors/VectorisedGraph.scala" ->
       "its localCheckpoints predate Pin; how Pin.pin's stats reset changes their plans is unmeasured")
 
-  test("no persist, cache or localCheckpoint outside Pin") {
+  /** Non-comment src/main lines matching `site`, outside the `allowed` files. */
+  private def sitesOutside(site: scala.util.matching.Regex, allowed: Map[String, String]): Seq[String] = {
     val root = Path.of("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repository root (no $root)")
-    val site = """\.persist\(\)|\.cache\(\)|\.localCheckpoint\(""".r
     val files = {
       val walk = Files.walk(root)
       try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList finally walk.close()
     }
-    val hits = for {
+    for {
       f <- files
       rel = root.relativize(f).toString
-      if !cacheAllowed.contains(rel)
+      if !allowed.contains(rel)
       (line, no) <- Files.readAllLines(f).asScala.zipWithIndex
       code = line.trim
       if !(code.startsWith("//") || code.startsWith("*") || code.startsWith("/*"))
       if site.findFirstIn(code).nonEmpty
     } yield s"$rel:${no + 1}: $code"
+  }
+
+  test("no persist, cache or localCheckpoint outside Pin") {
+    val hits = sitesOutside("""\.persist\(\)|\.cache\(\)|\.localCheckpoint\(""".r, cacheAllowed)
     assert(hits.isEmpty, s"cache outside Pin.scope:\n${hits.mkString("\n")}")
+  }
+
+  /** src/main files that may double-buffer state outside the runner. */
+  private val replaceAllowed: Map[String, String] = Map(
+    "graft/bsp/SuperstepRunner.scala" -> "the runner's own double buffer",
+    "graft/algos/Louvain.scala" ->
+      "outer levels: their four per-level frames are aggregated from the previous level")
+
+  test("double buffering (pins.replace) lives in SuperstepRunner") {
+    val hits = sitesOutside("""pins\.replace\(""".r, replaceAllowed)
+    assert(hits.isEmpty, s"hand-rolled double buffer outside the runner:\n${hits.mkString("\n")}")
+  }
+
+  test("similarity expansion frees every round's pins; caller owns the selection") {
+    val vg = graft.vectors.Vectorise(vectorGraph, graft.vectors.HashEmbedder(dim = 16))
+    val before = persistedIds
+    val sel = vg.emptySelection.addNodes(Seq(1L)).expandEntitiesBySimilarity("node", limit = 100)
+    assert(sel.nodes.count() == 3 && sel.edges.count() == 2)
+    Pin.release(sel.nodes, sel.edges)
+    assert((persistedIds -- before).isEmpty, "releasing the selection returns to baseline")
+  }
+
+  //     1 ── 2 ── 3      (chain), plus 4 ── 5 off to the side
+  private def vectorGraph = {
+    val session = spark
+    import session.implicits._
+    TemporalGraph(
+      Seq((1L, 2L, 10L, 1L, "a"), (2L, 3L, 20L, 2L, "a"), (2L, 3L, 30L, 3L, "a"), (4L, 5L, 40L, 4L, "a"))
+        .toDF("src", "dst", "ts", "event_id", "layer"))
   }
 }

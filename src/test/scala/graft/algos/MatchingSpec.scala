@@ -2,6 +2,8 @@ package graft.algos
 
 import graft.SparkSpec
 import graft.graph.TemporalGraph
+
+import scala.collection.mutable
 import scala.util.Random
 
 class MatchingSpec extends SparkSpec {
@@ -123,5 +125,36 @@ class MatchingSpec extends SparkSpec {
     val empty = TemporalGraph(
       Seq.empty[(Long, Long, Long, Long, String)].toDF("src", "dst", "ts", "event_id", "layer"))
     assert(Matching.locallyDominant(spark, empty).count() == 0)
+  }
+
+  /** Sequential greedy matching over the undirected pairs (weight = max
+    * over the directed edges, self-loops dropped) in (w desc, a asc, b asc)
+    * order — the total order the per-node (w, −partner) pick is consistent
+    * with, so locally-dominant matching must reproduce it exactly. */
+  private def greedyModel(edges: Seq[(Long, Long, Double)]): Set[(Long, Long, Double)] = {
+    val pairs = edges
+      .filter { case (s, d, _) => s != d }
+      .groupBy { case (s, d, _) => (math.min(s, d), math.max(s, d)) }
+      .map { case ((a, b), es) => (a, b, es.map(_._3).max) }
+      .toSeq
+      .sortBy { case (a, b, w) => (-w, a, b) }
+    val used = mutable.Set.empty[Long]
+    pairs.filter { case (a, b, _) =>
+      val free = !used(a) && !used(b)
+      if (free) used ++= Seq(a, b)
+      free
+    }.toSet
+  }
+
+  test("locally-dominant equals sequential greedy matching on random weighted graphs") {
+    for (seed <- 21 to 25) {
+      val rnd = new Random(seed)
+      val edges = (1 to 30).map(_ =>
+        (rnd.nextInt(14).toLong, rnd.nextInt(14).toLong, (rnd.nextInt(4) + 1).toDouble))
+      val got = Matching.locallyDominant(
+        spark, graphOf(edges), Matching.Config(weightCol = Some("weight")))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      assert(got == greedyModel(edges), s"seed $seed")
+    }
   }
 }

@@ -1,9 +1,12 @@
 package graft.algos
 
 import graft.SparkSpec
+import graft.bsp.Pin
 import graft.graph.TemporalGraph
 
+import java.nio.file.{Files, Path}
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 /**
@@ -62,10 +65,14 @@ class SccSpec extends SparkSpec {
     labels.toMap
   }
 
-  private def sparkScc(edges: Seq[(Long, Long)]): Map[Long, Long] = {
-    val g = TemporalGraph.fromTriples(spark, edges.map { case (a, b) => (a, b, 0L) })
-    Scc.run(spark, g).collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("label")).toMap
+  private def labels(out: org.apache.spark.sql.DataFrame): Map[Long, Long] = {
+    val got = out.collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("label")).toMap
+    Pin.release(out)
+    got
   }
+
+  private def sparkScc(edges: Seq[(Long, Long)]): Map[Long, Long] =
+    labels(Scc.run(spark, TemporalGraph.fromTriples(spark, edges.map { case (a, b) => (a, b, 0L) })))
 
   test("two cycles joined by a bridge (classic SCC fixture)") {
     // cycle {1,2,3}, cycle {4,5}, bridge 3→4, pendant 6
@@ -93,5 +100,39 @@ class SccSpec extends SparkSpec {
       val got = sparkScc(edges)
       assert(got == want, s"trial $trial (n=$n)")
     }
+  }
+
+  /** Every path under `root`, children before their parents. */
+  private def tree(root: Path): List[Path] =
+    if (!Files.exists(root)) Nil
+    else {
+      val walk = Files.walk(root)
+      try walk.iterator().asScala.toList.sortBy(_.toString).reverse finally walk.close()
+    }
+
+  test("a run stopped after round 1 resumes at round 2 and matches an uninterrupted run") {
+    val rnd = new Random(11)
+    val n = 60
+    val edges = (1 to n * 2)
+      .map(_ => (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+      .filter(e => e._1 != e._2)
+      .distinct
+    val g = TemporalGraph.fromTriples(spark, edges.map { case (a, b) => (a, b, 0L) })
+    val want = labels(Scc.run(spark, g))
+    val dir = Files.createTempDirectory("graft-scc-resume")
+    def round1Manifests = (tree(dir.resolve("round1")) ++ tree(dir.resolve("rounds/steps/1")))
+      .filter(_.getFileName.toString == "manifest.json")
+      .map(p => dir.relativize(p).toString -> new String(Files.readAllBytes(p)))
+      .toMap
+    try {
+      val cfg = Scc.Config(checkpointDir = Some(dir.toString))
+      val partial = labels(Scc.run(spark, g, cfg.copy(maxRounds = 1)))
+      assert(partial.size < want.size, "the graph must need more than one round")
+      val before = round1Manifests
+      assert(Seq("round1/color", "round1/reach", "rounds").forall(d => before.keys.exists(_.startsWith(d))))
+      assert(labels(Scc.run(spark, g, cfg)) == want)
+      assert(Files.exists(dir.resolve("rounds/steps/2/manifest.json")))
+      assert(round1Manifests == before, "the resumed run must not rewrite round 1")
+    } finally tree(dir).foreach(Files.delete)
   }
 }
