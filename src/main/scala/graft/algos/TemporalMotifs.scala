@@ -326,6 +326,63 @@ object TemporalMotifs {
           struct(col("x1").as("p"), col("x3").as("q")))).as("pq"))
       .select(col("tri"), col("pq.p").as("p"), col("pq.q").as("q"))
 
+  /**
+   * The census inputs [[globalMulti]] and [[local]] share, over the
+   * self-loop-free events (pinned through `pins`):
+   *  - `pairEvents` `(a, b, ts[], eid[], dir[])`: each unordered pair's
+   *    sorted events, pinned too, because the pair census, the undirected
+   *    edge set AND the triangle event lists all derive from this one
+   *    exchange;
+   *  - `starEvents` `(node, ts[], dir[], nbr[])`: each centre node's sorted
+   *    events (dir 1 = outgoing).
+   * Event fields are unzipped to PRIMITIVE arrays after the sort: the
+   * Array[Long]/Array[Int] encoders are a bulk copy out of UnsafeArrayData,
+   * where a Seq[(Long, Long, Int)] encoder boxes a tuple per event.
+   *
+   * Hub guard: entities above the event cap are excluded BEFORE any
+   * collect_list builds their (multi-GB) row; the exclusions are observable
+   * via [[droppedEntities]]. The heavy sets are tiny by construction
+   * (> 2^20 events each), so the guards are broadcast anti-joins — no extra
+   * shuffle on the event table.
+   */
+  private def censusInputs(
+      g: TemporalGraph,
+      maxEventsPerEntity: Int,
+      pins: Pin.Scope): (DataFrame, DataFrame) = {
+    val ev = pins.persist(g.edges
+      .filter(col("src") =!= col("dst"))
+      .select(col("src"), col("dst"), col("ts"), col("event_id")))
+    ev.count()
+    val hn = broadcast(heavyNodes(ev, maxEventsPerEntity).select("node"))
+    val hp = broadcast(heavyPairs(ev, maxEventsPerEntity).select("a", "b"))
+    val pairEvents = pins.persist(ev
+      .select(
+        least(col("src"), col("dst")).as("a"),
+        greatest(col("src"), col("dst")).as("b"),
+        struct(
+          col("ts"),
+          col("event_id"),
+          when(col("src") < col("dst"), 1).otherwise(0).as("dir")).as("e"))
+      .join(hp, Seq("a", "b"), "left_anti")
+      .groupBy("a", "b")
+      .agg(sort_array(collect_list(col("e"))).as("evs"))
+      .select(
+        col("a"), col("b"),
+        col("evs.ts").as("ts"), col("evs.event_id").as("eid"), col("evs.dir").as("dir")))
+    val starEvents = ev
+      .select(col("src").as("node"), struct(col("ts"), col("event_id"), lit(1).as("dir"), col("dst").as("nbr")).as("e"))
+      .unionByName(ev.select(
+        col("dst").as("node"),
+        struct(col("ts"), col("event_id"), lit(0).as("dir"), col("src").as("nbr")).as("e")))
+      .join(hn, Seq("node"), "left_anti")
+      .groupBy("node")
+      .agg(sort_array(collect_list(col("e"))).as("evs"))
+      .select(
+        col("node"),
+        col("evs.ts").as("ts"), col("evs.dir").as("dir"), col("evs.nbr").as("nbr"))
+    (pairEvents, starEvents)
+  }
+
   /** Global 40-dim census at one delta. @return (motif_id 0..39, count). */
   def global(
       spark: SparkSession,
@@ -356,38 +413,7 @@ object TemporalMotifs {
     require(deltas.nonEmpty, "globalMulti: need at least one delta")
     val deltaArr: Array[Long] = deltas.toArray // serializable, loop-friendly
     val nD = deltaArr.length
-    val ev = pins.persist(g.edges
-      .filter(col("src") =!= col("dst"))
-      .select(col("src"), col("dst"), col("ts"), col("event_id")))
-    ev.count()
-    // hub guard: entities above the event cap are excluded BEFORE any
-    // collect_list builds their (multi-GB) row; the exclusions are
-    // observable via [[droppedEntities]]. The heavy sets are tiny by
-    // construction (> 2^20 events each), so the guards are broadcast
-    // anti-joins — no extra shuffle on the event table.
-    val hn = broadcast(heavyNodes(ev, maxEventsPerEntity).select("node"))
-    val hp = broadcast(heavyPairs(ev, maxEventsPerEntity).select("a", "b"))
-
-    // -- two-node block: one kernel run per unordered pair, mirrored.
-    // Event fields are unzipped to PRIMITIVE arrays after the sort: the
-    // Array[Long]/Array[Int] encoders are a bulk copy out of UnsafeArrayData,
-    // where the old Seq[(Long, Long, Int)] encoder boxed a tuple per event.
-    // `pairEvents` is persisted because the pair census, the undirected edge
-    // set AND the triangle event lists all derive from this one exchange. --
-    val pairEvents = pins.persist(ev
-      .select(
-        least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"),
-        struct(
-          col("ts"),
-          col("event_id"),
-          when(col("src") < col("dst"), 1).otherwise(0).as("dir")).as("e"))
-      .join(hp, Seq("a", "b"), "left_anti")
-      .groupBy("a", "b")
-      .agg(sort_array(collect_list(col("e"))).as("evs"))
-      .select(
-        col("a"), col("b"),
-        col("evs.ts").as("ts"), col("evs.event_id").as("eid"), col("evs.dir").as("dir")))
+    val (pairEvents, starEvents) = censusInputs(g, maxEventsPerEntity, pins)
     pairEvents.count() // materialize the shared exchange before forking jobs
 
     // The three census blocks are INDEPENDENT jobs over cached inputs;
@@ -416,16 +442,6 @@ object TemporalMotifs {
       8 * nD))
 
     // -- star block: one kernel run per center node --
-    val starEvents = ev
-      .select(col("src").as("node"), struct(col("ts"), col("event_id"), lit(1).as("dir"), col("dst").as("nbr")).as("e"))
-      .unionByName(ev.select(
-        col("dst").as("node"),
-        struct(col("ts"), col("event_id"), lit(0).as("dir"), col("src").as("nbr")).as("e")))
-      .join(hn, Seq("node"), "left_anti")
-      .groupBy("node")
-      .agg(sort_array(collect_list(col("e"))).as("evs"))
-      .select(
-        col("evs.ts").as("ts"), col("evs.dir").as("dir"), col("evs.nbr").as("nbr"))
     val fStar24 = Future(sumVectors(
       starEvents
         .select(col("ts").as[Array[Long]], col("dir").as[Array[Int]], col("nbr").as[Array[Long]])
@@ -510,30 +526,9 @@ object TemporalMotifs {
       deltaMs: Long,
       maxEventsPerEntity: Int = DefaultMaxEventsPerEntity): DataFrame = Pin.scope { pins =>
     import spark.implicits._
-    val ev = pins.persist(g.edges
-      .filter(col("src") =!= col("dst"))
-      .select(col("src"), col("dst"), col("ts"), col("event_id")))
-    ev.count()
-    // hub guard — see [[global]]; exclusions observable via [[droppedEntities]]
-    val hn = broadcast(heavyNodes(ev, maxEventsPerEntity).select("node"))
-    val hp = broadcast(heavyPairs(ev, maxEventsPerEntity).select("a", "b"))
+    val (pairEvents, starEvents) = censusInputs(g, maxEventsPerEntity, pins)
 
-    // -- two-node block: one kernel per pair, credited to both endpoints
-    // (same primitive-array extraction + shared exchange as [[global]]) --
-    val pairEvents = pins.persist(ev
-      .select(
-        least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"),
-        struct(
-          col("ts"),
-          col("event_id"),
-          when(col("src") < col("dst"), 1).otherwise(0).as("dir")).as("e"))
-      .join(hp, Seq("a", "b"), "left_anti")
-      .groupBy("a", "b")
-      .agg(sort_array(collect_list(col("e"))).as("evs"))
-      .select(
-        col("a"), col("b"),
-        col("evs.ts").as("ts"), col("evs.event_id").as("eid"), col("evs.dir").as("dir")))
+    // -- two-node block: one kernel per pair, credited to both endpoints --
     val twoByNode = sumByNode(
       pairEvents
         .select(col("a").as[Long], col("b").as[Long], col("ts").as[Array[Long]], col("dir").as[Array[Int]])
@@ -543,17 +538,7 @@ object TemporalMotifs {
         }).toDF("id", "two")
 
     // -- star block: one kernel per centre node --
-    val starByNode = ev
-      .select(col("src").as("node"), struct(col("ts"), col("event_id"), lit(1).as("dir"), col("dst").as("nbr")).as("e"))
-      .unionByName(ev.select(
-        col("dst").as("node"),
-        struct(col("ts"), col("event_id"), lit(0).as("dir"), col("src").as("nbr")).as("e")))
-      .join(hn, Seq("node"), "left_anti")
-      .groupBy("node")
-      .agg(sort_array(collect_list(col("e"))).as("evs"))
-      .select(
-        col("node"),
-        col("evs.ts").as("ts"), col("evs.dir").as("dir"), col("evs.nbr").as("nbr"))
+    val starByNode = starEvents
       .select(col("node").as[Long], col("ts").as[Array[Long]], col("dir").as[Array[Int]], col("nbr").as[Array[Long]])
       .map { case (node, ts, dirs, nbrs) => (node, starCounts(ts, dirs, nbrs, deltaMs)) }
       .toDF("id", "star")

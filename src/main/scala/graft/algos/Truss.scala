@@ -97,18 +97,7 @@ object Truss {
         val affNodes = aff.select(col("a").as("node"))
           .union(aff.select(col("b").as("node")))
           .distinct()
-        val und = surv.select(col("a").as("node"), col("b").as("nbr"))
-          .union(surv.select(col("b").as("node"), col("a").as("nbr")))
-        val narr = und
-          .join(affNodes, Seq("node"), "left_semi")
-          .groupBy("node")
-          .agg(sort_array(collect_list("nbr")).as("ns"))
-        val recounted = aff
-          .join(narr.as("__ta"), col("a") === col("__ta.node"))
-          .join(narr.as("__tb"), col("b") === col("__tb.node"))
-          .select(
-            col("a"), col("b"),
-            size(array_intersect(col("__ta.ns"), col("__tb.ns"))).cast("long").as("support"))
+        val recounted = support(aff, neighbourLists(surv, Some(affNodes)))
         val unaffected = surv.join(aff, Seq("a", "b"), "left_anti")
         val next = unaffected.select("a", "b", "support").unionByName(recounted)
         Step(
@@ -128,15 +117,25 @@ object Truss {
 
   /** Full per-edge triangle support of a canonical undirected edge set —
     * run once to seed the peel (and reusable as a standalone metric). */
-  def supported(state: DataFrame): DataFrame = {
-    val und = state.select(col("a").as("node"), col("b").as("nbr"))
-      .union(state.select(col("b").as("node"), col("a").as("nbr")))
-    val narr = und.groupBy("node").agg(sort_array(collect_list("nbr")).as("ns"))
-    state
-      .join(narr.as("__ta"), col("a") === col("__ta.node"))
-      .join(narr.as("__tb"), col("b") === col("__tb.node"))
+  def supported(state: DataFrame): DataFrame = support(state, neighbourLists(state))
+
+  /** Sorted neighbour arrays `(node, ns)` of canonical edges `(a, b)`,
+    * limited to the `only` nodes when given. */
+  private def neighbourLists(edges: DataFrame, only: Option[DataFrame] = None): DataFrame = {
+    val und = edges.select(col("a").as("node"), col("b").as("nbr"))
+      .union(edges.select(col("b").as("node"), col("a").as("nbr")))
+    only.fold(und)(nodes => und.join(nodes, Seq("node"), "left_semi"))
+      .groupBy("node")
+      .agg(sort_array(collect_list("nbr")).as("ns"))
+  }
+
+  /** `(a, b, support)`: each pair's common-neighbour count, read off the
+    * neighbour arrays of both endpoints. */
+  private def support(pairs: DataFrame, lists: DataFrame): DataFrame =
+    pairs
+      .join(lists.as("__ta"), col("a") === col("__ta.node"))
+      .join(lists.as("__tb"), col("b") === col("__tb.node"))
       .select(
         col("a"), col("b"),
         size(array_intersect(col("__ta.ns"), col("__tb.ns"))).cast("long").as("support"))
-  }
 }

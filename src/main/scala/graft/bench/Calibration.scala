@@ -12,39 +12,28 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
  * by hand) is what makes round-over-round BENCH_r{N} deltas attributable
  * to code rather than tenancy.
  *
- * Two probes:
- *  - [[cpuRatio]]: a pure-CPU busy-loop (xorshift64*, no memory traffic) at
- *    `lo` and `hi` threads → throughput ratio. Ideal = hi/lo; the measured
- *    ratio is the machine's compute-scaling ceiling at this moment.
- *  - [[stealPct]]: hypervisor steal share from /proc/stat over a short
- *    sample — direct evidence of neighbour pressure.
+ * Three thread probes share one harness ([[summed]]) and one lo/hi
+ * [[ratio]]; the measured ratio over the ideal hi/lo is the machine's
+ * scaling ceiling for that access pattern at this moment:
+ *  - [[cpuThroughput]]: a pure-CPU busy-loop (xorshift64*, no memory traffic);
+ *  - [[memThroughput]]: sequential streaming over a private 64 MB array;
+ *  - [[randThroughput]]: random gathers over a private 64 MB array.
+ * [[stealPct]] reads the hypervisor steal share from /proc/stat — direct
+ * evidence of neighbour pressure.
  *
- * [[StageMetricsListener]] accumulates Spark stage task metrics (run/GC/CPU
- * time, shuffle bytes) so a measured window can be attributed: a GC share
- * ≫ 5% points at the JVM, a CPU share ≪ run time at memory-path or
- * scheduling stalls.
+ * [[StageMetricsListener]] sums Spark stage task metrics (run/GC/CPU time,
+ * shuffle bytes) over a [[Window]] so a measured window can be attributed:
+ * a GC share ≫ 5% points at the JVM, a CPU share ≪ run time at memory-path
+ * or scheduling stalls.
  */
 object Calibration {
 
-  /** Busy-loop iterations/sec at `threads` threads over ~`ms` wall. */
-  def cpuThroughput(threads: Int, ms: Long): Double = {
+  /** Runs `kernel(i)` on `threads` daemon threads (i = 1..threads) and
+    * returns the summed counts per second of the `ms` budget. */
+  private def summed(threads: Int, ms: Long)(kernel: Int => Long): Double = {
     val total = new AtomicLong(0L)
-    val deadline = System.nanoTime() + ms * 1000000L
     val ts = (1 to threads).map { i =>
-      val t = new Thread(() => {
-        var x = 0x9e3779b97f4a7c15L + i
-        var n = 0L
-        while (System.nanoTime() < deadline) {
-          var k = 0
-          while (k < (1 << 20)) { // check the clock every ~1M steps
-            x ^= x >>> 12; x ^= x << 25; x ^= x >>> 27
-            k += 1
-          }
-          n += 1 << 20
-        }
-        // fold x in so the loop cannot be eliminated
-        total.addAndGet(n + (x & 1L))
-      })
+      val t = new Thread(() => { total.addAndGet(kernel(i)); () })
       t.setDaemon(true)
       t.start()
       t
@@ -53,107 +42,96 @@ object Calibration {
     total.get().toDouble / (ms / 1000.0)
   }
 
-  /** (thrLo, thrHi, ratio) of busy-loop throughput at lo vs hi threads.
-    * A short untimed warm round first so JIT doesn't bias the lo level. */
-  def cpuRatio(lo: Int, hi: Int, msPerLevel: Long = 3000L): (Double, Double, Double) = {
-    cpuThroughput(2, 300L) // JIT warm-up
-    val tLo = cpuThroughput(lo, msPerLevel)
-    val tHi = cpuThroughput(hi, msPerLevel)
+  private def deadline(ms: Long): Long = System.nanoTime() + ms * 1000000L
+
+  /** A private 64 MB long array (8M words, a power of two), far beyond LLC. */
+  private def filled(i: Int): Array[Long] = {
+    val a = new Array[Long]((64 << 20) / 8)
+    var j = 0
+    while (j < a.length) { a(j) = j + i; j += 1 }
+    a
+  }
+
+  /** (thrLo, thrHi, hi/lo) of `probe` at lo vs hi threads. A short untimed
+    * round first so JIT (and page faults) don't bias the lo level. */
+  private def ratio(probe: (Int, Long) => Double, lo: Int, hi: Int, msPerLevel: Long): (Double, Double, Double) = {
+    probe(2, 300L)
+    val tLo = probe(lo, msPerLevel)
+    val tHi = probe(hi, msPerLevel)
     (tLo, tHi, if (tLo > 0) tHi / tLo else 0.0)
+  }
+
+  def cpuRatio(lo: Int, hi: Int): (Double, Double, Double) = ratio(cpuThroughput, lo, hi, 3000L)
+  def memRatio(lo: Int, hi: Int): (Double, Double, Double) = ratio(memThroughput, lo, hi, 2000L)
+  def randRatio(lo: Int, hi: Int): (Double, Double, Double) = ratio(randThroughput, lo, hi, 2000L)
+
+  /** Busy-loop iterations/sec at `threads` threads over ~`ms` wall. */
+  def cpuThroughput(threads: Int, ms: Long): Double = {
+    val end = deadline(ms)
+    summed(threads, ms) { i =>
+      var x = 0x9e3779b97f4a7c15L + i
+      var n = 0L
+      while (System.nanoTime() < end) {
+        var k = 0
+        while (k < (1 << 20)) { // check the clock every ~1M steps
+          x ^= x >>> 12; x ^= x << 25; x ^= x >>> 27
+          k += 1
+        }
+        n += 1 << 20
+      }
+      n + (x & 1L) // fold x in so the loop cannot be eliminated
+    }
   }
 
   /** Memory-streaming throughput (bytes/sec summed over `threads`): each
-    * thread sequentially folds a PRIVATE 64 MB long array — far beyond LLC,
-    * so the loop is bound by the shared memory path, not compute. This is
-    * the probe [[cpuRatio]] is blind to: a neighbour tenant hammering
-    * DRAM bandwidth leaves the register-only busy-loop untouched while
-    * halving every shuffle/scan on the box (observed r3: clean 0.98 CPU
-    * calibrations bracketing a bench whose middle ran 4× slow). */
-  def memThroughput(threads: Int, ms: Long): Double = {
-    val words = (64 << 20) / 8
-    val total = new AtomicLong(0L)
-    val ts = (1 to threads).map { i =>
-      val t = new Thread(() => {
-        val a = new Array[Long](words)
-        var j = 0
-        while (j < words) { a(j) = j + i; j += 1 }
-        val deadline = System.nanoTime() + ms * 1000000L
-        var acc = 0L
-        var n = 0L
-        while (System.nanoTime() < deadline) {
-          var k = 0
-          while (k < words) { acc += a(k); k += 1 }
-          n += words.toLong * 8L
-        }
-        total.addAndGet(n + (acc & 1L)) // fold acc in: loop must not be DCE'd
-      })
-      t.setDaemon(true)
-      t.start()
-      t
+    * thread sequentially folds its own array, so the loop is bound by the
+    * shared memory path, not compute. This is the probe the busy-loop is
+    * blind to: a neighbour tenant hammering DRAM bandwidth leaves the
+    * register-only loop untouched while halving every shuffle/scan on the
+    * box (observed r3: clean 0.98 CPU calibrations bracketing a bench whose
+    * middle ran 4× slow). */
+  def memThroughput(threads: Int, ms: Long): Double =
+    summed(threads, ms) { i =>
+      val a = filled(i)
+      val words = a.length
+      val end = deadline(ms)
+      var acc = 0L
+      var n = 0L
+      while (System.nanoTime() < end) {
+        var k = 0
+        while (k < words) { acc += a(k); k += 1 }
+        n += words.toLong * 8L
+      }
+      n + (acc & 1L) // fold acc in: loop must not be DCE'd
     }
-    ts.foreach(_.join())
-    total.get().toDouble / (ms / 1000.0)
-  }
-
-  /** (bpsLo, bpsHi, ratio) of memory-streaming throughput at lo vs hi
-    * threads — the machine's bandwidth-scaling ceiling at this moment. */
-  def memRatio(lo: Int, hi: Int, msPerLevel: Long = 2000L): (Double, Double, Double) = {
-    memThroughput(2, 300L) // JIT + page-fault warm-up
-    val tLo = memThroughput(lo, msPerLevel)
-    val tHi = memThroughput(hi, msPerLevel)
-    (tLo, tHi, if (tLo > 0) tHi / tLo else 0.0)
-  }
 
   /** RANDOM-ACCESS memory throughput (reads/sec summed over `threads`):
-    * each thread does independent xorshift-indexed gathers over a PRIVATE
-    * 64 MB long array — the access pattern of a hash-join probe or shuffle
-    * fetch, which defeats the hardware prefetcher and saturates the memory
-    * subsystem on outstanding-miss capacity rather than sequential
-    * bandwidth. This is the ceiling [[memThroughput]] is blind to: a
-    * 2026-08-20 clean window measured sequential streaming scaling 0.83
-    * across 8→32 threads while the shuffle-bound job scaled 0.52 — the
-    * random-access ceiling, not the streaming one, is what a hash-heavy
-    * workload actually runs under. */
-  def randThroughput(threads: Int, ms: Long): Double = {
-    val words = (64 << 20) / 8
-    val mask = words - 1 // 8M words, power of two
-    val total = new AtomicLong(0L)
-    val ts = (1 to threads).map { i =>
-      val t = new Thread(() => {
-        val a = new Array[Long](words)
-        var j = 0
-        while (j < words) { a(j) = j + i; j += 1 }
-        val deadline = System.nanoTime() + ms * 1000000L
-        var acc = 0L
-        var n = 0L
-        var x = 0x9E3779B97F4A7C15L ^ i.toLong
-        while (System.nanoTime() < deadline) {
-          var k = 0
-          while (k < 65536) {
-            x ^= x << 13; x ^= x >>> 7; x ^= x << 17
-            acc += a((x & 0x7FFFFFFFFFFFFFFFL).toInt & mask)
-            k += 1
-          }
-          n += 65536L
+    * independent xorshift-indexed gathers over each thread's own array —
+    * the access pattern of a hash-join probe or shuffle fetch, which defeats
+    * the hardware prefetcher and saturates on outstanding-miss capacity
+    * rather than sequential bandwidth. A 2026-08-20 clean window measured
+    * streaming scaling 0.83 across 8→32 threads while the shuffle-bound job
+    * scaled 0.52: this ceiling, not the streaming one, is what a hash-heavy
+    * workload runs under. */
+  def randThroughput(threads: Int, ms: Long): Double =
+    summed(threads, ms) { i =>
+      val a = filled(i)
+      val mask = a.length - 1
+      val end = deadline(ms)
+      var acc = 0L
+      var n = 0L
+      var x = 0x9E3779B97F4A7C15L ^ i.toLong
+      while (System.nanoTime() < end) {
+        var k = 0
+        while (k < 65536) {
+          x ^= x << 13; x ^= x >>> 7; x ^= x << 17
+          acc += a((x & 0x7FFFFFFFFFFFFFFFL).toInt & mask)
+          k += 1
         }
-        total.addAndGet(n + (acc & 1L)) // fold acc in: loop must not be DCE'd
-      })
-      t.setDaemon(true)
-      t.start()
-      t
+        n += 65536L
+      }
+      n + (acc & 1L) // fold acc in: loop must not be DCE'd
     }
-    ts.foreach(_.join())
-    total.get().toDouble / (ms / 1000.0)
-  }
-
-  /** (rpsLo, rpsHi, ratio) of random-gather throughput at lo vs hi
-    * threads — the machine's random-access ceiling at this moment. */
-  def randRatio(lo: Int, hi: Int, msPerLevel: Long = 2000L): (Double, Double, Double) = {
-    randThroughput(2, 300L) // JIT + page-fault warm-up
-    val tLo = randThroughput(lo, msPerLevel)
-    val tHi = randThroughput(hi, msPerLevel)
-    (tLo, tHi, if (tLo > 0) tHi / tLo else 0.0)
-  }
 
   /** Steal% of total cpu time over a `ms` sample from /proc/stat (0.0 when
     * unavailable, e.g. non-Linux). */
@@ -172,48 +150,47 @@ object Calibration {
     }
   }
 
-  /** Accumulates per-stage task metric sums; snapshot/delta to attribute a
-    * measured window (all times ms, bytes raw). Register with
-    * `spark.sparkContext.addSparkListener(listener)`. */
+  /** One measured window: its wall and the task metrics of the stages
+    * that completed inside it (times ms, bytes raw). */
+  final case class Window(
+      secs: Double,
+      runMs: Double,
+      gcMs: Double,
+      cpuMs: Double,
+      shuffleBytes: Double, // read + write
+      tasks: Double) {
+    def taskSec: Double = runMs / 1000.0
+    def gcShare: Double = gcMs / math.max(runMs, 1.0)
+    def cpuShare: Double = cpuMs / math.max(runMs, 1.0)
+  }
+
+  /** Accumulates per-stage task metric sums. Register with
+    * `spark.sparkContext.addSparkListener(listener)`, then measure with
+    * [[window]]. */
   final class StageMetricsListener extends SparkListener {
-    val runTimeMs = new AtomicLong(0L)
-    val gcTimeMs = new AtomicLong(0L)
-    val cpuTimeMs = new AtomicLong(0L)
-    val shuffleReadB = new AtomicLong(0L)
-    val shuffleWriteB = new AtomicLong(0L)
-    val stages = new AtomicLong(0L)
-    val tasks = new AtomicLong(0L)
+    private val runMs, gcMs, cpuMs, shuffleB, tasks = new AtomicLong(0L)
 
     override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
       val m = sc.stageInfo.taskMetrics
       if (m != null) {
-        runTimeMs.addAndGet(m.executorRunTime)
-        gcTimeMs.addAndGet(m.jvmGCTime)
-        cpuTimeMs.addAndGet(m.executorCpuTime / 1000000L)
-        shuffleReadB.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        shuffleWriteB.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        stages.incrementAndGet()
+        runMs.addAndGet(m.executorRunTime)
+        gcMs.addAndGet(m.jvmGCTime)
+        cpuMs.addAndGet(m.executorCpuTime / 1000000L)
+        shuffleB.addAndGet(m.shuffleReadMetrics.totalBytesRead + m.shuffleWriteMetrics.bytesWritten)
         tasks.addAndGet(sc.stageInfo.numTasks.toLong)
       }
     }
 
-    def snapshot(): Map[String, Long] = Map(
-      "runTimeMs" -> runTimeMs.get(),
-      "gcTimeMs" -> gcTimeMs.get(),
-      "cpuTimeMs" -> cpuTimeMs.get(),
-      "shuffleReadB" -> shuffleReadB.get(),
-      "shuffleWriteB" -> shuffleWriteB.get(),
-      "stages" -> stages.get(),
-      "tasks" -> tasks.get())
+    private def sums: Seq[Long] = Seq(runMs, gcMs, cpuMs, shuffleB, tasks).map(_.get())
 
-    /** Window delta vs a prior snapshot, with derived shares. */
-    def delta(prev: Map[String, Long]): Map[String, Double] = {
-      val cur = snapshot()
-      val d = cur.map { case (k, v) => k -> (v - prev.getOrElse(k, 0L)).toDouble }
-      val run = math.max(d("runTimeMs"), 1.0)
-      d ++ Map(
-        "gcShare" -> d("gcTimeMs") / run,
-        "cpuShare" -> d("cpuTimeMs") / run)
+    /** Runs `body`; returns its result and the window around it. */
+    def window[A](body: => A): (A, Window) = {
+      val before = sums
+      val t0 = System.nanoTime()
+      val a = body
+      val secs = (System.nanoTime() - t0) / 1e9
+      val d = sums.zip(before).map { case (x, y) => (x - y).toDouble }
+      (a, Window(secs, d(0), d(1), d(2), d(3), d(4)))
     }
   }
 }

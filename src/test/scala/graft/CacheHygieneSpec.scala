@@ -19,7 +19,8 @@ import scala.jdk.CollectionConverters._
  * paths now run persist-free; the iterative operators free every internal
  * cache (also when a superstep or a checkpoint commit throws) and return a
  * single pinned frame the caller owns. A lint keeps every other src/main
- * cache site on [[Pin]].
+ * cache site on [[Pin]]; the same source scan keeps environment reads to
+ * an allow-list of knobs.
  */
 class CacheHygieneSpec extends SparkSpec {
 
@@ -238,6 +239,24 @@ class CacheHygieneSpec extends SparkSpec {
   test("double buffering (pins.replace) lives in SuperstepRunner") {
     val hits = sitesOutside("""pins\.replace\(""".r, replaceAllowed)
     assert(hits.isEmpty, s"hand-rolled double buffer outside the runner:\n${hits.mkString("\n")}")
+  }
+
+  /** The environment variables src/main may read, each with its reason. */
+  private val knobsAllowed: Map[String, String] = Map(
+    "SPARK_MASTER" -> "the query server's master URL",
+    "SPARK_GRAFT_CPUS" -> "local[N] parallelism of every main",
+    "SPARK_GRAFT_SF_DIR" -> "the testdata directory Bench and KernelBench read",
+    "SPARK_GRAFT_SCALING" -> "\"0\" skips Bench's embedded scaling pairs",
+    "GRAFT_EXPLAIN_DIR" -> "where SuperstepRunner dumps each run's superstep plan")
+
+  test("environment knobs in src/main are limited to the allow-list") {
+    val reads = sitesOutside("""sys\.env|System\.getenv""".r, Map.empty)
+    val named = """(?:sys\.env\S*|System\.getenv)\(\s*"([A-Za-z0-9_]+)"""".r
+    val unlisted = reads.filter { site =>
+      val names = named.findAllMatchIn(site).map(_.group(1)).toList
+      names.isEmpty || !names.forall(knobsAllowed.contains)
+    }
+    assert(unlisted.isEmpty, s"environment reads outside the allow-list:\n${unlisted.mkString("\n")}")
   }
 
   test("similarity expansion frees every round's pins; caller owns the selection") {

@@ -10,8 +10,11 @@ the count per kind (`Scan parquet`, `InMemoryTableScan`, `Scan ExistingRDD`
 — a pinned frame —, `LocalTableScan`). Only operator-tree lines count, not
 the `(n) Name` detail sections of `explain("formatted")`. A cached
 relation's fill plan is printed, and counted, under every `InMemoryRelation`
-that reads it. The dumps are plans before execution, so exchanges that AQE
-later reuses still count once per copy.
+that reads it.
+The dumps (SuperstepRunner's GRAFT_EXPLAIN_DIR hook, graft.tools.PlanDump)
+are plans BEFORE execution, so a count overstates the re-reads that AQE
+serves from a `ReusedExchange`: each copy still counts once. At sf0.001
+`q_graph_neighbor_sample` lists 16 parquet scans here but executes 1.
 Exits 2 if the directory has no `*.txt` files."""
 import os
 import re
