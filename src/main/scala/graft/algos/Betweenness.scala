@@ -1,7 +1,7 @@
 package graft.algos
 
 import graft.bsp.{Pin, SuperstepRunner}
-import graft.bsp.SuperstepRunner.{RunConfig, Step}
+import graft.bsp.SuperstepRunner.{Never, NoRows, RunConfig, Step}
 import graft.graph.TemporalGraph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -51,10 +51,7 @@ object Betweenness {
       val newly = expanded
         .join(state.select(col("s"), col("v")), Seq("s", "v"), "left_anti")
         .select(col("s"), col("v"), lit(step).as("dist"), col("sig").as("sigma"))
-      Step(state.unionByName(newly), m => {
-        val reached = m.filter(col("dist") === step).count()
-        (reached == 0, Map("reached" -> reached.toDouble))
-      })
+      Step(state.unionByName(newly), NoRows(col("dist") === step, "reached"))
     }
     val state = pins.own(fwd.state)
     val maxLevel = fwd.steps - 1
@@ -85,7 +82,7 @@ object Betweenness {
         delta
           .join(contrib, Seq("s", "v"), "left")
           .select(col("s"), col("v"), (col("delta") + coalesce(col("dinc"), lit(0.0))).as("delta")),
-        _ => (false, Map.empty))
+        Never)
     }.state)
 
     // bc(v) = Σ_s delta(s, v) over dist ≥ 1, i.e. v ≠ s

@@ -1,7 +1,7 @@
 package graft.algos
 
 import graft.bsp.{Pin, SuperstepRunner}
-import graft.bsp.SuperstepRunner.{RunConfig, Step}
+import graft.bsp.SuperstepRunner.{Check, RunConfig, Step}
 import graft.graph.TemporalGraph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -92,7 +92,7 @@ object Centrality {
           .select(col("id"), coalesce(col("msum"), lit(0.0)).as("recv"), col("prev"))
         Step(
           next.select("id", "recv", "prev"),
-          { m =>
+          Check { m =>
             if (cfg.tol <= 0.0) (false, Map.empty)
             else {
               // both aggregates run over the cached materialized state
@@ -140,7 +140,7 @@ object Centrality {
           .select(col("id"), newScore.as("score"), abs(newScore - col("prev")).as("diff"))
         Step(
           next.select("id", "score", "diff"),
-          { m =>
+          Check { m =>
             if (cfg.tol <= 0.0) (false, Map.empty)
             else {
               val r = m.agg(max("diff")).first()

@@ -1,7 +1,7 @@
 package graft.algos
 
 import graft.bsp.{Pin, SuperstepRunner}
-import graft.bsp.SuperstepRunner.{RunConfig, Step}
+import graft.bsp.SuperstepRunner.{NoRows, RunConfig, Stable, Step}
 import graft.graph.TemporalGraph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -30,7 +30,6 @@ object Components {
       maxIter: Int): DataFrame = Pin.scope { pins =>
     val e = pins.persist(edges)
     val init = spark.range(1).select(lit(seed).as("id"), lit(0).as("dist"))
-    var prevCount = 1L
     val result = SuperstepRunner.run(spark, init, RunConfig(maxSteps = maxIter, runId = "bfs")) {
       (state, step) =>
         val frontier = state.filter(col("dist") === step - 1)
@@ -39,14 +38,8 @@ object Components {
           .select(col("dst").as("id"), lit(step).as("dist"))
           .join(state.select("id"), Seq("id"), "left_anti")
           .distinct()
-        Step(
-          state.unionByName(nxt),
-          { m =>
-            val c = m.count()
-            val done = c == prevCount
-            prevCount = c
-            (done, Map("visited" -> c.toDouble))
-          })
+        // the anti-join adds only unvisited nodes: none at this step ⇒ done
+        Step(state.unionByName(nxt), NoRows(col("dist") === step, "reached"))
     }
     result.state
   }
@@ -77,7 +70,6 @@ object Components {
     })
     e.count()
 
-    var prev = -1L
     val closure = SuperstepRunner.run(
       spark,
       e,
@@ -86,15 +78,7 @@ object Components {
       val ext = state
         .join(state.select(col("id").as("m"), col("m").as("m2")), Seq("m"))
         .select(col("id"), col("m2").as("m"))
-      val next = state.unionByName(ext).distinct()
-      Step(
-        next,
-        m => {
-          val c = m.count()
-          val done = c == prev
-          prev = c
-          (done, Map("pairs" -> c.toDouble))
-        })
+      Step(state.unionByName(ext).distinct(), Stable("pairs", Seq(count(lit(1)))))
     }.state
 
     g.nodes

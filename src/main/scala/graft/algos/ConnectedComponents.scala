@@ -1,7 +1,7 @@
 package graft.algos
 
 import graft.bsp.{Pin, SuperstepRunner}
-import graft.bsp.SuperstepRunner.{RunConfig, Step}
+import graft.bsp.SuperstepRunner.{RunConfig, Stable, Step}
 import graft.graph.TemporalGraph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -86,8 +86,6 @@ object ConnectedComponents {
         .distinct()
     }
 
-    var prevSig: Option[(Long, Long)] = None
-
     val result = SuperstepRunner.run(
       spark,
       init,
@@ -96,19 +94,8 @@ object ConnectedComponents {
         checkpointDir = cfg.checkpointDir,
         checkpointEvery = cfg.checkpointEvery,
         runId = "wcc")) { (state, _) =>
-      val next = smallStar(largeStar(state))
-      Step(
-        next,
-        { materialized =>
-          val row = materialized
-            .select(xxhash64(least(col("a"), col("b")), greatest(col("a"), col("b"))).as("h"))
-            .agg(count(lit(1)).as("n"), expr("bit_xor(h)").as("x"))
-            .first()
-          val sig = (row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1))
-          val done = prevSig.contains(sig)
-          prevSig = Some(sig)
-          (done, Map("edges" -> sig._1.toDouble))
-        })
+      val h = xxhash64(least(col("a"), col("b")), greatest(col("a"), col("b")))
+      Step(smallStar(largeStar(state)), Stable("edges", Seq(count(lit(1)), bit_xor(h))))
     }
 
     // At convergence every component is a star centered at its minimum id:

@@ -1,7 +1,7 @@
 package graft.algos
 
 import graft.bsp.{Pin, SuperstepRunner}
-import graft.bsp.SuperstepRunner.{RunConfig, Step}
+import graft.bsp.SuperstepRunner.{NoRows, RunConfig, Step}
 import graft.graph.TemporalGraph
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -137,12 +137,7 @@ object Epidemics {
           least(col("infected"), col("cand")).as("infected"),
           (coalesce(col("cand"), lit(Long.MaxValue)) <
             coalesce(col("infected"), lit(Long.MaxValue))).as("changed"))
-      Step(
-        next.select("id", "infected", "changed"),
-        { m =>
-          val changes = m.filter(col("changed")).count()
-          (changes == 0, Map("changes" -> changes.toDouble))
-        })
+      Step(next.select("id", "infected", "changed"), NoRows(col("changed"), "changes"))
     }
 
     val out = pins.own(result.state)

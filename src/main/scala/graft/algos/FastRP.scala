@@ -1,7 +1,7 @@
 package graft.algos
 
 import graft.bsp.{Pin, SuperstepRunner}
-import graft.bsp.SuperstepRunner.{RunConfig, Step}
+import graft.bsp.SuperstepRunner.{Never, RunConfig, Step}
 import graft.graph.TemporalGraph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -100,7 +100,7 @@ object FastRP {
           when(col("nsum").isNull, col("emb"))
             .otherwise(expr(s"zip_with(emb, nsum, (a, b) -> a + b * (${w} / (deg * ${numIters + 1.0})))"))
             .as("emb"))
-      Step(next.select("id", "deg", "emb"), _ => (false, Map.empty))
+      Step(next.select("id", "deg", "emb"), Never)
     }
     result.state.select("id", "emb")
   }

@@ -1,7 +1,7 @@
 package graft.algos
 
 import graft.bsp.{Pin, SuperstepRunner}
-import graft.bsp.SuperstepRunner.{RunConfig, Step}
+import graft.bsp.SuperstepRunner.{Check, RunConfig, Step}
 import graft.graph.TemporalGraph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -99,7 +99,7 @@ object Hits {
 
         Step(
           next,
-          { m =>
+          Check { m =>
             if (cfg.tol <= 0.0) (false, Map.empty) // forced-iteration mode
             else {
               // tiny aggregates over the cached materialized state

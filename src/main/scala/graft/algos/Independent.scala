@@ -1,7 +1,7 @@
 package graft.algos
 
 import graft.bsp.{Pin, SuperstepRunner}
-import graft.bsp.SuperstepRunner.{RunConfig, Step}
+import graft.bsp.SuperstepRunner.{NoRows, RunConfig, Step}
 import graft.graph.TemporalGraph
 import graft.ml.GraphLearn
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -96,12 +96,7 @@ object Independent {
             .when(col("win"), lit(1))
             .when(col("excl"), lit(2))
             .otherwise(lit(0)).as("status"))
-      Step(
-        next,
-        st => {
-          val undecided = st.filter(col("status") === 0).count()
-          (undecided == 0L, Map("undecided" -> undecided.toDouble))
-        })
+      Step(next, NoRows(col("status") === 0, "undecided"))
     }
     pins.own(res.state) // freed if the run did not converge
     if (!res.converged)
@@ -172,12 +167,7 @@ object Independent {
       val next = state
         .join(newlyColored, Seq("id"), "left")
         .select(col("id"), col("h"), coalesce(col("color"), col("newc")).as("color"))
-      Step(
-        next,
-        st => {
-          val remaining = st.filter(col("color").isNull).count()
-          (remaining == 0L, Map("uncolored" -> remaining.toDouble))
-        })
+      Step(next, NoRows(col("color").isNull, "uncolored"))
     }
     pins.own(res.state) // freed if the run did not converge
     if (!res.converged)

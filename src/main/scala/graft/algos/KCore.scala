@@ -1,7 +1,7 @@
 package graft.algos
 
 import graft.bsp.{Pin, SuperstepRunner}
-import graft.bsp.SuperstepRunner.{RunConfig, Step}
+import graft.bsp.SuperstepRunner.{RunConfig, Stable, Step}
 import graft.graph.TemporalGraph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -33,7 +33,6 @@ object KCore {
       .filter(col("d") >= cfg.k)
       .select("id")
 
-    var prevCount = -1L
     val result = SuperstepRunner.run(
       spark,
       init,
@@ -47,14 +46,8 @@ object KCore {
           .agg(count(lit(1)).as("alive_nbrs"))
           .filter(col("alive_nbrs") >= cfg.k)
           .select("id")
-        Step(
-          next,
-          { m =>
-            val c = m.count()
-            val done = c == prevCount || c == 0
-            prevCount = c
-            (done, Map("alive" -> c.toDouble))
-          })
+        // an empty core stops at once: it is its own fixpoint
+        Step(next, Stable("alive", Seq(count(lit(1))), orZero = true))
     }
     result.state.select("id")
   }
@@ -97,7 +90,6 @@ object KCore {
     val init = pairs
       .groupBy(col("node").as("id"))
       .agg(count(lit(1)).as("c"))
-    var prevSum = -1L
     val result = SuperstepRunner.run(
       spark,
       init,
@@ -113,14 +105,7 @@ object KCore {
       val next = state
         .join(h, Seq("id"), "left")
         .select(col("id"), least(col("c"), coalesce(col("h"), lit(0L))).as("c"))
-      Step(
-        next,
-        { m =>
-          val s = m.agg(coalesce(sum("c"), lit(0L))).first().getLong(0)
-          val done = s == prevSum
-          prevSum = s
-          (done, Map("sum_c" -> s.toDouble))
-        })
+      Step(next, Stable("sum_c", Seq(coalesce(sum("c"), lit(0L)))))
     }
     result.state.select(col("id"), col("c").as("coreness"))
   }

@@ -1,7 +1,7 @@
 package graft.algos
 
 import graft.bsp.{Pin, SuperstepRunner}
-import graft.bsp.SuperstepRunner.{RunConfig, Step}
+import graft.bsp.SuperstepRunner.{NoRows, RunConfig, Step}
 import graft.graph.TemporalGraph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -77,12 +77,7 @@ object LabelPropagation {
           coalesce(col("new_label"), col("label")).as("label"),
           (coalesce(col("new_label"), col("label")) =!= col("label")).as("changed"))
 
-      Step(
-        next.select("id", "label", "changed"),
-        { materialized =>
-          val changes = materialized.filter(col("changed")).count()
-          (changes == 0, Map("changes" -> changes.toDouble))
-        })
+      Step(next.select("id", "label", "changed"), NoRows(col("changed"), "changes"))
     }
     (result.state.select("id", "label"), result.metrics)
   }

@@ -1,7 +1,7 @@
 package graft.algos
 
 import graft.bsp.{Pin, SuperstepRunner}
-import graft.bsp.SuperstepRunner.{RunConfig, Step}
+import graft.bsp.SuperstepRunner.{Never, RunConfig, Step}
 import graft.graph.TemporalGraph
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -167,7 +167,7 @@ object Layout {
           (col("x") + col("vx") * cfg.dt).as("x"),
           (col("y") + col("vy") * cfg.dt).as("y"),
           col("vx"), col("vy"))
-      Step(next, _ => (false, Map.empty))
+      Step(next, Never)
     }
     result.state.select("id", "x", "y")
   }

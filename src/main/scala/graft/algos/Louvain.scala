@@ -1,7 +1,7 @@
 package graft.algos
 
 import graft.bsp.{Pin, SuperstepRunner}
-import graft.bsp.SuperstepRunner.{RunConfig, Step}
+import graft.bsp.SuperstepRunner.{Check, RunConfig, Step}
 import graft.graph.TemporalGraph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -259,7 +259,7 @@ object Louvain {
       // (as itself and as the w_old lookup) — without the pin the CSR join
       // + explode + aggregation executed twice per round (r5 shape;
       // measured ~20 stages/round, the fattest subtree duplicated). The
-      // pin's blocks are freed in the evaluate callback below, after the
+      // pin's blocks are freed in the Check rule below, after the
       // round's state is materialized.
       val wcom = pins.pin(communityWeights(adj, state))
       // candidate deltas (modularity.rs move_delta; self-loop term cancels).
@@ -314,7 +314,7 @@ object Louvain {
         col("moves"))
       Step(
         next,
-        { materialized =>
+        Check { materialized =>
           // next is materialized — the round's pinned wcom can be freed now
           pins.release(wcom)
           val moves = materialized.filter(col("moves")).count()

@@ -1,7 +1,7 @@
 package graft.algos
 
 import graft.bsp.{Pin, SuperstepRunner}
-import graft.bsp.SuperstepRunner.{RunConfig, Step}
+import graft.bsp.SuperstepRunner.{Check, RunConfig, Step}
 import graft.graph.TemporalGraph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -104,7 +104,7 @@ object Matching {
           .withColumn("fresh", coalesce(col("amate") === col("b"), lit(false)))
           .filter(col("matched") || col("fresh") || col("amate").isNull && col("bmate").isNull)
           .select(col("a"), col("b"), col("w"), (col("matched") || col("fresh")).as("matched"), col("fresh")),
-        m => {
+        Check { m =>
           val r = m.agg(
             count(when(col("fresh"), 1)).as("fresh"),
             count(when(!col("matched"), 1)).as("open")).first()
@@ -205,7 +205,7 @@ object Matching {
         .select(lit(null).cast(objType).as("obj"), lit(null).cast("double").as("price"), col("person"))
       Step(
         objects.unionByName(state.filter(col("obj").isNull)).unionByName(finalized),
-        m => {
+        Check { m =>
           pins.release(top)
           val active = nPersons - m.filter(col("person").isNotNull).count()
           (active == 0, Map("active" -> active.toDouble))

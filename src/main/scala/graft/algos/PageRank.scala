@@ -1,7 +1,7 @@
 package graft.algos
 
 import graft.bsp.{Pin, SuperstepRunner}
-import graft.bsp.SuperstepRunner.{RunConfig, Step}
+import graft.bsp.SuperstepRunner.{Check, RunConfig, Step}
 import graft.graph.TemporalGraph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -219,7 +219,7 @@ object PageRank {
         .select(carried :+ newScore.as("score") :+ abs(newScore - col("score")).as("diff"): _*)
       Step(
         next,
-        { materialized =>
+        Check { materialized =>
           if (cfg.tol <= 0.0) (false, Map.empty)
           else {
             val row = materialized

@@ -1,7 +1,7 @@
 package graft.algos
 
 import graft.bsp.{Pin, SuperstepRunner}
-import graft.bsp.SuperstepRunner.{RunConfig, Step}
+import graft.bsp.SuperstepRunner.{NoRows, RunConfig, Step}
 import graft.graph.TemporalGraph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -28,7 +28,6 @@ object Paths {
       .range(1)
       .select(lit(source).as("id"), lit(0).as("dist"), array(lit(source)).as("path"))
 
-    var prevCount = 1L
     val result = SuperstepRunner.run(
       spark,
       init,
@@ -42,15 +41,8 @@ object Paths {
         .join(state.select(col("id")), Seq("id"), "left_anti")
         .groupBy("id")
         .agg(min("dist").as("dist"), min("path").as("path"))
-      val next = state.unionByName(newNodes)
-      Step(
-        next,
-        { m =>
-          val c = m.count()
-          val done = c == prevCount
-          prevCount = c
-          (done, Map("visited" -> c.toDouble))
-        })
+      // the anti-join adds only unvisited nodes: none at this step ⇒ done
+      Step(state.unionByName(newNodes), NoRows(col("dist") === step, "reached"))
     }
     result.state.select("id", "dist", "path")
   }
@@ -132,12 +124,7 @@ object Paths {
           when(col("cand").isNotNull && col("cand.dist") < col("dist"), col("cand.path"))
             .otherwise(col("path")).as("path"),
           (col("cand").isNotNull && col("cand.dist") < col("dist")).as("changed"))
-      Step(
-        next.select("id", "dist", "path", "changed"),
-        { m =>
-          val c = m.filter(col("changed")).count()
-          (c == 0, Map("relaxed" -> c.toDouble))
-        })
+      Step(next.select("id", "dist", "path", "changed"), NoRows(col("changed"), "relaxed"))
     }
     val reached = pins.own(result.state)
       .filter(col("dist") =!= Double.PositiveInfinity)
@@ -193,12 +180,7 @@ object Paths {
             .as("taint_ts"),
           (col("taint_ts").isNull ||
             (col("spread_ts").isNotNull && col("spread_ts") < col("taint_ts"))).as("changed"))
-      Step(
-        merged.select("id", "taint_ts", "changed"),
-        { m =>
-          val c = m.filter(col("changed")).count()
-          (c == 0, Map("changed" -> c.toDouble))
-        })
+      Step(merged.select("id", "taint_ts", "changed"), NoRows(col("changed"), "changed"))
     }
     result.state.select("id", "taint_ts")
   }

@@ -1,10 +1,10 @@
 package graft.algos
 
 import graft.bsp.{Pin, SuperstepRunner}
-import graft.bsp.SuperstepRunner.{RunConfig, Step}
+import graft.bsp.SuperstepRunner.{Check, RunConfig, Step}
 import graft.graph.TemporalGraph
 import graft.ml.GraphLearn
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -122,7 +122,7 @@ object Reach {
             .unionByName(msgs)
             .groupBy("id")
             .agg(maxes.head, maxes.tail: _*)
-          Step(next, { m => onStep(m); (false, Map.empty) })
+          Step(next, Check { m => onStep(m); (false, Map.empty) })
       }.state
     }
   }
@@ -250,12 +250,11 @@ object Reach {
 
   /** [[estimateRaw]] over the WIDE register layout (id, r0..r15): denom
     * and v0 are the same exact integers (a zero register contributes
-    * 2^27 exactly as the sparse path's (M − np)·Scale term), and the
-    * final when/otherwise float expression is copied verbatim — so the
-    * ball_est doubles are bit-identical to the sparse path's. A pure row
-    * expression: no aggregation, no exchange. */
+    * 2^27 exactly as the sparse path's (M − np)·Scale term), and both
+    * paths read them through [[hllEstimate]] — so the ball_est doubles are
+    * bit-identical to the sparse path's. A pure row expression: no
+    * aggregation, no exchange. */
   private def estimateRawWide(wide: DataFrame): DataFrame = {
-    val c = Alpha16 * (M.toDouble * M.toDouble) * Scale.toDouble
     val denom = (0 until M)
       .map(j => pow(lit(2.0), lit(27L) - col(s"r$j")).cast("long"))
       .reduce(_ + _)
@@ -264,19 +263,21 @@ object Reach {
       .reduce(_ + _)
     wide
       .select(col("id"), denom.as("denom"), v0.as("v0"))
-      .select(
-        col("id"),
-        when(
-          lit(c) / col("denom").cast("double") <= 2.5 * M && col("v0") > 0L,
-          lit(M.toDouble) * log(lit(M.toDouble) / col("v0").cast("double")))
-          .otherwise(lit(c) / col("denom").cast("double"))
-          .as("ball_est"))
+      .select(col("id"), hllEstimate(col("denom"), col("v0")).as("ball_est"))
+  }
+
+  /** The HLL raw estimate α·m²/denom (denom = Σ2^{27−ρ_j}, hence the Scale
+    * factor), switched to linear counting m·ln(m/V₀) when raw ≤ 2.5m and
+    * V₀ > 0 zero registers remain. */
+  private def hllEstimate(denom: Column, v0: Column): Column = {
+    val raw = lit(Alpha16 * (M.toDouble * M.toDouble) * Scale.toDouble) / denom.cast("double")
+    when(raw <= 2.5 * M && v0 > 0L, lit(M.toDouble) * log(lit(M.toDouble) / v0.cast("double")))
+      .otherwise(raw)
   }
 
   /** As [[estimate]] without the final 6-dp rounding — the form downstream
     * float folds ([[harmonicCloseness]]) must consume (see [[ballSeries]]). */
-  def estimateRaw(registersDf: DataFrame): DataFrame = {
-    val c = Alpha16 * (M.toDouble * M.toDouble) * Scale.toDouble
+  def estimateRaw(registersDf: DataFrame): DataFrame =
     registersDf
       .groupBy("id")
       .agg(
@@ -286,12 +287,5 @@ object Reach {
         col("id"),
         ((lit(M.toLong) - col("np")) * Scale + col("ps")).as("denom"),
         (lit(M.toLong) - col("np")).as("v0"))
-      .select(
-        col("id"),
-        when(
-          lit(c) / col("denom").cast("double") <= 2.5 * M && col("v0") > 0L,
-          lit(M.toDouble) * log(lit(M.toDouble) / col("v0").cast("double")))
-          .otherwise(lit(c) / col("denom").cast("double"))
-          .as("ball_est"))
-  }
+      .select(col("id"), hllEstimate(col("denom"), col("v0")).as("ball_est"))
 }

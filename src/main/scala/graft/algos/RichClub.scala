@@ -52,7 +52,7 @@ object RichClub {
     }
   }
 
-  /** Tumbling fast path: the snapshots are `g.rolling(step, step, align)`
+  /** Tumbling fast path: the snapshots are `g.rolling(step, Some(step))`
     * (window == step ⇒ a disjoint partition of the timeline), so the
     * snapshot index is one floor-division column over `ts` instead of a
     * per-view union — the form a large scan wants. Equivalent to the
@@ -62,12 +62,10 @@ object RichClub {
       g: TemporalGraph,
       stepMs: Long,
       k: Long,
-      windowSize: Int,
-      alignMs: Long = 1L): Double = {
-    require(windowSize > 0 && stepMs > 0 && alignMs > 0)
+      windowSize: Int): Double = {
+    require(windowSize > 0 && stepMs > 0)
     (g.earliestTime(), g.latestTime()) match {
-      case (Some(t0), Some(t1)) =>
-        val start = math.floorDiv(t0, alignMs) * alignMs
+      case (Some(start), Some(t1)) =>
         val nSnaps = math.floorDiv(t1 - start, stepMs) + 1
         val nChunks = nSnaps / windowSize
         maxChunkDensity(g.degrees, k, nChunks, windowSize) {

@@ -1,7 +1,7 @@
 package graft.algos
 
 import graft.bsp.{Pin, SuperstepRunner}
-import graft.bsp.SuperstepRunner.{RunConfig, Step}
+import graft.bsp.SuperstepRunner.{Check, NoRows, RunConfig, Step}
 import graft.graph.TemporalGraph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -46,12 +46,6 @@ object Scc {
       maxIterPerPhase: Int = 10000,
       checkpointDir: Option[String] = None)
 
-  /** A fixpoint phase converges on the first superstep that changes no node. */
-  private val unchanged: DataFrame => (Boolean, Map[String, Double]) = m => {
-    val changes = m.filter(col("changed")).count()
-    (changes == 0, Map("changes" -> changes.toDouble))
-  }
-
   /** @return (id, label) with label = min node id of the SCC. */
   def run(spark: SparkSession, g: TemporalGraph, cfg: Config = Config()): DataFrame = Pin.scope { pins =>
     val simple = pins.persist(g.simpleEdges.filter(col("src") =!= col("dst")))
@@ -88,7 +82,7 @@ object Scc {
             col("id"),
             greatest(col("c"), coalesce(col("mc"), col("c"))).as("c"),
             (coalesce(col("mc"), col("c")) > col("c")).as("changed"))
-        Step(next.select("id", "c", "changed"), unchanged)
+        Step(next.select("id", "c", "changed"), NoRows(col("changed"), "changes"))
       }.state)
 
       // -- 2. multi-source backward reach from every root, within color --
@@ -120,7 +114,7 @@ object Scc {
               col("c"),
               (col("hit") || coalesce(col("nhit"), lit(false))).as("hit"),
               (!col("hit") && coalesce(col("nhit"), lit(false))).as("changed"))
-          Step(next.select("id", "c", "hit", "changed"), unchanged)
+          Step(next.select("id", "c", "hit", "changed"), NoRows(col("changed"), "changes"))
       }.state)
 
       // -- 3. assign every node that reaches its root --
@@ -128,7 +122,7 @@ object Scc {
         assigned
           .join(reached.filter(col("hit")).select(col("id"), col("c").as("nroot")), Seq("id"), "left")
           .select(col("id"), coalesce(col("root"), col("nroot")).as("root")),
-        _ => {
+        Check { _ =>
           // `reached` holds one row per node unassigned before the round
           val r = reached.agg(count(lit(1)), count(when(col("hit"), 1))).first()
           val (newly, remaining) = (r.getLong(1), r.getLong(0) - r.getLong(1))

@@ -1,7 +1,7 @@
 package graft.algos
 
 import graft.bsp.{Pin, SuperstepRunner}
-import graft.bsp.SuperstepRunner.{RunConfig, Step}
+import graft.bsp.SuperstepRunner.{Check, RunConfig, Step}
 import graft.graph.TemporalGraph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -58,7 +58,7 @@ object Truss {
     * `removed`, `affected`, `edges`) — the evidence that per-round cost
     * tracks the removal neighbourhood rather than |E|. Each round's
     * `removed`/`aff` frames are persisted through the run's scope: the
-    * evaluator frees them once the next state is pinned, a throw frees
+    * `Check` rule frees them once the next state is pinned, a throw frees
     * them with the scope. */
   def runWithMetrics(
       spark: SparkSession,
@@ -77,7 +77,7 @@ object Truss {
         pins.release(removed)
         Step(
           state.select("a", "b", "support"),
-          st => (true, Map("removed" -> 0.0, "affected" -> 0.0, "edges" -> st.count().toDouble)))
+          Check(st => (true, Map("removed" -> 0.0, "affected" -> 0.0, "edges" -> st.count().toDouble))))
       } else {
         val surv = state.filter(col("support") >= thresh)
         val touched = removed.select(col("a").as("node"))
@@ -102,7 +102,7 @@ object Truss {
         val next = unaffected.select("a", "b", "support").unionByName(recounted)
         Step(
           next,
-          st => {
+          Check { st =>
             pins.release(removed, aff)
             val c = st.count()
             (false, Map(

@@ -1,6 +1,6 @@
 package graft.bsp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import java.nio.charset.StandardCharsets
@@ -13,15 +13,31 @@ import scala.util.Try
  * raphtory/src/db/task/task_runner.rs:225-373): double-buffered per-node
  * state becomes "previous state DataFrame → next state DataFrame", morsel
  * fan-out becomes Spark tasks over partitions, monoidal accumulator merges
- * become partial aggregation, and `Job::Check` becomes a driver-side
- * convergence predicate over a tiny aggregate.
+ * become partial aggregation, and `Job::Check` becomes the stop rule each
+ * [[Step]] declares, which the runner evaluates over the materialized next
+ * state (the halt decision stays in the runtime, as Pregel's vote-to-halt):
+ *
+ *  - [[Never]] (the default): run to `maxSteps`; no action;
+ *  - [[NoRows]]`(active, key)`: stop once no row satisfies `active`; one
+ *    `filter(active).count()` job, the count reported under `key`;
+ *  - [[Stable]]`(key, sig)`: stop once the one-row aggregate `sig` equals
+ *    the previous superstep's, compared exactly as a `Row` (a 64-bit xor
+ *    loses its low bits as a `Double`), or, with `orZero`, once its first
+ *    column is 0; one job, the first column reported under `key`. The
+ *    first superstep a run executes (also after a resume) has no previous
+ *    value;
+ *  - [[Check]]`(f)`: the algorithm's own rule (a tolerance, several
+ *    counts, per-round frames to free) returning (converged, metrics).
  *
  * Durability mirrors the reference's WAL/LSN + snapshot story
  * (db4-storage/src/wal/mod.rs:28, serialise/graph_folder.rs): every committed
  * superstep writes its state parquet plus an atomically-renamed JSON manifest
  * carrying the run id, superstep number, row count, per-partition lineage
- * (rows + order-independent checksum) and metrics; [[resume]] restores the
- * latest committed superstep so any algorithm restarts mid-iteration.
+ * (rows + order-independent checksum), the converged flag and metrics; a
+ * run with a checkpoint directory restarts from the latest committed
+ * superstep of its run id. When that commit is marked converged, the run
+ * returns its state, with that step count and `converged = true`, without
+ * running a superstep (metrics empty).
  *
  * Plan-growth control: each superstep's state is pinned ([[Pin]]) and the
  * previous one released, so lineage and driver planning stay O(1) across
@@ -36,10 +52,26 @@ import scala.util.Try
  */
 object SuperstepRunner {
 
-  /** One superstep: the next-state plan plus a convergence evaluator that is
-    * allowed to run actions over the (already persisted) next state. The
-    * evaluator returns (converged, metrics). */
-  final case class Step(next: DataFrame, evaluate: DataFrame => (Boolean, Map[String, Double]))
+  /** One superstep: the next-state plan and its stop rule. */
+  final case class Step(next: DataFrame, until: Until = Never)
+
+  /** When a run stops; evaluated over the materialized next state. */
+  sealed trait Until
+
+  /** Run to `maxSteps`. */
+  case object Never extends Until
+
+  /** Stop once no row satisfies `active`; the count is reported as `key`. */
+  final case class NoRows(active: Column, key: String) extends Until
+
+  /** Stop once the one-row aggregate `sig` equals the previous superstep's;
+    * its first column is reported as `key`. With `orZero`, also stop when
+    * that column is 0. */
+  final case class Stable(key: String, sig: Seq[Column], orZero: Boolean = false) extends Until
+
+  /** The algorithm's own rule: actions over the next state returning
+    * (converged, metrics). */
+  final case class Check(evaluate: DataFrame => (Boolean, Map[String, Double])) extends Until
 
   final case class RunConfig(
       maxSteps: Int,
@@ -60,22 +92,21 @@ object SuperstepRunner {
   def run(spark: SparkSession, init: DataFrame, cfg: RunConfig)(
       mkStep: (DataFrame, Int) => Step): RunResult = Pin.scope { pins =>
 
-    val resumed = cfg.checkpointDir.flatMap(d => resume(spark, d, Some(cfg.runId)))
+    val resumed = cfg.checkpointDir.flatMap(d => resume(spark, d, cfg.runId))
     // Every superstep's state is pinned ([[Pin.pin]]): this both
-    // materializes it for the evaluator AND truncates the logical plan to a
+    // materializes it for the stop rule AND truncates the logical plan to a
     // LogicalRDD. Iterative plans that reference the previous state more
     // than once (message join + diff join) would otherwise *double* in size
     // per superstep — exponential analysis cost and a driver OOM by ~30
     // supersteps. The pin drops the inherited statistics; whether the next
     // superstep re-exchanges the state depends on AQE (see [[Pin.pin]]).
     // Only the returned state outlives the run, also when a step throws.
-    var (state, startStep) = resumed match {
-      case Some((df, k)) => (pins.pin(df), k)
-      case None          => (pins.pin(init), 0)
+    // A converged commit runs no further superstep.
+    var (state, step, converged) = resumed match {
+      case Some((df, k, done)) => (pins.pin(df), k, done)
+      case None                => (pins.pin(init), 0, false)
     }
-
-    var step = startStep
-    var converged = false
+    var lastSig = Option.empty[Row]
     var allMetrics = List.empty[Map[String, Double]]
 
     while (!converged && step < cfg.maxSteps) {
@@ -90,7 +121,19 @@ object SuperstepRunner {
       // freed NOW (long runs otherwise accumulate every superstep's cache
       // and stall on memory pressure)
       val next = pins.replace(state, Pin.pin(s.next))
-      val (done, metrics) = s.evaluate(next) // runs the per-step actions
+      val (done, metrics) = s.until match { // at most one action, except Check
+        case Never => (false, Map.empty[String, Double])
+        case NoRows(active, key) =>
+          val n = next.filter(active).count()
+          (n == 0, Map(key -> n.toDouble))
+        case Stable(key, sig, orZero) =>
+          val row = next.agg(sig.head, sig.tail: _*).first()
+          val v = if (row.isNullAt(0)) 0.0 else row.getAs[Number](0).doubleValue
+          val repeated = lastSig.contains(row)
+          lastSig = Some(row)
+          (repeated || orZero && v == 0.0, Map(key -> v))
+        case Check(evaluate) => evaluate(next)
+      }
       val wallMs = (System.nanoTime() - t0) / 1e6
       converged = done
       allMetrics ::= (metrics + ("wallMs" -> wallMs))
@@ -169,35 +212,29 @@ object SuperstepRunner {
     reread
   }
 
-  /** Latest committed (state, superstep), if any. When `expectRunId` is set,
-    * only manifests carrying that runId count — a stale run of a *different*
+  /** Latest committed (state, superstep, converged) of `runId`, if any. Only
+    * manifests carrying that runId count — a stale run of a *different*
     * algorithm sharing the directory must not be silently resumed with the
     * wrong schema. */
-  def resume(
-      spark: SparkSession,
-      dir: String,
-      expectRunId: Option[String] = None): Option[(DataFrame, Int)] = {
+  private def resume(spark: SparkSession, dir: String, runId: String): Option[(DataFrame, Int, Boolean)] = {
     val steps = Paths.get(dir, "steps")
     if (!Files.isDirectory(steps)) return None
     val runIdRe = "\"runId\"\\s*:\\s*\"([^\"]*)\"".r
-    def manifestMatches(k: Int): Boolean = {
-      val m = steps.resolve(s"$k/manifest.json")
-      if (!Files.exists(m)) return false
-      expectRunId.forall { want =>
-        val text = new String(Files.readAllBytes(m), StandardCharsets.UTF_8)
-        val got = runIdRe.findFirstMatchIn(text).map(_.group(1))
-        if (!got.contains(want))
-          System.err.println(
-            s"[resume] skipping $m: runId ${got.getOrElse("<none>")} != expected $want")
-        got.contains(want)
-      }
+    def manifestMatches(k: Int, text: String): Boolean = {
+      val got = runIdRe.findFirstMatchIn(text).map(_.group(1))
+      if (!got.contains(runId))
+        System.err.println(s"[resume] skipping ${steps.resolve(s"$k/manifest.json")}: " +
+          s"runId ${got.getOrElse("<none>")} != expected $runId")
+      got.contains(runId)
     }
     val committed = listDir(steps)
       .flatMap(p => Try(p.getFileName.toString.toInt).toOption)
-      .filter(manifestMatches)
-      .sorted(Ordering[Int].reverse)
-    committed.headOption.map { k =>
-      (spark.read.parquet(steps.resolve(s"$k/data").toString), k)
+      .flatMap(k => readManifest(dir, k).map(k -> _))
+      .filter { case (k, text) => manifestMatches(k, text) }
+      .sortBy(-_._1)
+    committed.headOption.map { case (k, text) =>
+      val converged = "\"converged\"\\s*:\\s*true".r.findFirstIn(text).isDefined
+      (spark.read.parquet(steps.resolve(s"$k/data").toString), k, converged)
     }
   }
 

@@ -105,35 +105,11 @@ case class TemporalGraph(
 
   // ---- window sets (reference rolling/expanding, time.rs:147-210) ----
 
-  /**
-   * Rolling window set, replicating the reference cursor exactly
-   * (time.rs:469-492): window ends e_k = alignedStart + k·step for k ≥ 1
-   * while e_k < timelineEnd + step, each view = [e_k − window, e_k);
-   * timelineEnd = latest event time + 1 (time.rs:49-56); a final window
-   * whose start is ≥ timelineEnd is dropped (over-stepping rule).
-   * `alignMs` floors the first boundary (1 = unaligned; 86400000 = day).
-   * Returns (windowStart, windowEnd, view) triples.
-   */
-  def rolling(
-      windowMs: Long,
-      stepMs: Option[Long] = None,
-      alignMs: Long = 1L): Seq[(Long, Long, TemporalGraph)] = {
-    val step = stepMs.getOrElse(windowMs)
-    (earliestTime(), latestTime()) match {
-      case (Some(t0), Some(t1)) =>
-        val start = math.floorDiv(t0, alignMs) * alignMs
-        val end = t1 + 1
-        Iterator
-          .from(1)
-          .map(k => start + k.toLong * step)
-          .takeWhile(_ < end + step)
-          .map(e => (e - windowMs, e))
-          .filter(_._1 < end)
-          .map { case (s, e) => (s, e, window(s, e)) }
-          .toSeq
-      case _ => Seq.empty
-    }
-  }
+  /** Rolling window set over millisecond steps (unaligned): [[rollingAligned]]
+    * with `TimeInterval.discrete` window and step (reference rolling,
+    * time.rs:147-210). Returns (windowStart, windowEnd, view) triples. */
+  def rolling(windowMs: Long, stepMs: Option[Long] = None): Seq[(Long, Long, TemporalGraph)] =
+    rollingAligned(TimeInterval.discrete(windowMs), stepMs.map(TimeInterval.discrete))
 
   /**
    * Calendar-aligned rolling window set (reference rolling/rolling_aligned,
@@ -181,21 +157,11 @@ case class TemporalGraph(
       case _ => Seq.empty
     }
 
-  /** Expanding window set: views (−∞, e_k) with e_k = alignedStart + k·step
+  /** Expanding window set over millisecond steps (unaligned): views
+    * (−∞, e_k), [[expandingAligned]] with a `TimeInterval.discrete` step
     * (reference time.rs:147-167). Returns (windowEnd, view) pairs. */
-  def expanding(stepMs: Long, alignMs: Long = 1L): Seq[(Long, TemporalGraph)] =
-    (earliestTime(), latestTime()) match {
-      case (Some(t0), Some(t1)) =>
-        val start = math.floorDiv(t0, alignMs) * alignMs
-        val end = t1 + 1
-        Iterator
-          .from(1)
-          .map(k => start + k.toLong * stepMs)
-          .takeWhile(_ < end + stepMs)
-          .map(e => (e, before(e)))
-          .toSeq
-      case _ => Seq.empty
-    }
+  def expanding(stepMs: Long): Seq[(Long, TemporalGraph)] =
+    expandingAligned(TimeInterval.discrete(stepMs))
 
   // ---- layer / subgraph algebra ----
 

@@ -74,14 +74,14 @@ object Bpe {
           .limit(1)
           .collect() // bounded: exactly one row per round
         if (best.isEmpty || best.head.getAs[Long]("c") < minPairCount) {
-          SuperstepRunner.Step(state, _ => (true, Map("stopped" -> 1.0)))
+          SuperstepRunner.Step(state, SuperstepRunner.Check(_ => (true, Map("stopped" -> 1.0))))
         } else {
           val (a, b, c) =
             (best.head.getAs[String]("a"), best.head.getAs[String]("b"), best.head.getAs[Long]("c"))
           merges += ((step.toLong, a, b, a + b, c))
           SuperstepRunner.Step(
             state.withColumn("syms", applyMerge(col("syms"), a, b)),
-            _ => (false, Map("pairCount" -> c.toDouble)))
+            SuperstepRunner.Check(_ => (false, Map("pairCount" -> c.toDouble))))
         }
     }
     merges.toSeq.toDF("round", "a", "b", "merged", "cnt")

@@ -157,7 +157,7 @@ class CacheHygieneSpec extends SparkSpec {
       SuperstepRunner.run(spark, spark.range(50).toDF("id"), RunConfig(maxSteps = 10)) {
         (state, step) =>
           if (step == 3) throw new IllegalStateException("step 3")
-          Step(state.select((col("id") + 1).as("id")), _ => (false, Map.empty))
+          Step(state.select((col("id") + 1).as("id")))
       }
     }
     assert(boom.getMessage == "step 3")
